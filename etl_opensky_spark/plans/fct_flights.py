@@ -1,23 +1,33 @@
 """fct_flights — fact load (reference: src/jobs/load_fct_flights.py).
 
-One day's lake partition -> rename/derive -> three broadcast dim-key
-lookups (airports twice as a role-playing dim, aircrafts once) -> EXCEPT
-against the existing warehouse partition -> append.  Left joins preserve
-fact rows with unmatched dims (null FKs allowed by the warehouse DDL).
+One day's lake directories -> rename/derive -> three broadcast dim-key
+lookups (airports twice as a role-playing dim over one shared broadcast,
+aircrafts once) -> ``new EXCEPT existing`` against the warehouse's day
+partition -> one observed append.  Left joins preserve fact rows with
+unmatched dims (null FKs allowed by the warehouse DDL).
+
+The skip rule is the ingest's (``ingest_flights.write_missing``): skipped
+if and only if the write found no missing row.  The lake is read as the
+day's directories alone with the declared schema, from either an airport
+lake or a root with one ``airport=`` level above the days; a day with no
+directory is skipped.  A missing warehouse table is an empty ``existing``:
+the append creates it.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_opensky_spark.functions.datetime import epoch_to_timestamp
-from etl_opensky_spark.operators.filters import filter_partition
 from etl_opensky_spark.operators.joins import lookup_dim
 from etl_opensky_spark.operators.projections import rename_columns, select_columns
-from etl_opensky_spark.operators.sets import append_missing
+from etl_opensky_spark.plans.ingest_flights import read_day, write_missing
+from etl_opensky_spark.schemas import FCT_FLIGHTS
+from etl_opensky_spark.sources.rest import local_frame
 
 FCT_FLIGHTS_COLUMNS = [
     "aircraft_dim_id",
@@ -56,21 +66,17 @@ def build_fct_flights(
         }
     ).drop("flight_year", "flight_month", "flight_day")
 
-    # role-playing airports dim: same dim joined under two names
-    df = lookup_dim(
-        df,
-        dim_airports,
-        fact_key="depart_airport_icao",
-        dim_key="icao_code",
-        attach={"airport_dim_id": "depart_airport_dim_id"},
-    )
-    df = lookup_dim(
-        df,
-        dim_airports,
-        fact_key="arrival_airport_icao",
-        dim_key="icao_code",
-        attach={"airport_dim_id": "arrival_airport_dim_id"},
-    )
+    # role-playing airports dim: one narrow broadcast joined under two
+    # names; the roles rename after the join, so both joins see the same
+    # plan and share one broadcast exchange
+    airports = F.broadcast(dim_airports.select("icao_code", "airport_dim_id"))
+    for role in ("depart", "arrival"):
+        df = (
+            df.withColumnRenamed(f"{role}_airport_icao", "icao_code")
+            .join(airports, "icao_code", "left")
+            .drop("icao_code")
+            .withColumnRenamed("airport_dim_id", f"{role}_airport_dim_id")
+        )
     df = lookup_dim(
         df,
         dim_aircrafts,
@@ -91,22 +97,26 @@ def load_fct_flights(
     dim_aircrafts: str = "dim_aircrafts",
 ) -> str:
     """Idempotent daily fact load (reference: src/jobs/load_fct_flights.py:102-116)."""
-    flights = filter_partition(
-        spark.read.parquet(lake_path),
-        flight_year=data_date.year,
-        flight_month=data_date.month,
-        flight_day=data_date.day,
-    )
+    flights = read_day(spark, lake_path, data_date)
+    if flights is None:
+        return "skipped"
     df = build_fct_flights(flights, spark.table(dim_airports), spark.table(dim_aircrafts))
+    # EXCEPT's DISTINCT: distinct lake rows can project to one fact row.  A
+    # day is ~10³ rows; one partition lets the dedup run without a shuffle
+    df = df.coalesce(1).dropDuplicates()
 
     date_key = data_date.year * 10000 + data_date.month * 100 + data_date.day
-    if not spark.catalog.tableExists(table):
-        df.write.mode("overwrite").partitionBy("flight_date_dim_id").saveAsTable(table)
-        return "created"
-
-    current = spark.table(table).filter(F.col("flight_date_dim_id") == date_key)
-    df_append = append_missing(df, select_columns(current, FCT_FLIGHTS_COLUMNS))
-    if df_append.isEmpty():
-        return "skipped"
-    df_append.write.mode("append").partitionBy("flight_date_dim_id").saveAsTable(table)
-    return "appended"
+    try:
+        existing = spark.table(table).filter(F.col("flight_date_dim_id") == date_key)
+    except AnalysisException as exc:
+        if exc.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+            raise
+        existing = local_frame(spark, [], FCT_FLIGHTS)
+    written = write_missing(
+        df,
+        existing,
+        lambda missing: missing.write.mode("append")
+        .partitionBy("flight_date_dim_id")
+        .saveAsTable(table),
+    )
+    return "appended" if written else "skipped"

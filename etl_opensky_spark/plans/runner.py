@@ -7,15 +7,20 @@ preserves the DAG's control semantics (SURVEY §2.14):
 - a task may return/raise SKIPPED; downstream runs anyway when its
   trigger rule is "none_failed" (reference: src/dags/flights_daily.py:113-116);
 - per-task retry budget (reference: 5 × 10 s on the flaky REST extract,
-  src/dags/flights_daily.py:57-58).
+  src/dags/flights_daily.py:57-58);
+- a task that exhausts its retries is FAILED; its last exception is kept in
+  ``Pipeline.errors`` and logged with its traceback.
 """
 
 from __future__ import annotations
 
 import enum
+import logging
 import time
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
+
+logger = logging.getLogger(__name__)
 
 
 class TaskStatus(enum.Enum):
@@ -42,6 +47,8 @@ class Task:
 @dataclass
 class Pipeline:
     tasks: list[Task] = field(default_factory=list)
+    #: the exception that failed each FAILED task of the last ``run``
+    errors: dict[str, Exception] = field(default_factory=dict)
 
     def add(self, task: Task) -> "Pipeline":
         self.tasks.append(task)
@@ -73,6 +80,7 @@ class Pipeline:
     def run(self) -> dict[str, TaskStatus]:
         """Execute all tasks respecting dependencies; returns per-task status."""
         results: dict[str, TaskStatus] = {}
+        self.errors = {}
         for task in self._topo_order():
             upstream = [results[d] for d in task.depends_on]
             any_failed = any(
@@ -91,8 +99,7 @@ class Pipeline:
             results[task.name] = self._run_one(task)
         return results
 
-    @staticmethod
-    def _run_one(task: Task) -> TaskStatus:
+    def _run_one(self, task: Task) -> TaskStatus:
         for attempt in range(task.retries + 1):
             try:
                 out = task.fn()
@@ -101,8 +108,12 @@ class Pipeline:
                 return TaskStatus.SUCCESS
             except SkipTask:
                 return TaskStatus.SKIPPED
-            except Exception:
+            except Exception as exc:
                 if attempt == task.retries:
+                    self.errors[task.name] = exc
+                    logger.exception(
+                        "task %s failed after %d attempt(s)", task.name, attempt + 1
+                    )
                     return TaskStatus.FAILED
                 if task.retry_delay_s:
                     time.sleep(task.retry_delay_s)

@@ -8,6 +8,8 @@ test-friendly builder.  Differences from the reference, on purpose:
   in the job env while claiming UTC — src/jobs/extract_flights.py:171-173);
 - AQE on (runtime re-planning, skew-join handling);
 - shuffle partitions sized to local cores, not the 200 default;
+- driver heap min(16g, ¾ of physical memory) unless ``SPARK_DRIVER_MEMORY``
+  sets it;
 - dynamic-partition-overwrite semantics set so partitioned overwrites
   replace only touched partitions (the scalable replacement for the
   reference's check-then-append idempotency).
@@ -20,6 +22,15 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+#: driver heap ceiling on hosts with memory to spare
+MAX_DRIVER_MEMORY_MB = 16 * 1024
+
+
+def default_driver_memory() -> str:
+    """min(16g, ¾ of physical memory): a heap larger than the host lets the
+    JVM grow until the machine swaps or kills it."""
+    physical_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(MAX_DRIVER_MEMORY_MB, physical_mb * 3 // 4)}m"
 
 
 def default_master() -> str:
@@ -69,7 +80,10 @@ def get_spark(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         # ContextCleaner reaps dead shuffle/broadcast/RDD state only
         # when a driver GC enqueues the weak references; its fallback
         # periodic System.gc() defaults to every 30 MINUTES, so a

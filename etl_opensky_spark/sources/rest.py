@@ -11,7 +11,11 @@ so tests run hermetically and production can plug ``requests``.  Two
 execution shapes:
 
 - ``fetch_batch``: driver-side fetch of ONE airport-day (the reference's
-  shape — fine, the payload is 10²-10³ rows).
+  shape — fine, the payload is 10²-10³ rows).  The rows reach the JVM once,
+  as an Arrow table carrying the declared schema, and the frame is a
+  ``LocalTableScan``: collecting it or a projection of it runs no Spark
+  job and starts no Python worker (a frame over a Python list would be a
+  Python RDD, re-parallelized by every action).
 - ``distributed_frame``: many (airport, day) param combos fanned out
   executor-side via ``mapInPandas`` — the 100 TB shape: the param table is
   a DataFrame, each partition fetches its own slice, no driver bottleneck.
@@ -24,14 +28,30 @@ from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass, field
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 Fetch = Callable[[str, dict], list[dict]]
 
 
 class ResponseValidationError(RuntimeError):
     pass
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: T.StructType
+) -> DataFrame:
+    """Frame over rows the driver holds (tuples in ``schema`` order), built
+    as a JVM local relation from one Arrow table."""
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def validate_flight_rows(rows: object) -> list[dict]:
@@ -71,7 +91,7 @@ class RestSource:
         rows = self._fetch_validated(endpoint, params)
         names = [f.name for f in self.schema.fields]
         projected = [tuple(r.get(n) for n in names) for r in rows]
-        return spark.createDataFrame(projected, self.schema)
+        return local_frame(spark, projected, self.schema)
 
     def distributed_frame(
         self, params_df: DataFrame, endpoint: str, param_cols: Sequence[str]

@@ -4,15 +4,21 @@ including the golden idempotency invariant (run twice ≡ run once)."""
 from __future__ import annotations
 
 import datetime as dt
+import uuid
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
 
+from etl_opensky_spark import schemas
 from etl_opensky_spark.operators.joins import check_fk
 from etl_opensky_spark.plans.dim_aircrafts import build_dim_aircrafts
 from etl_opensky_spark.plans.dim_airports import build_dim_airports, frames_differ
 from etl_opensky_spark.plans.dim_dates import build_dim_dates
-from etl_opensky_spark.plans.fct_flights import build_fct_flights
+from etl_opensky_spark.plans.fct_flights import build_fct_flights, load_fct_flights
+from etl_opensky_spark.plans.ingest_flights import ingest_flights
+from etl_opensky_spark.plans.runner import Pipeline, Task, TaskStatus
+from etl_opensky_spark.sources.rest import RestSource
 from tests import fixtures
 from tests.conftest import rows
 
@@ -152,3 +158,125 @@ def test_fct_idempotent_append(spark):
     from etl_opensky_spark.operators.sets import append_missing
 
     assert append_missing(fct, fct).count() == 0
+
+
+# --- the daily plans' one skip rule: skipped iff new EXCEPT existing is empty --
+
+DAY = dt.date(2018, 1, 1)
+BASE = 1514764800  # 2018-01-01T00:00:00Z
+
+
+def _flight(icao24: str, offset_s: int, callsign: str = "DLH1") -> dict:
+    return {
+        "icao24": icao24, "firstSeen": BASE + offset_s,
+        "lastSeen": BASE + offset_s + 3600, "estDepartureAirport": "EDDF",
+        "estArrivalAirport": "EGLL", "callsign": callsign,
+    }
+
+
+def _source(payload: dict[str, list[dict]]) -> RestSource:
+    """API double serving ``payload[kind]``; edit ``payload`` to re-fetch."""
+    return RestSource(
+        fetch=lambda endpoint, params: payload[endpoint.rsplit("/", 1)[1]],
+        schema=schemas.SRC_FLIGHTS,
+    )
+
+
+def _run(name, fn) -> TaskStatus:
+    return Pipeline().add(Task(name, fn)).run()[name]
+
+
+@pytest.fixture(scope="module")
+def fct_dims(spark):
+    """Dims under names of their own, so the fact loads here share no table
+    with other tests."""
+    build_dim_airports(fixtures.src_airports(spark)).write.mode(
+        "overwrite"
+    ).saveAsTable("plans_dim_airports")
+    build_dim_aircrafts(
+        fixtures.src_aircrafts(spark),
+        fixtures.src_manufacturers(spark),
+        fixtures.src_aircraft_types(spark),
+        fixtures.src_airlines(spark),
+    ).write.mode("overwrite").saveAsTable("plans_dim_aircrafts")
+    return {"dim_airports": "plans_dim_airports", "dim_aircrafts": "plans_dim_aircrafts"}
+
+
+def test_refetched_day_with_changed_rows_lands_them(spark, tmp_path):
+    lake = str(tmp_path / "lake")
+    payload = {
+        "departure": [_flight("abc001", 3600), _flight("abc002", 7200)],
+        "arrival": [_flight("abc003", 9000)],
+    }
+    ingest = partial(ingest_flights, spark, _source(payload), "EDDF", DAY, lake)
+    assert _run("ingest", ingest) is TaskStatus.SUCCESS
+    # a corrected re-fetch: one row changed, the day's row count did not
+    payload["departure"][0] = _flight("abc001", 3600, callsign="DLH9")
+    assert _run("ingest", ingest) is TaskStatus.SUCCESS
+    got = rows(spark.read.parquet(lake).select("icao24", "callsign"))
+    assert got == [
+        ("abc001", "DLH1"), ("abc001", "DLH9"), ("abc002", "DLH1"), ("abc003", "DLH1"),
+    ]
+    assert _run("ingest", ingest) is TaskStatus.SKIPPED
+
+
+def test_duplicate_payload_rows_land_once(spark, tmp_path):
+    lake = str(tmp_path / "lake")
+    dep, arr = _flight("abc001", 3600), _flight("abc003", 9000, callsign=None)
+    payload = {"departure": [dep, dep, _flight("abc002", 7200)], "arrival": [arr, arr]}
+    ingest = partial(ingest_flights, spark, _source(payload), "EDDF", DAY, lake)
+    assert _run("ingest", ingest) is TaskStatus.SUCCESS
+    # each distinct row once, NULL callsigns included (NULL = NULL, as in EXCEPT)
+    got = rows(spark.read.parquet(lake).select("icao24", "callsign"))
+    assert got == [("abc001", "DLH1"), ("abc002", "DLH1"), ("abc003", None)]
+    assert _run("ingest", ingest) is TaskStatus.SKIPPED
+
+
+def test_fact_load_without_lake_day_skips(spark, tmp_path, fct_dims):
+    lake = str(tmp_path / "lake")
+    payload = {"departure": [_flight("abc001", 3600)], "arrival": [_flight("abc003", 9000)]}
+    ingest = partial(ingest_flights, spark, _source(payload), "EDDF", DAY, lake)
+    assert _run("ingest", ingest) is TaskStatus.SUCCESS
+    next_day = DAY + dt.timedelta(days=1)
+    for path, day in ((lake, next_day), (str(tmp_path / "absent"), DAY)):
+        load = partial(load_fct_flights, spark, day, path, table="plans_fct_no_day", **fct_dims)
+        assert _run("fct", load) is TaskStatus.SKIPPED
+    assert not spark.catalog.tableExists("plans_fct_no_day")
+
+
+def _jobs_of(spark, fn) -> tuple[object, int]:
+    """(result, Spark jobs ``fn`` ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"plans-job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_daily_plans_job_budget(spark, tmp_path, fct_dims):
+    """A day load is ~10³ rows: its cost is the number of Spark jobs.  The
+    counts are deterministic, so a plan that grows a job fails here."""
+    root = str(tmp_path / "lake")
+    spark.sql("DROP TABLE IF EXISTS plans_fct_budget")
+    # a first write, then a new day in an existing lake; the fact load reads
+    # the root, one airport= level above the days
+    for k in range(2):
+        day, shift = DAY + dt.timedelta(days=k), 86400 * k
+        source = _source({
+            "departure": [_flight(f"abc{i:03d}", shift + 60 * i) for i in range(1, 40)],
+            "arrival": [_flight(f"abd{i:03d}", shift + 60 * i + 30) for i in range(1, 40)],
+        })
+        ingest = partial(ingest_flights, spark, source, "EDDF", day, f"{root}/airport=EDDF")
+        for want, budget in (("appended", 3), ("skipped", 2)):
+            status, jobs = _jobs_of(spark, ingest)
+            assert status == want and jobs <= budget, (day, status, jobs)
+        load = partial(load_fct_flights, spark, day, root, table="plans_fct_budget", **fct_dims)
+        for want in ("appended", "skipped"):
+            status, jobs = _jobs_of(spark, load)
+            assert status == want and jobs <= 4, (day, status, jobs)
+    assert spark.table("plans_fct_budget").count() == 2 * 2 * 39

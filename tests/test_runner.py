@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 
 from etl_opensky_spark.plans.runner import Pipeline, SkipTask, Task, TaskStatus
@@ -55,6 +57,28 @@ def test_retries():
     p = Pipeline().add(Task("x", flaky, retries=5))
     assert p.run()["x"] is TaskStatus.SUCCESS
     assert attempts["n"] == 3
+
+
+def test_failed_task_keeps_its_exception(caplog):
+    boom = ValueError("bad payload")
+    attempts = {"n": 0}
+
+    def fail():
+        attempts["n"] += 1
+        raise boom
+
+    p = Pipeline().add(Task("x", fail, retries=1)).add(Task("ok", lambda: "ok"))
+    with caplog.at_level(logging.ERROR, logger="etl_opensky_spark.plans.runner"):
+        results = p.run()
+    assert results == {"x": TaskStatus.FAILED, "ok": TaskStatus.SUCCESS}
+    assert p.errors == {"x": boom} and attempts["n"] == 2
+    # logged once, on the final failure, with the traceback
+    [record] = caplog.records
+    assert "task x failed after 2 attempt(s)" in record.getMessage()
+    assert record.exc_info[1] is boom
+    # a later run reports only its own failures
+    p.tasks[0].fn = lambda: "ok"
+    assert p.run()["x"] is TaskStatus.SUCCESS and p.errors == {}
 
 
 def test_cycle_detected():
