@@ -2,7 +2,10 @@
 
 Replaces the reference's ``get_default_SparkConf`` cluster factory
 (reference: src/config/config_services.py:32-53) with a local-mode,
-test-friendly builder.  Differences from the reference, on purpose:
+test-friendly builder.  An already active session is returned as it is:
+the defaults below apply only when :func:`get_spark` builds the session,
+so a library call never rewrites the confs its owner set.  Differences
+from the reference, on purpose:
 
 - session timezone pinned to UTC (the reference sets ``TZ=Europe/London``
   in the job env while claiming UTC — src/jobs/extract_flights.py:171-173);
@@ -48,6 +51,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
+    An active session is returned unchanged: the engine defaults and
+    every argument apply only when this call builds the session.  (A
+    builder's ``getOrCreate`` would instead apply its options to the
+    live session, resetting e.g. ``spark.sql.shuffle.partitions`` or the
+    session time zone that its owner set.)
+
     The confs mirror what we would set on a 1000-executor cluster; only
     master/memory are local-mode specific.
 
@@ -57,6 +66,9 @@ def get_spark(
     deployment.  The catalog implementation is fixed at the FIRST session
     in a JVM, so tests exercise this in a subprocess.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     builder = (
         SparkSession.builder.master(master or default_master())
         .appName(app_name)

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import functions as F
 
 from etl_opensky_spark.sources.versioned import (
+    _current,
     _live_files,
     _optimized_write,
     merge_versioned,
@@ -50,7 +51,9 @@ def test_small_unpartitioned_merge_stages_one_file(spark, tmp_path):
     )
     merge_versioned(spark, base, upd, ["k"])
     per_dir = dict(_data_files(base))
-    merged_dir = [d for d, _n in _data_files(base)][-1]
+    # data dirs are named by a random uuid: the merged one is the
+    # commit log's current entry, not the lexicographically last
+    merged_dir = _current(base)["dir"]
     assert per_dir[merged_dir] == 1, per_dir
     got = read_version(spark, base)
     assert got.count() == 10_000

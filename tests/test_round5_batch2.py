@@ -455,7 +455,7 @@ def test_compact_zorder_rejects_partitioned_and_bad_arity(spark, tmp_path):
         compact_versioned(spark, base2, zorder_by=("x",))
 
 
-def test_merge_refreshes_stats_for_skipping(spark, tmp_path):
+def test_merge_refreshes_stats_for_skipping(spark, tmp_path, monkeypatch):
     from etl_opensky_spark.sources.versioned import (
         merge_versioned,
         prune_files,
@@ -471,7 +471,14 @@ def test_merge_refreshes_stats_for_skipping(spark, tmp_path):
     upd = spark.range(2000, 2100).select(
         F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
     )
+    # the pruning check needs a multi-file snapshot; _optimized_write
+    # would (by design) coalesce this small merge into one file, leaving
+    # nothing to prune, so disable it for the merge call only — the
+    # behavior under test (the merge re-harvests per-file stats) is
+    # unchanged, and a stats-less file is always kept (kept == total)
+    monkeypatch.setenv("SPARK_GRAFT_OPTIMIZE_WRITE", "0")
     v = merge_versioned(spark, base, upd, ["k"], stats_cols=["k"])
+    monkeypatch.delenv("SPARK_GRAFT_OPTIMIZE_WRITE")
     assert v == 2
     kept, total = prune_files(base, {"k": (2000, 2100)})
     assert 0 < len(kept) < total
