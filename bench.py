@@ -82,7 +82,6 @@ MAIN_QUERIES = [
     "q59_strip_common_lines",
     "q60_stream_running_totals",
     "q61_pii_redaction",
-    "q62_media_pipeline",
     "q63_minhash_lsh",
     "q64_window_suite",
     "q65_time_rollup",
@@ -100,7 +99,6 @@ MAIN_QUERIES = [
     "q77_corpus_mixing",
     "q78_hll_accuracy",
     "q79_quantile_sketch_accuracy",
-    "q80_media_features",
     "q81_sketches",
     "q82_order_priority_check",
     "q83_near_dedup",
@@ -307,13 +305,10 @@ MAIN_QUERIES = [
     "q284_sql_programmability",
     "q285_pq_ann",
     "q286_mmr_rerank",
-    "q287_webdataset_roundtrip",
     "q288_identity_columns",
     "q289_streamable_feed",
     "q290_stream_merge_lake",
-    "q291_png_decode",
     "q292_stream_cdc_replica",
-    "q293_python_datasource",
     "q294_lakefeed_replication",
     "q295_lake_datasource_pushdown",
     "q296_incremental_optimize",
@@ -332,8 +327,6 @@ MAIN_QUERIES = [
     "q309_feed_retention",
     "q310_subset_append",
     "q311_drop_column",
-    "q312_wav_decode",
-    "q313_avi_decode",
     "q314_widen_column",
     "q315_partitioned_copy_into",
     "q316_partition_evolution",

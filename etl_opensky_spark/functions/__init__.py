@@ -1,59 +1,1 @@
 """Scalar/column function library (SURVEY §2.11) + training-data ops."""
-
-from etl_opensky_spark.functions.datetime import (  # noqa: F401
-    calendar_attrs,
-    epoch_to_timestamp,
-    ymd_columns,
-)
-from etl_opensky_spark.functions.lm import bigram_nll_scores  # noqa: F401
-from etl_opensky_spark.functions.retrieval import (  # noqa: F401
-    rank_topn,
-    rrf_fuse,
-)
-from etl_opensky_spark.functions.similarity import (  # noqa: F401
-    quantize_int8,
-    quantized_topk,
-)
-from etl_opensky_spark.functions.text import (  # noqa: F401
-    bpe_pair_counts,
-    tfidf_top_terms,
-)
-from etl_opensky_spark.functions.wordpiece import (  # noqa: F401
-    build_vocab,
-    wordpiece_pieces,
-)
-from etl_opensky_spark.functions.dedup import (  # noqa: F401
-    prefix_jaccard_pairs,
-)
-from etl_opensky_spark.functions.graph import triangle_count  # noqa: F401
-from etl_opensky_spark.functions.text import (  # noqa: F401
-    hashed_feature_weight,
-    hashed_linear_score,
-)
-from etl_opensky_spark.functions.drift import ks_statistic, psi  # noqa: F401
-from etl_opensky_spark.functions.lm import pmi_collocations  # noqa: F401
-from etl_opensky_spark.functions.linalg import (  # noqa: F401
-    gram_upper_triangle,
-    moment_sums,
-    quantize_micros,
-)
-from etl_opensky_spark.functions.heavyhitters import countmin_estimates  # noqa: F401
-from etl_opensky_spark.functions.cardinality import (  # noqa: F401
-    hll_estimate,
-    hll_registers,
-)
-from etl_opensky_spark.functions.sampling import negative_samples  # noqa: F401
-from etl_opensky_spark.functions.graph import label_spread  # noqa: F401
-from etl_opensky_spark.functions.cardinality import hll_registers_by  # noqa: F401
-from etl_opensky_spark.functions.linalg import correlation_matrix  # noqa: F401
-from etl_opensky_spark.functions.evaluation import exact_auc, ndcg_at_k  # noqa: F401
-from etl_opensky_spark.functions.itemsets import frequent_pairs  # noqa: F401
-from etl_opensky_spark.functions.heavyhitters import (  # noqa: F401
-    countmin_join_estimate,
-)
-from etl_opensky_spark.functions.text import (  # noqa: F401
-    remove_boilerplate_chunks,
-)
-from etl_opensky_spark.functions.wordpiece import (  # noqa: F401
-    bpe_apply_merges,
-)

@@ -1,68 +1,1 @@
 """Composable DataFrame -> DataFrame operators (SURVEY.md §2 inventory)."""
-
-from etl_opensky_spark.operators.projections import (  # noqa: F401
-    drop_columns,
-    rename_columns,
-    select_columns,
-    with_columns,
-)
-from etl_opensky_spark.operators.filters import (  # noqa: F401
-    dropna_all,
-    filter_partition,
-    nullify_values,
-    where_expr,
-)
-from etl_opensky_spark.operators.joins import (  # noqa: F401
-    check_fk,
-    fk_orphans,
-    lookup_dim,
-)
-from etl_opensky_spark.operators.sets import (  # noqa: F401
-    append_missing,
-    union_by_name,
-)
-from etl_opensky_spark.operators.keys import (  # noqa: F401
-    date_dim_id,
-    surrogate_key,
-)
-from etl_opensky_spark.operators.reshape import (  # noqa: F401
-    date_spine,
-    melt,
-)
-from etl_opensky_spark.operators.aggregates import top_k_per_group  # noqa: F401
-from etl_opensky_spark.operators.asof import asof_join  # noqa: F401
-from etl_opensky_spark.operators.joins import salted_join  # noqa: F401
-from etl_opensky_spark.operators.aggregates import (  # noqa: F401
-    equal_frequency_bins,
-    multi_count_distinct,
-)
-from etl_opensky_spark.operators.cdc import apply_changelog  # noqa: F401
-from etl_opensky_spark.operators.quality import (  # noqa: F401
-    tag_rules,
-    validate_rules,
-)
-from etl_opensky_spark.operators.scd import asof_lookup, scd2_merge  # noqa: F401
-from etl_opensky_spark.operators.cdc import snapshot_diff  # noqa: F401
-from etl_opensky_spark.operators.reshape import fill_time_gaps  # noqa: F401
-from etl_opensky_spark.operators.aggregates import (  # noqa: F401
-    mad_outliers,
-    skyline_2d,
-)
-from etl_opensky_spark.operators.behavior import (  # noqa: F401
-    last_touch_attribution,
-)
-from etl_opensky_spark.operators.quality import key_skew_report  # noqa: F401
-from etl_opensky_spark.operators.quality import constraint_audit  # noqa: F401
-from etl_opensky_spark.operators.layout import (  # noqa: F401
-    file_envelope_report,
-    zorder_value,
-    zorder_write,
-)
-from etl_opensky_spark.operators.reshape import ewma_pow2  # noqa: F401
-from etl_opensky_spark.operators.aggregates import apply_agg_delta  # noqa: F401
-from etl_opensky_spark.operators.joins import partial_salted_join  # noqa: F401
-from etl_opensky_spark.operators.geo import grid_nearest_neighbor  # noqa: F401
-from etl_opensky_spark.operators.intervals import (  # noqa: F401
-    interval_concurrency,
-)
-from etl_opensky_spark.operators.quality import pseudonymize  # noqa: F401

@@ -4,23 +4,26 @@
 Fetch departures + arrivals for one airport-day, derive y/m/d partition
 columns from the event time (firstSeen for departures, lastSeen for
 arrivals), then append idempotently: only rows not already present in the
-day's partition are written.
+partitions they go to are written.
 
 One rule decides "nothing to append" here and in ``fct_flights``: skip if
 and only if ``new EXCEPT existing`` is empty.  The payload is deduplicated
 on the driver (tuple equality treats NULL = NULL, as EXCEPT's DISTINCT
-does) and becomes one local relation; ``existing`` is the day's partition
-directory alone, read with the declared schema (absent directory = empty
-``existing``, so a first write takes the same path).  One write of the
-missing rows, with an ``Observation`` counting them, both appends and
-decides: 0 rows written means skipped.
+does) and becomes one local relation; ``existing`` is every partition
+directory the payload writes into, read with the declared schema.  A row
+lands in the partition of its own event time, which can lie outside the
+requested day, and a NULL event time lands in Hive's default partition;
+both are compared there.  Absent directories = empty ``existing``, so a
+first write takes the same path.  One write of the missing rows, with an
+``Observation`` counting them, both appends and decides: 0 rows written
+means skipped.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import logging
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +36,12 @@ logger = logging.getLogger(__name__)
 
 #: event-time column per flight kind (reference: src/jobs/extract_flights.py:45-46)
 EVENT_TIME = {"departure": "firstSeen", "arrival": "lastSeen"}
+
+#: the lake's partition levels, outermost first
+PARTITION_COLS = ("flight_year", "flight_month", "flight_day")
+
+#: directory value Spark writes for a NULL partition value
+HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -49,23 +58,40 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hadoop_path))
 
 
-def read_day(spark: SparkSession, lake_path: str, day: dt.date) -> DataFrame | None:
-    """One day of a flights lake with the declared schema, or ``None`` when
-    the lake holds no directory for that day.
+def read_partitions(
+    spark: SparkSession, lake_path: str, partitions: Iterable[tuple]
+) -> DataFrame | None:
+    """The given ``(flight_year, flight_month, flight_day)`` partitions of a
+    flights lake with the declared schema, or ``None`` when the lake holds
+    no directory for any of them.  A NULL value stands for Hive's default
+    partition.
 
-    The day's directories are the ``flight_year=/flight_month=/flight_day=``
+    A partition's directories are the ``flight_year=/flight_month=/flight_day=``
     directory right under ``lake_path``, or one per value of a single
     partition level above it (``airport=<icao>/flight_year=...``, which
     comes back as an extra column).  One Hadoop glob finds them, on every
     filesystem ``path_exists`` works on; nothing else is listed or inferred.
     """
-    day_part = f"flight_year={day.year}/flight_month={day.month}/flight_day={day.day}"
-    root = lake_path.rstrip("/")
-    fs, pattern = _hadoop_fs(spark, f"{root}/{{{day_part},*=*/{day_part}}}")
+    parts = [
+        "/".join(
+            f"{col}={HIVE_DEFAULT_PARTITION if value is None else value}"
+            for col, value in zip(PARTITION_COLS, partition)
+        )
+        for partition in partitions
+    ]
+    if not parts:
+        return None
+    alternatives = ",".join(parts + [f"*=*/{part}" for part in parts])
+    fs, pattern = _hadoop_fs(spark, f"{lake_path.rstrip('/')}/{{{alternatives}}}")
     dirs = [status.getPath().toString() for status in fs.globStatus(pattern) or []]
     if not dirs:
         return None
     return spark.read.schema(SRC_FLIGHTS).option("basePath", lake_path).parquet(*dirs)
+
+
+def read_day(spark: SparkSession, lake_path: str, day: dt.date) -> DataFrame | None:
+    """One day of a flights lake (``read_partitions`` of that day)."""
+    return read_partitions(spark, lake_path, [(day.year, day.month, day.day)])
 
 
 def write_missing(
@@ -95,9 +121,7 @@ def with_partition_columns(df: DataFrame, event_col: str) -> DataFrame:
     """Derive flight_year/month/day from the event-time epoch column
     (reference: src/jobs/extract_flights.py:52-63)."""
     ts = epoch_to_timestamp(F.col(event_col))
-    return df.withColumns(
-        {name: expr for name, expr in ymd_columns(ts).items()}
-    )
+    return df.withColumns(ymd_columns(ts))
 
 
 def extract_day(
@@ -106,9 +130,10 @@ def extract_day(
     airport_icao: str,
     begin_ts: int,
     end_ts: int,
-) -> DataFrame:
+) -> tuple[DataFrame, set[tuple]]:
     """Fetch departures and arrivals for one airport-day: their distinct
-    rows, bound to ``SRC_FLIGHTS``, as one local relation."""
+    rows, bound to ``SRC_FLIGHTS``, as one local relation, and the
+    ``PARTITION_COLS`` tuples of those rows (the partitions they go to)."""
     names = SRC_FLIGHTS.fieldNames()
     rows: dict[tuple, None] = {}
     for kind in ("departure", "arrival"):
@@ -132,7 +157,9 @@ def extract_day(
         # bind to the registry schema's column order; its Arrow types reject
         # a value of the wrong type
         rows.update(dict.fromkeys(tuple(r[n] for n in names) for r in typed))
-    return local_frame(spark, list(rows), SRC_FLIGHTS)
+    at = [names.index(c) for c in PARTITION_COLS]
+    partitions = {tuple(row[i] for i in at) for row in rows}
+    return local_frame(spark, list(rows), SRC_FLIGHTS), partitions
 
 
 def ingest_flights(
@@ -148,8 +175,8 @@ def ingest_flights(
         dt.datetime.combine(data_date, dt.time(), tzinfo=dt.timezone.utc).timestamp()
     )
     end_ts = begin_ts + 86400
-    extracted = extract_day(spark, source, airport_icao, begin_ts, end_ts)
-    existing = read_day(spark, lake_path, data_date)
+    extracted, partitions = extract_day(spark, source, airport_icao, begin_ts, end_ts)
+    existing = read_partitions(spark, lake_path, partitions)
     if existing is None:
         existing = local_frame(spark, [], SRC_FLIGHTS)
     written = write_missing(

@@ -1,17 +1,1 @@
 """Source readers and sinks (SURVEY §2.1 scans, §2.2 sinks)."""
-
-from etl_opensky_spark.sources.files import (  # noqa: F401
-    read_csv,
-    read_json_envelope,
-    read_parquet,
-)
-from etl_opensky_spark.sources.sinks import (  # noqa: F401
-    write_parquet_partitioned,
-    write_table,
-)
-from etl_opensky_spark.sources.rest import RestSource  # noqa: F401
-from etl_opensky_spark.sources.files import read_xml, write_xml  # noqa: F401
-from etl_opensky_spark.sources.sinks import (  # noqa: F401
-    write_hash_shards,
-    write_parquet_observed,
-)

@@ -69,14 +69,12 @@ def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
 def scan_binary_files(
     spark: SparkSession, path: str, glob: str | None = None
 ) -> DataFrame:
-    """Raw-binary ingestion for multimodal corpora: Spark's built-in
+    """Raw-binary ingestion: Spark's built-in
     ``binaryFile`` source reads each file as one row of
     ``(path, modificationTime, length, content: binary)``.
 
-    This is the on-ramp for image/audio/video blobs into the multimodal
-    pipeline (``functions/multimodal.py``): files land as opaque binary +
-    typed metadata, feature extraction happens downstream in fused Arrow
-    batches.  Scale notes:
+    Files land as opaque binary + typed metadata; any decoding happens
+    downstream.  Scale notes:
 
     - the listing is distributed (driver lists, executors read), and each
       file is read exactly once by one task — no driver-side ``open()``

@@ -1,4 +1,4 @@
-"""Unit tests for text analysis, dedup, similarity, and multimodal ops."""
+"""Unit tests for text analysis, dedup, similarity and sampling ops."""
 
 from __future__ import annotations
 
@@ -17,11 +17,6 @@ from etl_opensky_spark.functions.dedup import (
     minhash_signature,
     ngram_jaccard_pairs,
     simhash,
-)
-from etl_opensky_spark.functions.multimodal import (
-    FEATURE_DIM,
-    documents_as_media,
-    extract_features,
 )
 from etl_opensky_spark.functions.similarity import (
     cosine,
@@ -260,87 +255,6 @@ def test_lsh_topk_tables_recall_dominates_single(spark, vectors):
     assert single <= multi  # union of partitions only adds candidates
     exact = {r["vec_id"] for r in cosine_topk(emb, q, k=10).collect()}
     assert multi <= exact
-
-
-# --- multimodal --------------------------------------------------------------
-
-
-def test_extract_features_contract(spark, docs):
-    media = documents_as_media(docs.withColumnRenamed("doc_id", "doc_id"))
-    out = extract_features(media)
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert set(out.columns) == {
-        "media_id", "media_type", "byte_size", "content_sha256", "feature"
-    }
-    r1 = rows[1]
-    text1 = "the quick brown fox jumps over the lazy dog"
-    assert r1["byte_size"] == len(text1.encode())
-    assert r1["content_sha256"] == hashlib.sha256(text1.encode()).hexdigest()
-    assert len(r1["feature"]) == FEATURE_DIM
-    assert math.isclose(sum(r1["feature"]), 1.0, rel_tol=1e-5)
-    # deterministic fake decode: identical payloads -> identical features
-    assert rows[1]["feature"] == rows[4]["feature"]
-
-
-def _constant_decoder(payload):
-    return [float(len(payload or b""))] * FEATURE_DIM
-
-
-def test_decoder_registry_injection(spark, docs):
-    """The registry is the official decoder seam: a custom decoder flows
-    through extract_features without touching the Arrow plumbing."""
-    from etl_opensky_spark.functions.multimodal import (
-        DEFAULT_REGISTRY,
-        DecoderRegistry,
-        extract_features,
-        with_available_codecs,
-    )
-
-    reg = DecoderRegistry().register("image", _constant_decoder)
-    media = documents_as_media(docs)
-    rows = {r["media_id"]: r for r in extract_features(media, registry=reg).collect()}
-    text1 = "the quick brown fox jumps over the lazy dog"
-    assert rows[1]["feature"] == [float(len(text1.encode()))] * FEATURE_DIM
-    # unknown media type -> KeyError naming the type, at execution
-    import pytest
-
-    empty = DecoderRegistry()
-    with pytest.raises(Exception, match="no decoder registered"):
-        extract_features(media, registry=empty).collect()
-    # default registry keeps the historical FAKE_DECODERS-backed behavior
-    assert DEFAULT_REGISTRY.media_types() == ["audio", "image", "video"]
-    # the upgraded copy swaps in the stdlib PNG decoder for images
-    # (same media types), and mutating it never touches the default
-    up = with_available_codecs()
-    assert up.media_types() == DEFAULT_REGISTRY.media_types()
-    up.register("image", _constant_decoder)
-    got = extract_features(media).collect()  # default path still fakes
-    assert sum(got[0]["feature"]) > 0
-
-
-def test_real_image_codec_roundtrip(spark):
-    """Runs only where Pillow exists (skipped in this container): a real
-    PNG decodes through the SAME Arrow plumbing via the registry."""
-    import pytest
-
-    pytest.importorskip("PIL")
-    import io
-
-    from PIL import Image
-
-    from etl_opensky_spark.functions.multimodal import (
-        extract_features,
-        with_available_codecs,
-    )
-
-    buf = io.BytesIO()
-    Image.new("L", (16, 16), color=128).save(buf, format="PNG")
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(buf.getvalue()))],
-        "media_id long, media_type string, payload binary",
-    )
-    row = extract_features(media, registry=with_available_codecs()).collect()[0]
-    assert all(abs(v - 128 / 255) < 1e-6 for v in row["feature"])
 
 
 def test_bpe_ish_token_count(spark):
@@ -845,33 +759,6 @@ def test_redact_pii(spark):
     assert got[2] == "server [REDACTED] and backup [REDACTED]"
     assert got[3] == "no pii here at all"
     assert got[4] == "dotted phone [REDACTED] stays a phone"
-
-
-def test_resize_and_sample_frames(spark):
-    from etl_opensky_spark.functions.multimodal import (
-        documents_as_media,
-        resize_media,
-        sample_frames,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "abcdefgh"), (2, "xy"), (3, "")], "doc_id long, text string"
-    )
-    media = documents_as_media(df)
-    resized = resize_media(media, target_bytes=4)
-    sizes = {
-        r["media_id"]: len(r["payload"])
-        for r in resized.collect()
-    }
-    assert sizes == {1: 4, 2: 2, 3: 0}  # crop to at most 4 bytes
-    frames = sample_frames(resized, num_frames=2).collect()
-    got = {(r["media_id"], r["frame_idx"]): bytes(r["frame"]) for r in frames}
-    # doc 1: 'abcd' -> stride 2 -> frames 'ab', 'cd'; doc 2: 'xy' ->
-    # stride 1 -> 'x', 'y'; doc 3: empty -> no rows
-    assert got == {
-        (1, 0): b"ab", (1, 1): b"cd",
-        (2, 0): b"x", (2, 1): b"y",
-    }
 
 
 def test_weighted_sample_deterministic_and_weight_sensitive(spark):

@@ -7,25 +7,22 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from etl_opensky_spark.operators import (
-    append_missing,
-    check_fk,
-    date_dim_id,
-    date_spine,
+from etl_opensky_spark.operators.aggregates import top_k_per_group
+from etl_opensky_spark.operators.filters import filter_partition, nullify_values
+from etl_opensky_spark.operators.joins import check_fk, fk_orphans, lookup_dim
+from etl_opensky_spark.operators.keys import date_dim_id, surrogate_key
+from etl_opensky_spark.operators.projections import (
     drop_columns,
-    filter_partition,
-    fk_orphans,
-    lookup_dim,
-    melt,
-    nullify_values,
     rename_columns,
     select_columns,
-    surrogate_key,
-    top_k_per_group,
-    union_by_name,
     with_columns,
 )
-from etl_opensky_spark.operators.sets import append_missing_by_key
+from etl_opensky_spark.operators.reshape import date_spine, melt
+from etl_opensky_spark.operators.sets import (
+    append_missing,
+    append_missing_by_key,
+    union_by_name,
+)
 from tests.conftest import rows
 
 

@@ -262,15 +262,6 @@ def test_normalize_features_unhinted_stats_joins_broadcast_via_aqe(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_q62_media_pipeline_single_fused_python_stage(spark):
-    """resize + frame-sample are fused into ONE mapInPandas — a single
-    Python-worker stage, payload bytes cross the Arrow boundary once."""
-    from etl_opensky_spark.queries import QUERIES
-
-    plan = physical_plan(QUERIES["q62_media_pipeline"](spark, "/root/testdata/sf0.001"))
-    assert plan.count("MapInPandas") == 1
-
-
 def test_scalar_broadcast_queries_use_broadcast_not_sort(spark):
     """q125/q126/q127's 1-row scalar sides must broadcast (BNLJ or BHJ on
     a 1-row build is the deliberate constant-side pattern), never a

@@ -232,6 +232,21 @@ def test_duplicate_payload_rows_land_once(spark, tmp_path):
     assert _run("ingest", ingest) is TaskStatus.SKIPPED
 
 
+def test_rerun_compares_rows_outside_the_day_where_they_land(spark, tmp_path):
+    """Rows land in the partition of their own event time: a departure at
+    the window's end goes to the next day, a NULL ``firstSeen`` to Hive's
+    default partition.  A re-run compares them there, so it appends nothing."""
+    lake = str(tmp_path / "lake")
+    late, unset = _flight("abc001", 86400), {**_flight("abc002", 3600), "firstSeen": None}
+    payload = {"departure": [late, unset], "arrival": [_flight("abc003", 9000)]}
+    ingest = partial(ingest_flights, spark, _source(payload), "EDDF", DAY, lake)
+    assert _run("ingest", ingest) is TaskStatus.SUCCESS
+    for _ in range(2):
+        assert _run("ingest", ingest) is TaskStatus.SKIPPED
+    got = rows(spark.read.parquet(lake).select("icao24", "flight_day"))
+    assert got == [("abc001", 2), ("abc002", None), ("abc003", 1)]
+
+
 def test_fact_load_without_lake_day_skips(spark, tmp_path, fct_dims):
     lake = str(tmp_path / "lake")
     payload = {"departure": [_flight("abc001", 3600)], "arrival": [_flight("abc003", 9000)]}
@@ -280,3 +295,23 @@ def test_daily_plans_job_budget(spark, tmp_path, fct_dims):
             status, jobs = _jobs_of(spark, load)
             assert status == want and jobs <= 4, (day, status, jobs)
     assert spark.table("plans_fct_budget").count() == 2 * 2 * 39
+
+
+def test_plans_import_only_the_paper_path():
+    """``import etl_opensky_spark.plans`` loads the plan modules and what
+    they call, not the rest of the package: no package ``__init__``
+    re-exports its modules."""
+    import pathlib
+    import subprocess
+    import sys
+
+    out = subprocess.run(
+        [sys.executable, "-c", "import sys, etl_opensky_spark.plans; print(*sys.modules)"],
+        capture_output=True, text=True, check=True,
+        cwd=pathlib.Path(__file__).resolve().parents[1],
+    ).stdout.split()
+    assert "etl_opensky_spark.plans.ingest_flights" in out
+    functions = [m for m in out if m.startswith("etl_opensky_spark.functions.")]
+    assert functions == ["etl_opensky_spark.functions.datetime"]
+    for name in ("sources.versioned", "sources.sinks", "queries"):
+        assert f"etl_opensky_spark.{name}" not in out

@@ -67,7 +67,6 @@ SCALE_QUERIES = [
     "q280_url_canonical",        # parse_url canonicalization projection
     "q285_pq_ann",               # PQ train + ADC probe + exact re-rank
     "q286_mmr_rerank",           # greedy diversified top-k (5 picks)
-    "q287_webdataset_roundtrip", # tar-shard export + Arrow tar re-read
     # round-7 additions
     "q298_maintain_table",       # churn + REORG purge + OPTIMIZE (sink gate)
     "q295_lake_datasource_op",   # Python DS Arrow decode, full + pruned scan
