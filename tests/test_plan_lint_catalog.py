@@ -26,11 +26,9 @@ from __future__ import annotations
 import pytest
 
 from etl_opensky_spark.plans.lint import plan_warnings
-from etl_opensky_spark.queries import BENCH_ONLY_QUERIES, QUERIES
+from etl_opensky_spark.queries import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
-
-CATALOG = {**QUERIES, **BENCH_ONLY_QUERIES}
 
 #: query -> {warning-kind prefixes allowed}, with the boundedness reason.
 #: Curated from the round-5 full sweep (35 raw flags -> 15 after the
@@ -87,9 +85,9 @@ def _kinds(warnings: list[str]) -> set[str]:
     return {w.split(":", 1)[0] for w in warnings}
 
 
-@pytest.mark.parametrize("name", sorted(CATALOG))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_catalog_plan_is_clean(spark, name):
-    df = CATALOG[name](spark, SF_DIR)
+    df = QUERIES[name](spark, SF_DIR)
     got = _kinds(plan_warnings(df))
     unexpected = got - ALLOW.get(name, set())
     assert not unexpected, (

@@ -94,18 +94,6 @@ def test_skipped_return_value():
     assert p.run()["dates"] is TaskStatus.SKIPPED
 
 
-def test_bench_list_covers_every_catalog_query():
-    # bench.py's list is maintained by hand; a forgotten entry means a
-    # query family ships unbenched (and a typo'd one crashes the bench)
-    import bench
-    from etl_opensky_spark.queries import BENCH_ONLY_QUERIES, QUERIES
-
-    assert set(bench.BENCH_QUERIES) == set(QUERIES) | set(BENCH_ONLY_QUERIES)
-    assert len(bench.BENCH_QUERIES) == len(set(bench.BENCH_QUERIES))
-    # cooled re-measure targets must exist in the benched catalog
-    assert set(bench.COOLED_QUERIES) <= set(bench.BENCH_QUERIES)
-
-
 # --- declarative spec loader -------------------------------------------------
 
 

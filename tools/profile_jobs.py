@@ -26,17 +26,16 @@ def main() -> int:
     ap.add_argument("--n", type=int, default=1)
     args = ap.parse_args()
 
-    from etl_opensky_spark.queries import BENCH_ONLY_QUERIES, QUERIES
+    from etl_opensky_spark.queries import QUERIES
     from etl_opensky_spark.session import get_spark
 
-    catalog = {**QUERIES, **BENCH_ONLY_QUERIES}
     spark = get_spark("profile_jobs")
     spark.read.parquet(f"{args.sf}/region.parquet").count()
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
     for name in args.queries:
-        fn = catalog[name]
+        fn = QUERIES[name]
         for i in range(args.n):
             group = f"{name}_run{i}"
             sc.setJobGroup(group, name)
