@@ -3,7 +3,7 @@
 Re-implements, Spark-first, the query and data-processing capabilities of
 the reference pipeline minkminkk/etl-opensky (a daily OpenSky flights →
 parquet lake → Hive star-schema ETL), plus large-scale training-data
-pipeline operators (dedup, similarity search, text analysis).
+pipeline operators (dedup, text analysis).
 
 Design principles
 -----------------

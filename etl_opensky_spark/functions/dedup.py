@@ -446,8 +446,7 @@ def simhash_vectorized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     two paths are bit-identical), and the 64-wide ±1 bit fold moves to
     ONE numpy pass per Arrow batch: ``unpackbits`` → signed segment sums
     (``add.reduceat``) → sign bits → ``packbits``.  Still a narrow map —
-    no shuffle, no Python per-row loop; the same split as
-    ``ivf.assign_clusters_vectorized``.
+    no shuffle, no Python per-row loop.
 
     Equivalence to the expression path is pinned by a test
     (tests/test_functions_trainingdata.py); null/empty text folds to
@@ -796,232 +795,6 @@ def _transitive_losers(
             .filter(F.col(id_col) != F.col("_keep"))
             .select(id_col)
         )
-
-
-#: exact-mode safety rail: ``_exact_pairs_matmul`` collects the whole
-#: normalized matrix onto the driver (O(n*dim) bytes), so refuse above
-#: this row count and point the caller at the LSH mode instead.
-MAX_EXACT_ROWS = 1_000_000
-
-
-def embedding_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    hyperplanes=None,
-    exact: bool = False,
-    max_exact_rows: int = MAX_EXACT_ROWS,
-) -> DataFrame:
-    """(id_a, id_b) with id_a < id_b and cosine(vec_a, vec_b) >= threshold.
-
-    Default (``hyperplanes=None``, ``exact=False``) -> multi-table
-    LSH-bucketed candidate generation (``embedding_dup_pairs_multi``):
-    the scale-safe path, never collects the corpus.  ``exact=True`` ->
-    exact all-pairs comparison via distributed blocked matmul; the driver
-    holds the normalized n x dim matrix, so this REFUSES above
-    ``max_exact_rows`` rows (opt-in only — correct at any threshold but
-    only viable for modest n).  With explicit ``hyperplanes`` (see
-    ``similarity.make_hyperplanes``): vectors are bucketed by LSH
-    signature and the self-join becomes an equi-join on the bucket —
-    Spark shuffles on the bucket key only and the quadratic verify runs
-    inside buckets, the same candidate-generation shape as MinHash-LSH.
-    Recall < 1 per table; union pairs from several plane sets to raise it.
-    """
-    from etl_opensky_spark.functions.similarity import (
-        dot,
-        dot_unrolled,
-        hyperplane_bucket,
-        norm,
-    )
-
-    if hyperplanes is None:
-        if not exact:
-            return embedding_dup_pairs_multi(df, id_col, vec_col, threshold)
-        # the row-count guard is fused into the matrix collect (limit
-        # max+1): one job instead of a count job followed by a collect
-        return _exact_pairs_matmul(
-            df, id_col, vec_col, threshold, max_exact_rows
-        )
-
-    # probe the (fixed) dimension once: the pair-verify dot product is the
-    # hot loop, and the unrolled codegen form needs dim at plan time
-    dim_row = df.select(F.size(F.col(vec_col)).alias("d")).head()
-    dim = dim_row["d"] if dim_row is not None else 0
-
-    def side(id_alias: str, vec_alias: str) -> DataFrame:
-        # normalize ONCE per row, norm materialized in its own projection:
-        # cosine(a, b) per PAIR then collapses to a single dot product.
-        # Inlining norm into the pair filter would re-evaluate 3 aggregates
-        # per pair (no CSE across higher-order lambdas) — measured ~10x
-        # slower on a 500k-pair verify.
-        return (
-            df.select(F.col(id_col).alias(id_alias), F.col(vec_col).alias("_v"))
-            .withColumn("_n", norm(F.col("_v")))
-            .select(
-                id_alias,
-                F.transform(
-                    "_v", lambda x: x.cast("double") / F.col("_n")
-                ).alias(vec_alias),
-            )
-        )
-
-    # bucket signs are scale-invariant, so bucketing the normalized
-    # vectors matches bucketing the originals
-    a = side("id_a", "_va").withColumn(
-        "_bkt", hyperplane_bucket(F.col("_va"), hyperplanes)
-    )
-    b = side("id_b", "_vb").withColumn(
-        "_bkt", hyperplane_bucket(F.col("_vb"), hyperplanes)
-    )
-    cand = a.join(b, "_bkt").filter(F.col("id_a") < F.col("id_b"))
-    pair_dot = (
-        dot_unrolled(F.col("_va"), F.col("_vb"), dim)
-        if 0 < dim <= 256
-        else dot(F.col("_va"), F.col("_vb"))
-    )
-    return cand.filter(pair_dot >= F.lit(float(threshold))).select(
-        "id_a", "id_b"
-    )
-
-
-def _exact_pairs_matmul(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    max_exact_rows: int = MAX_EXACT_ROWS,
-) -> DataFrame:
-    """Exact all-pairs cosine >= threshold via distributed blocked matmul.
-
-    The O(n^2) similarity surface is dense linear algebra — JVM expression
-    trees evaluate it hundreds of times slower than one numpy matmul per
-    Arrow batch (measured: 1000 x 1000 x 64 took ~10s as a codegen'd
-    nested-loop join vs <1s here).  Shape: the driver collects and
-    broadcasts the NORMALIZED n x dim matrix (O(n*dim) — the exact mode's
-    documented bound, ~50 MB at n=100k/dim=64; beyond that use the LSH
-    mode), every task matmuls its own row block against it, so the O(n^2)
-    compute stays distributed and each task emits only its surviving
-    pairs.
-    """
-    import numpy as np
-
-    spark = df.sparkSession
-    side = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    rows = side.limit(max_exact_rows + 1).collect()
-    if len(rows) > max_exact_rows:
-        raise ValueError(
-            f"embedding_dup_pairs(exact=True) on > {max_exact_rows} rows "
-            f"would collect an O(n*dim) matrix onto the driver; "
-            "use the LSH mode (default, or pass hyperplanes=) at scale"
-        )
-    if not rows:
-        return spark.createDataFrame(
-            [], f"id_a {dict(df.dtypes)[id_col]}, id_b {dict(df.dtypes)[id_col]}"
-        )
-    # integral ids pack into int64; anything else (string keys, decimals)
-    # stays an object array — comparisons and indexing work either way
-    id_type = dict(df.dtypes)[id_col]
-    integral = id_type in ("tinyint", "smallint", "int", "bigint")
-    ids = np.array(
-        [r["_id"] for r in rows], dtype=np.int64 if integral else object
-    )
-    mat = np.stack([np.asarray(r["_v"], dtype=np.float64) for r in rows])
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    np.divide(mat, norms, out=mat, where=norms != 0)
-    bc = spark.sparkContext.broadcast((ids, mat))
-    thr = float(threshold)
-
-    def gen(batches):
-        import pandas as pd
-
-        all_ids, full = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            block = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            bn = np.linalg.norm(block, axis=1, keepdims=True)
-            np.divide(block, bn, out=block, where=bn != 0)
-            sims = block @ full.T
-            ia, jb = np.nonzero(sims >= thr)
-            a_ids, b_ids = pdf["_id"].to_numpy()[ia], all_ids[jb]
-            keep = a_ids < b_ids
-            yield pd.DataFrame({"id_a": a_ids[keep], "id_b": b_ids[keep]})
-
-    # size the row blocks: ≥64 rows of work per task, capped at the core
-    # count — a blanket repartition(cores) schedules 32 near-empty tasks
-    # for a 1k-row gate input (pure overhead) and still under-splits a
-    # 100k-row one
-    n_parts = max(1, min(spark.sparkContext.defaultParallelism, len(rows) // 64))
-    return side.repartition(n_parts).mapInPandas(
-        gen, f"id_a {id_type}, id_b {id_type}"
-    )
-
-
-def embedding_dup_pairs_multi(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    num_tables: int = 4,
-    num_planes: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Union of LSH-bucketed pair sets over ``num_tables`` independent
-    hyperplane sets — the standard recall amplifier: a true dup pair is
-    missed only if it splits in EVERY table (miss prob p^L for per-table
-    miss p).  Each table is an independent equi-join on its own bucket
-    key; the union dedups on (id_a, id_b).  Precision is unaffected:
-    every candidate still passes the exact cosine verify.
-    """
-    from etl_opensky_spark.functions.similarity import make_hyperplanes
-
-    dim_row = df.select(F.size(F.col(vec_col)).alias("d")).head()
-    if dim_row is None:
-        return embedding_dup_pairs(df, id_col, vec_col, threshold, [[1.0]])
-    dim = dim_row["d"]
-    out = None
-    for t in range(num_tables):
-        planes = make_hyperplanes(dim=dim, num=num_planes, seed=seed + t)
-        pairs = embedding_dup_pairs(df, id_col, vec_col, threshold, planes)
-        out = pairs if out is None else out.unionByName(pairs)
-    return out.distinct()
-
-
-def dedup_embedding(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    hyperplanes=None,
-    transitive: bool = True,
-    exact: bool = False,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate removal.
-
-    ``transitive=True``: connected components over the dup-pair graph,
-    keep the min id per component (same clustering semantics as
-    ``dedup_near``).  ``transitive=False``: greedy earlier-doc-wins — drop
-    every row that has ANY lower-id row with cosine >= threshold
-    (SQL-expressible as NOT EXISTS, which is what the oracle gate checks).
-    Pair generation defaults to the scale-safe LSH path; ``exact=True``
-    opts into all-pairs verification (guarded, see ``embedding_dup_pairs``).
-    """
-    verified = embedding_dup_pairs(
-        df, id_col, vec_col, threshold, hyperplanes, exact=exact
-    )
-    if transitive:
-        # two consumers (count + components) — persist pays for itself
-        verified = verified.persist()
-        n_pairs = verified.count()
-        losers = _transitive_losers(df, verified, id_col, n_pairs)
-        out = df.join(losers, on=id_col, how="left_anti")
-        verified.unpersist()
-        return out
-    # greedy mode: ONE consumer — persisting would only add a
-    # materialization pass (measured on the q42 gate)
-    losers = verified.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, on=id_col, how="left_anti")
 
 
 def hamming64(a: Column, b: Column) -> Column:

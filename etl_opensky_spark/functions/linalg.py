@@ -25,8 +25,8 @@ scale=1e6, per-row products are <= 1e12, so int64 partials hold ~9e6
 rows per batch and the final sum is accumulated as DECIMAL(38,0) —
 exact far past 100 TB row counts.
 
-The reference has no vector surface; this extends the embedding suite
-(functions/similarity.py, functions/ivf.py) per SURVEY §2-extension.
+The reference has no vector surface; this is an embedding-table
+extension per SURVEY §2-extension.
 """
 
 from __future__ import annotations

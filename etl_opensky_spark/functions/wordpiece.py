@@ -14,7 +14,7 @@ Pipeline:
 2. vocabulary = single characters ∪ top bigrams ∪ top whole words —
    derived from the corpus itself, deterministically (ties on string);
    bounded by construction, collected once and shipped in the Arrow
-   closure (same pattern as ``ivf.assign_clusters_vectorized``);
+   closure;
 3. ``mapInPandas`` over distinct words: greedy longest-match loop per
    word (single-char entries guarantee progress and totality);
 4. piece-level corpus stats = join pieces back to word frequencies.

@@ -4,8 +4,8 @@ The reference pipeline is flight-domain (airports carry lat/lon,
 ``load_dim_airports.py:27-35`` casts them to FloatType) but never joins
 on proximity; a production flight warehouse immediately needs "nearest
 airport to X".  The naive formulation is an all-pairs cross join —
-O(|L|·|R|), the same scale trap as brute-force ANN (``functions/
-similarity.py``).  This operator gives the EXACT 1-nearest-neighbor
+O(|L|·|R|), the same scale trap as brute-force nearest-neighbor
+search.  This operator gives the EXACT 1-nearest-neighbor
 under squared L2 with a grid-bucketed equi-join:
 
 - every point is assigned an integer grid cell ``(floor(x/cell),

@@ -22,12 +22,6 @@ from etl_opensky_spark.functions.dedup import (
     minhash_lsh_pairs,
     minhash_signature,
     ngram_jaccard_pairs,
-    simhash,
-)
-from etl_opensky_spark.functions.similarity import (
-    cosine_topk,
-    lsh_topk,
-    make_hyperplanes,
 )
 from etl_opensky_spark.operators.aggregates import top_k_per_group
 from etl_opensky_spark.operators.filters import filter_partition, nullify_values
@@ -899,55 +893,6 @@ WHERE i / (sa.sz + sb.sz - i) >= 0.8
 """
 
 
-def q27_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10 neighbors of vec_id=0 (exact baseline)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    return cosine_topk(emb.filter(F.col("vec_id") != 0), qvec, k=10)
-
-
-ORACLE_Q27 = """
-WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
-SELECT vec_id,
-  ROUND(list_dot_product(e.embedding::DOUBLE[], q.qv)
-        / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-           * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cosine
-FROM embeddings e, q
-WHERE vec_id != 0
-ORDER BY cosine DESC, vec_id
-LIMIT 10
-"""
-
-
-def q72_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH ANN at full probe radius: multiprobe over every
-    bucket makes the index provably EXACT (the q35-IVF verification
-    pattern), so the whole LSH machinery — bucket assignment, hamming
-    multiprobe, in-bucket re-rank — is hash-gated against the brute
-    force SQL oracle.  The selective probe_hamming=0/1 paths are
-    unit-tested for containment + recall on clustered fixtures."""
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    planes = make_hyperplanes(dim=len(qvec), num=4, seed=42)
-    return lsh_topk(
-        emb.filter(F.col("vec_id") != 0), qvec, planes, k=10,
-        probe_hamming=len(planes),
-    )
-
-
-ORACLE_Q72 = """
-WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
-SELECT vec_id,
-  ROUND(list_dot_product(e.embedding::DOUBLE[], q.qv)
-        / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-           * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cosine
-FROM embeddings e, q
-WHERE vec_id != 0
-ORDER BY cosine DESC, vec_id
-LIMIT 10
-"""
-
-
 def q30_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming surface: the q17 daily aggregation executed as
     a watermarked streaming query (availableNow over the same parquet),
@@ -1024,26 +969,6 @@ GROUP BY label, pos
 """
 
 
-def q32_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-row L2 norm + dimensionality over the embedding column."""
-    emb = _t(spark, sf_dir, "embeddings")
-    from etl_opensky_spark.functions.similarity import norm
-
-    return emb.select(
-        "vec_id",
-        F.round(norm(F.col("embedding")), 6).alias("l2_norm"),
-        F.size("embedding").alias("dim"),
-    )
-
-
-ORACLE_Q32 = """
-SELECT vec_id,
-  ROUND(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])), 6) AS l2_norm,
-  CAST(len(embedding) AS INTEGER) AS dim
-FROM embeddings
-"""
-
-
 def q33_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (operator Spark lacks natively; union+window composition):
     for every purchase, the user's most recent click at-or-before it.
@@ -1089,23 +1014,6 @@ def q81_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile_approx("l_extendedprice", 0.95, 10000).alias("price_q95"),
         F.count("*").alias("n_rows"),
     )
-
-
-def q35_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN end-to-end: train centroids (Lloyd on DataFrames), assign
-    clusters (narrow map), probe + exact re-rank.  Run with full probe so
-    the result equals brute force — the oracle then verifies the whole
-    IVF plumbing exactly; approximation is just n_probe < k."""
-    from etl_opensky_spark.functions.ivf import assign_clusters, ivf_topk, train_centroids
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    centroids = train_centroids(emb, k=4, iterations=2)
-    assigned = assign_clusters(emb.filter(F.col("vec_id") != 0), centroids)
-    return ivf_topk(assigned, centroids, qvec, k=10, n_probe=4)
-
-
-ORACLE_Q35 = ORACLE_Q27  # full probe == exact brute-force top-10
 
 
 def q36_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1365,36 +1273,6 @@ SELECT CASE WHEN bucket < 1000 THEN 'test'
             ELSE 'val' END AS split,
   lang, COUNT(*) AS n_docs, MIN(doc_id) AS min_id
 FROM b GROUP BY 1, 2
-"""
-
-
-def q42_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dedup, greedy earlier-doc-wins mode: keep a
-    vector iff no lower-id vector has cosine >= 0.45.  Exact all-pairs
-    verify (input explicitly capped to vec_id < 1000 so the O(n^2) gate
-    stays cheap at every SF; the op's LSH-bucketed path is the scale
-    route).  Threshold sits >= 1.6e-4 from every actual pair cosine, so
-    engine-order float summation cannot flip a comparison."""
-    from etl_opensky_spark.functions.dedup import dedup_embedding
-
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 1000)
-    kept = dedup_embedding(
-        emb, "vec_id", "embedding", threshold=0.45, transitive=False, exact=True
-    )
-    return kept.select("vec_id")
-
-
-ORACLE_Q42 = """
-SELECT a.vec_id
-FROM embeddings a
-WHERE a.vec_id < 1000 AND NOT EXISTS (
-  SELECT 1 FROM embeddings b
-  WHERE b.vec_id < a.vec_id AND b.vec_id < 1000
-    AND list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-        / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-           * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))
-        >= 0.45
-)
 """
 
 
@@ -3036,44 +2914,6 @@ SELECT prev_type, next_type, COUNT(*) AS n_transitions FROM (
 """
 
 
-def q86_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-NN majority-vote classification over the labeled embeddings:
-    queries vec_id 0..4, k=10 cosine neighbors, modal label with
-    deterministic tie-breaks (votes desc, label asc; neighbor rank by
-    rounded cosine then id)."""
-    from etl_opensky_spark.functions.similarity import knn_classify
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return knn_classify(emb, [0, 1, 2, 3, 4], k=10)
-
-
-ORACLE_Q86 = """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-  FROM embeddings WHERE vec_id IN (0, 1, 2, 3, 4)
-), scored AS (
-  SELECT q.query_id, e.vec_id, e.label,
-    ROUND(list_dot_product(e.embedding::DOUBLE[], q.qv)
-          / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-             * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos
-  FROM embeddings e, q WHERE e.vec_id NOT IN (0, 1, 2, 3, 4)
-), topk AS (
-  SELECT * FROM (
-    SELECT *, ROW_NUMBER() OVER (
-      PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rn
-    FROM scored
-  ) WHERE rn <= 10
-), votes AS (
-  SELECT query_id, label, COUNT(*) AS votes FROM topk GROUP BY 1, 2
-)
-SELECT query_id, label AS predicted_label, votes FROM (
-  SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY query_id ORDER BY votes DESC, label) AS r
-  FROM votes
-) WHERE r = 1
-"""
-
-
 def q87_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked edit-distance near-duplicate pairs: documents sharing a
     first token, levenshtein on the 24-char prefix <= 8.  Integer
@@ -3909,95 +3749,6 @@ LIMIT 50
 """
 
 
-def q105_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval (retrieval.rrf_fuse): BM25 lexical top-20 and
-    dense cosine top-20 (query = vec_id 0's embedding, ids aligned with
-    doc ids) fused by reciprocal-rank fusion, k=60.  Both rankers sort
-    on ROUND(score, 6) with id tie-breaks so the integer ranks — and
-    therefore the micro-quantized RRF scores — are engine-exact."""
-    from etl_opensky_spark.functions.retrieval import rank_topn, rrf_fuse
-    from etl_opensky_spark.functions.similarity import cosine
-
-    docs = _t(spark, sf_dir, "documents")
-    lex_scored = TX.bm25_scores(
-        docs, "doc_id", "text", ["spark", "vector", "join"], k1=1.2, b=0.75
-    ).select("doc_id", F.round("bm25", 6).alias("score"))
-    lex = rank_topn(lex_scored, "score", "doc_id", n=20)
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    q = F.array(*[F.lit(float(v)) for v in qvec])
-    dense_scored = emb.filter(F.col("vec_id") != 0).select(
-        F.col("vec_id").alias("doc_id"),
-        F.round(cosine(F.col("embedding"), q), 6).alias("score"),
-    )
-    dense = rank_topn(dense_scored, "score", "doc_id", n=20)
-
-    fused = rrf_fuse(lex, dense, "doc_id", k=60)
-    return fused.select(
-        "doc_id",
-        F.col("rank_a").alias("lex_rank"),
-        F.col("rank_b").alias("dense_rank"),
-        "rrf_micros",
-    )
-
-
-ORACLE_Q105 = """
-WITH base AS (
-  SELECT doc_id,
-    CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         ELSE string_split_regex(trim(lower(text)), '\\s+') END AS ts
-  FROM documents
-), stats AS (
-  SELECT COUNT(*) AS n, AVG(len(ts)) AS avgdl,
-    COUNT(*) FILTER (WHERE list_contains(ts, 'spark'))  AS df0,
-    COUNT(*) FILTER (WHERE list_contains(ts, 'vector')) AS df1,
-    COUNT(*) FILTER (WHERE list_contains(ts, 'join'))   AS df2
-  FROM base
-), lex_scored AS (
-  SELECT doc_id, ROUND(bm25, 6) AS score FROM (
-    SELECT doc_id,
-      CAST(list_contains(ts, 'spark') AS INTEGER)
-        + CAST(list_contains(ts, 'vector') AS INTEGER)
-        + CAST(list_contains(ts, 'join') AS INTEGER) AS matched_terms,
-        (ln(1 + (n - df0 + 0.5) / (df0 + 0.5))
-           * (len(list_filter(ts, x -> x = 'spark')) * 2.2)
-           / (len(list_filter(ts, x -> x = 'spark'))
-              + 1.2 * (0.25 + (0.75 * len(ts)) / avgdl)))
-      + (ln(1 + (n - df1 + 0.5) / (df1 + 0.5))
-           * (len(list_filter(ts, x -> x = 'vector')) * 2.2)
-           / (len(list_filter(ts, x -> x = 'vector'))
-              + 1.2 * (0.25 + (0.75 * len(ts)) / avgdl)))
-      + (ln(1 + (n - df2 + 0.5) / (df2 + 0.5))
-           * (len(list_filter(ts, x -> x = 'join')) * 2.2)
-           / (len(list_filter(ts, x -> x = 'join'))
-              + 1.2 * (0.25 + (0.75 * len(ts)) / avgdl))) AS bm25
-    FROM base CROSS JOIN stats
-  ) WHERE matched_terms > 0
-), lex AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INTEGER)
-    AS lex_rank
-  FROM lex_scored ORDER BY score DESC, doc_id LIMIT 20
-), q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
-), dense_scored AS (
-  SELECT vec_id AS doc_id,
-    ROUND(list_dot_product(e.embedding::DOUBLE[], q.qv)
-          / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-             * sqrt(list_dot_product(q.qv, q.qv))), 6) AS score
-  FROM embeddings e, q WHERE vec_id != 0
-), dense AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INTEGER)
-    AS dense_rank
-  FROM dense_scored ORDER BY score DESC, doc_id LIMIT 20
-)
-SELECT COALESCE(lex.doc_id, dense.doc_id) AS doc_id, lex_rank, dense_rank,
-  CAST(round((COALESCE(1.0 / (60.0 + CAST(lex_rank AS DOUBLE)), 0.0)
-            + COALESCE(1.0 / (60.0 + CAST(dense_rank AS DOUBLE)), 0.0))
-           * 1000000.0) AS BIGINT) AS rrf_micros
-FROM lex FULL OUTER JOIN dense ON lex.doc_id = dense.doc_id
-"""
-
-
 def q106_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-trained bigram-LM document scoring (lm.bigram_nll_scores)
     — the CCNet perplexity-filter stage expressed as two word-count
@@ -4040,56 +3791,6 @@ SELECT doc_id, CAST(SUM(n_occ) AS BIGINT) AS n_bigrams,
   CAST(SUM(n_occ * nll_micros_per_occ) AS BIGINT) AS nll_micros
 FROM doc_bigrams JOIN nll USING (w1, w2)
 GROUP BY doc_id
-"""
-
-
-def q107_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Int8 scalar-quantized MIPS top-10 (similarity.quantized_topk):
-    per-vector symmetric quantization (FAISS-SQ8 shape), EXACT bigint
-    dot-product ranking, and a per-row recall flag against the float
-    top-10.  The integer path removes every float-ordering hazard; the
-    float diagnostic uses the same fixed fold order as the oracle."""
-    from etl_opensky_spark.functions.similarity import quantized_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return quantized_topk(emb, query_id=0, k=10)
-
-
-ORACLE_Q107 = """
-WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
-), qq AS (
-  SELECT qv,
-    greatest(list_max(list_transform(qv, x -> abs(x))), 1e-30) AS qmax
-  FROM q
-), qc AS (
-  SELECT qv, qmax,
-    list_transform(qv, x -> CAST(round(x * 127.0 / qmax) AS BIGINT)) AS qcodes
-  FROM qq
-), base AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id != 0
-), bmax AS (
-  SELECT vec_id, v,
-    greatest(list_max(list_transform(v, x -> abs(x))), 1e-30) AS vmax
-  FROM base
-), scored AS (
-  SELECT vec_id,
-    CAST(list_dot_product(
-      list_transform(v, x -> CAST(round(x * 127.0 / vmax) AS BIGINT)),
-      qcodes) AS BIGINT) AS qdot,
-    ROUND(CAST(list_dot_product(
-        list_transform(v, x -> CAST(round(x * 127.0 / vmax) AS BIGINT)),
-        qcodes) AS BIGINT) * vmax * qmax / (127.0 * 127.0), 6) AS adot,
-    ROUND(list_dot_product(v, qv), 6) AS fdot
-  FROM bmax CROSS JOIN qc
-), exact_top AS (
-  SELECT vec_id FROM scored ORDER BY fdot DESC, vec_id LIMIT 10
-), quant_top AS (
-  SELECT vec_id, qdot, adot FROM scored ORDER BY adot DESC, vec_id LIMIT 10
-)
-SELECT q.vec_id, q.qdot, q.adot,
-  (e.vec_id IS NOT NULL) AS in_exact_topk
-FROM quant_top q LEFT JOIN exact_top e ON q.vec_id = e.vec_id
 """
 
 
@@ -4716,74 +4417,6 @@ SELECT CAST(ts AS DATE) AS d,
   COUNT(DISTINCT user_id) AS n_distinct_user_id,
   COUNT(DISTINCT event_type) AS n_distinct_event_type
 FROM events GROUP BY 1
-"""
-
-
-def q120_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka-truncation retrieval (MRL-style): cosine top-10 using
-    only the FIRST HALF of each embedding's dimensions (the cheap
-    coarse pass a truncated-embedding index runs), flagged against the
-    full-dimension exact top-10 — the recall diagnostic that tells you
-    whether the truncated index is safe as a first stage.  Same narrow
-    scan, slice + fixed-order fold, TakeOrdered."""
-    from etl_opensky_spark.functions.similarity import cosine
-
-    emb = _t(spark, sf_dir, "embeddings")
-    dim = len(emb.select("embedding").head()[0])
-    half = dim // 2
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    q_full = F.array(*[F.lit(float(v)) for v in qvec])
-    q_half = F.array(*[F.lit(float(v)) for v in qvec[:half]])
-    base = emb.filter(F.col("vec_id") != 0)
-    scored = base.select(
-        "vec_id",
-        F.round(cosine(F.slice("embedding", 1, half), q_half), 6).alias(
-            "cos_half"
-        ),
-        F.round(cosine(F.col("embedding"), q_full), 6).alias("_cos_full"),
-    )
-    top_half = scored.orderBy(
-        F.col("cos_half").desc(), F.col("vec_id")
-    ).limit(10)
-    top_full = scored.orderBy(
-        F.col("_cos_full").desc(), F.col("vec_id")
-    ).limit(10).select(F.col("vec_id").alias("_fid"))
-    return (
-        top_half.join(
-            F.broadcast(top_full), top_half["vec_id"] == top_full["_fid"],
-            "left",
-        )
-        .select(
-            "vec_id", "cos_half",
-            F.col("_fid").isNotNull().alias("in_full_topk"),
-        )
-    )
-
-
-ORACLE_Q120 = """
-WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
-), scored AS (
-  SELECT vec_id,
-    ROUND(list_dot_product(e.embedding[1:32]::DOUBLE[], q.qv[1:32])
-          / (sqrt(list_dot_product(e.embedding[1:32]::DOUBLE[],
-                                   e.embedding[1:32]::DOUBLE[]))
-             * sqrt(list_dot_product(q.qv[1:32], q.qv[1:32]))), 6)
-      AS cos_half,
-    ROUND(list_dot_product(e.embedding::DOUBLE[], q.qv)
-          / (sqrt(list_dot_product(e.embedding::DOUBLE[],
-                                   e.embedding::DOUBLE[]))
-             * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos_full
-  FROM embeddings e, q WHERE vec_id != 0
-), th AS (
-  SELECT vec_id, cos_half FROM scored
-  ORDER BY cos_half DESC, vec_id LIMIT 10
-), tf AS (
-  SELECT vec_id FROM scored ORDER BY cos_full DESC, vec_id LIMIT 10
-)
-SELECT th.vec_id, th.cos_half,
-  (tf.vec_id IS NOT NULL) AS in_full_topk
-FROM th LEFT JOIN tf ON th.vec_id = tf.vec_id
 """
 
 
@@ -8911,12 +8544,13 @@ FROM events GROUP BY event_type
 def q207_scalar_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar (Series→Series) pandas UDF — the last §2.13 Arrow-surface
     member (scalar here; grouped-agg q201, grouped-map in
-    operators/grouped.py, mapInPandas in ivf, UDTF q178):
-    vectorized string stats over the Arrow batch, integer-exact so the
-    SQL replay matches bit-for-bit.  Deliberately NOT the hot path —
-    the engine's own text stats are Column expressions (functions/
-    text.py); the gate pins the scalar-UDF machinery: batching, null
-    passthrough, multiple UDFs in one projection."""
+    operators/grouped.py, mapInPandas in dedup.simhash_vectorized,
+    UDTF q178): vectorized string stats over the Arrow batch,
+    integer-exact so the SQL replay matches bit-for-bit.  Deliberately
+    NOT the hot path — the engine's own text stats are Column
+    expressions (functions/text.py); the gate pins the scalar-UDF
+    machinery: batching, null passthrough, multiple UDFs in one
+    projection."""
     import pandas as pd  # noqa: F401
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
@@ -10296,53 +9930,6 @@ FROM clicks c LEFT JOIN purch p
   ON p.user_id = c.user_id AND p.ts >= c.ts
   AND epoch(p.ts) - epoch(c.ts) <= 3600.0
 GROUP BY c.event_id, c.user_id
-"""
-
-
-def q236_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary embedding quantization + Hamming top-k
-    (``similarity.binary_quantize_words`` — the vector-DB 1-bit
-    pattern): 64 floats pack to two sign-bit BIGINTs (32x smaller) and
-    candidate distance becomes XOR + popcount, pure integer codegen.
-    Top-10 per query for the 5 smallest-id query vectors; every packed
-    bit and distance is integer-exact, so the ORACLE replays the whole
-    pipeline (pack, XOR, popcount, ranked cut) bit-for-bit — unlike the
-    recall-bound ANN gates, this one hash-matches."""
-    from etl_opensky_spark.functions.similarity import binary_hamming_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return binary_hamming_topk(emb, n_queries=5, k=10, dim=64)
-
-
-def _oracle_q236(dim: int = 64, bits_per_word: int = 32) -> str:
-    word_exprs = []
-    for w0 in range(0, dim, bits_per_word):
-        terms = [
-            f"(CASE WHEN embedding[{i + 1}] > 0 THEN 1 ELSE 0 END)"
-            f" * {1 << (i - w0)}"
-            for i in range(w0, min(w0 + bits_per_word, dim))
-        ]
-        word_exprs.append("CAST(" + " + ".join(terms) + " AS BIGINT)")
-    nw = len(word_exprs)
-    packed_cols = ", ".join(
-        f"{e} AS w{i}" for i, e in enumerate(word_exprs)
-    )
-    q_cols = ", ".join(f"w{i} AS q{i}" for i in range(nw))
-    ham = " + ".join(
-        f"bit_count(xor(p.w{i}, q.q{i}))" for i in range(nw)
-    )
-    return f"""
-WITH packed AS (SELECT vec_id, {packed_cols} FROM embeddings),
-q AS (SELECT vec_id AS qid, {q_cols} FROM packed WHERE vec_id < 5),
-d AS (
-  SELECT q.qid, p.vec_id, CAST({ham} AS BIGINT) AS hamming
-  FROM packed p CROSS JOIN q
-), r AS (
-  SELECT qid, vec_id, hamming,
-    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY hamming, vec_id) AS rn
-  FROM d
-)
-SELECT qid, vec_id, hamming FROM r WHERE rn <= 10
 """
 
 
@@ -13276,116 +12863,6 @@ FROM t GROUP BY band
 """
 
 
-def q285_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCT QUANTIZATION ANN gate (``functions.pq`` — Jégou et al.,
-    the FAISS IVF-PQ code path; completes the quantization family next
-    to int8 q107, 1-bit q236, IVF q35): 16 subspaces × 16 centroids
-    trained by exact-integer Lloyd, vectors become 16 codes, the query
-    becomes 16 driver-computed ADC lookup tables, candidates come from
-    code lookups alone (no vector math on the scan), then the top-200
-    overscan is exactly re-ranked.  The exact top-10 truth (integer
-    quantized distances) is hash-matched against DuckDB; the PQ recall
-    against that truth is deterministic (exact integer arithmetic
-    end-to-end) and bound-gated at ≥ 8/10 (measured 10/10/9 at
-    sf0.001/0.01/0.1 — the synthetic embeddings are near-uniform
-    random, the hardest case for any quantizer; real clustered
-    embeddings code tighter)."""
-    from etl_opensky_spark.functions.clustering import QUANT_SCALE
-    from etl_opensky_spark.functions.pq import pq_encode, pq_topk, pq_train
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = list(
-        emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    )
-    dim = len(qvec)
-    books = pq_train(emb, dim, m=16, k=16, iters=2)
-    codes = pq_encode(emb.filter(F.col("vec_id") != 0), books, dim)
-    cand = pq_topk(codes, books, qvec, topn=200)
-    vq = emb.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * QUANT_SCALE).cast("long"),
-        ).alias("v"),
-    )
-    qq = [round(float(x) * QUANT_SCALE) for x in qvec]
-    d = F.aggregate(
-        F.zip_with("v", F.lit(qq), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    rerank = (
-        vq.join(F.broadcast(cand.select("vec_id")), "vec_id")
-        .select("vec_id", d.alias("dist"))
-        .orderBy("dist", "vec_id")
-        .limit(10)
-    )
-    truth = (
-        vq.filter(F.col("vec_id") != 0)
-        .select("vec_id", d.alias("dist"))
-        .orderBy("dist", "vec_id")
-        .limit(10)
-    )
-    t = truth.agg(
-        F.count("*").alias("n_truth"),
-        F.sum("vec_id").alias("truth_id_sum"),
-        F.sum("dist").alias("truth_dist_sum"),
-    )
-    h = truth.join(
-        rerank.select("vec_id"), "vec_id", "left_semi"
-    ).agg(F.count("*").alias("_hits"))
-    return t.crossJoin(h).select(
-        "n_truth",
-        "truth_id_sum",
-        "truth_dist_sum",
-        (F.col("_hits") >= 8).alias("recall_ok"),
-    )
-
-
-ORACLE_Q285 = """
-WITH v AS (
-  SELECT vec_id, list_transform(embedding,
-    x -> CAST(round(CAST(x AS DOUBLE)*1000000) AS BIGINT)) AS vq
-  FROM embeddings
-), q AS (SELECT vq AS qv FROM v WHERE vec_id = 0),
-d AS (
-  SELECT vec_id, CAST(list_sum(list_transform(range(len(v.vq)),
-    i -> (v.vq[i+1]-q.qv[i+1])*(v.vq[i+1]-q.qv[i+1]))) AS BIGINT) AS dist
-  FROM v, q WHERE vec_id <> 0
-), t AS (SELECT * FROM d ORDER BY dist, vec_id LIMIT 10)
-SELECT COUNT(*) AS n_truth, CAST(SUM(vec_id) AS BIGINT) AS truth_id_sum,
-       CAST(SUM(dist) AS BIGINT) AS truth_dist_sum, TRUE AS recall_ok
-FROM t
-"""
-
-
-def q286_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MAXIMAL MARGINAL RELEVANCE gate (``functions.mmr`` — Carbonell &
-    Goldstein's diversified re-rank, the context-assembly step of RAG
-    pipelines): 5 greedy picks at λ = 1/2 over a top-100 relevance
-    cut, each step ``argmin[d(q,i) − min_{j∈picked} d(i,j)]`` in exact
-    integer arithmetic (ties → lowest id).  The corpus is scanned once
-    (TakeOrdered); later steps scan only the cached candidate set with
-    the picked vectors as literals.  The oracle UNROLLS the greedy
-    recursion (one CTE per pick) — every pick, relevance distance, and
-    objective value hash-matches, proving the sequential selection, not
-    just the set."""
-    from etl_opensky_spark.functions.mmr import mmr_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = list(
-        emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    )
-    return mmr_topk(
-        emb.filter(F.col("vec_id") != 0), qvec, k=5, candidates=100
-    )
-
-
-from etl_opensky_spark.functions.mmr import mmr_oracle_sql as _mmr_osql
-
-ORACLE_Q286 = _mmr_osql(k=5, candidates=100, query_id=0)
-
-
 def q288_identity_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GENERATED IDENTITY gate (``keys.assign_identity`` + the lake's
     high-water-mark rider — Delta ``GENERATED ALWAYS AS IDENTITY``):
@@ -15713,22 +15190,18 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q24_ngram_jaccard_corpus": q24_ngram_jaccard_corpus,
     "q25_interval_join": q25_interval_join,
     "q26_rollup_merge": q26_rollup_merge,
-    "q27_ann_cosine": q27_ann_cosine,
     "q28_bloom_pruned_join": q28_bloom_pruned_join,
     "q29_stream_dedup": q29_stream_dedup,
     "q30_stream_daily_counts": q30_stream_daily_counts,
     "q31_embedding_centroids": q31_embedding_centroids,
-    "q32_embedding_norms": q32_embedding_norms,
     "q33_asof_join": q33_asof_join,
     "q34_winsorize": q34_winsorize,
-    "q35_ann_ivf": q35_ann_ivf,
     "q36_corpus_clean": q36_corpus_clean,
     "q37_sink_roundtrip": q37_sink_roundtrip,
     "q38_regional_revenue": q38_regional_revenue,
     "q39_small_quantity_parts": q39_small_quantity_parts,
     "q40_normalize_features": q40_normalize_features,
     "q41_train_test_split": q41_train_test_split,
-    "q42_embedding_dedup": q42_embedding_dedup,
     "q43_rolling_fingerprint": q43_rolling_fingerprint,
     "q44_shipping_priority": q44_shipping_priority,
     "q45_funnel": q45_funnel,
@@ -15757,7 +15230,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q69_ngram_jaccard": q69_ngram_jaccard,
     "q70_budget_selection": q70_budget_selection,
     "q71_simhash": q71_simhash,
-    "q72_ann_lsh": q72_ann_lsh,
     "q73_chunk_documents": q73_chunk_documents,
     "q74_bm25_scores": q74_bm25_scores,
     "q75_zordered_scan": q75_zordered_scan,
@@ -15770,7 +15242,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q83_near_dedup": q83_near_dedup,
     "q84_returned_items": q84_returned_items,
     "q85_event_transitions": q85_event_transitions,
-    "q86_knn_classify": q86_knn_classify,
     "q87_fuzzy_pairs": q87_fuzzy_pairs,
     "q88_kmeans_clusters": q88_kmeans_clusters,
     "q89_dsir_weights": q89_dsir_weights,
@@ -15789,9 +15260,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q102_merge_upsert": q102_merge_upsert,
     "q103_binary_source": q103_binary_source,
     "q104_bpe_pairs": q104_bpe_pairs,
-    "q105_rrf_fusion": q105_rrf_fusion,
     "q106_lm_perplexity": q106_lm_perplexity,
-    "q107_quantized_ann": q107_quantized_ann,
     "q108_stream_topk": q108_stream_topk,
     "q109_cdc_apply": q109_cdc_apply,
     "q110_compaction": q110_compaction,
@@ -15804,7 +15273,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q117_schema_evolution": q117_schema_evolution,
     "q118_jsonl_sink": q118_jsonl_sink,
     "q119_multi_distinct": q119_multi_distinct,
-    "q120_matryoshka_recall": q120_matryoshka_recall,
     "q121_scd2_asof": q121_scd2_asof,
     "q122_novelty_scores": q122_novelty_scores,
     "q123_stream_static_join": q123_stream_static_join,
@@ -15919,7 +15387,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q233_zorder_skipping": q233_zorder_skipping,
     "q234_target_encoding": q234_target_encoding,
     "q235_asof_forward": q235_asof_forward,
-    "q236_binary_hamming": q236_binary_hamming,
     "q237_absence_pattern": q237_absence_pattern,
     "q238_copurchase_similarity": q238_copurchase_similarity,
     "q239_yoy_growth": q239_yoy_growth,
@@ -15968,8 +15435,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q282_metadata_aggregate": q282_metadata_aggregate,
     "q283_variant_extraction": q283_variant_extraction,
     "q284_sql_programmability": q284_sql_programmability,
-    "q285_pq_ann": q285_pq_ann,
-    "q286_mmr_rerank": q286_mmr_rerank,
     "q288_identity_columns": q288_identity_columns,
     "q289_streamable_feed": q289_streamable_feed,
     "q290_stream_merge_lake": q290_stream_merge_lake,
@@ -16025,22 +15490,18 @@ ORACLES: dict[str, str] = {
     "q24_ngram_jaccard_corpus": ORACLE_Q24,
     "q25_interval_join": ORACLE_Q25,
     "q26_rollup_merge": ORACLE_Q26,
-    "q27_ann_cosine": ORACLE_Q27,
     "q28_bloom_pruned_join": ORACLE_Q28,
     "q29_stream_dedup": ORACLE_Q29,
     "q30_stream_daily_counts": ORACLE_Q30,
     "q31_embedding_centroids": ORACLE_Q31,
-    "q32_embedding_norms": ORACLE_Q32,
     "q33_asof_join": ORACLE_Q33,
     "q34_winsorize": ORACLE_Q34,
-    "q35_ann_ivf": ORACLE_Q35,
     "q36_corpus_clean": ORACLE_Q36,
     "q37_sink_roundtrip": ORACLE_Q37,
     "q38_regional_revenue": ORACLE_Q38,
     "q39_small_quantity_parts": ORACLE_Q39,
     "q40_normalize_features": ORACLE_Q40,
     "q41_train_test_split": ORACLE_Q41,
-    "q42_embedding_dedup": ORACLE_Q42,
     "q43_rolling_fingerprint": ORACLE_Q43,
     "q44_shipping_priority": ORACLE_Q44,
     "q45_funnel": ORACLE_Q45,
@@ -16069,7 +15530,6 @@ ORACLES: dict[str, str] = {
     "q69_ngram_jaccard": ORACLE_Q69,
     "q70_budget_selection": ORACLE_Q70,
     "q71_simhash": ORACLE_Q71,
-    "q72_ann_lsh": ORACLE_Q72,
     "q73_chunk_documents": ORACLE_Q73,
     "q74_bm25_scores": ORACLE_Q74,
     "q75_zordered_scan": ORACLE_Q75,
@@ -16081,7 +15541,6 @@ ORACLES: dict[str, str] = {
     "q83_near_dedup": ORACLE_Q83,
     "q84_returned_items": ORACLE_Q84,
     "q85_event_transitions": ORACLE_Q85,
-    "q86_knn_classify": ORACLE_Q86,
     "q87_fuzzy_pairs": ORACLE_Q87,
     "q88_kmeans_clusters": ORACLE_Q88,
     "q89_dsir_weights": ORACLE_Q89,
@@ -16100,9 +15559,7 @@ ORACLES: dict[str, str] = {
     "q102_merge_upsert": ORACLE_Q102,
     "q103_binary_source": ORACLE_Q103,
     "q104_bpe_pairs": ORACLE_Q104,
-    "q105_rrf_fusion": ORACLE_Q105,
     "q106_lm_perplexity": ORACLE_Q106,
-    "q107_quantized_ann": ORACLE_Q107,
     "q108_stream_topk": ORACLE_Q108,
     "q109_cdc_apply": ORACLE_Q109,
     "q110_compaction": ORACLE_Q110,
@@ -16115,7 +15572,6 @@ ORACLES: dict[str, str] = {
     "q117_schema_evolution": ORACLE_Q117,
     "q118_jsonl_sink": ORACLE_Q118,
     "q119_multi_distinct": ORACLE_Q119,
-    "q120_matryoshka_recall": ORACLE_Q120,
     "q121_scd2_asof": ORACLE_Q121,
     "q122_novelty_scores": ORACLE_Q122,
     "q123_stream_static_join": ORACLE_Q123,
@@ -16230,7 +15686,6 @@ ORACLES: dict[str, str] = {
     "q233_zorder_skipping": ORACLE_Q233,
     "q234_target_encoding": ORACLE_Q234,
     "q235_asof_forward": ORACLE_Q235,
-    "q236_binary_hamming": _oracle_q236(),
     "q237_absence_pattern": ORACLE_Q237,
     "q238_copurchase_similarity": ORACLE_Q238,
     "q239_yoy_growth": ORACLE_Q239,
@@ -16279,8 +15734,6 @@ ORACLES: dict[str, str] = {
     "q282_metadata_aggregate": ORACLE_Q282,
     "q283_variant_extraction": ORACLE_Q283,
     "q284_sql_programmability": ORACLE_Q284,
-    "q285_pq_ann": ORACLE_Q285,
-    "q286_mmr_rerank": ORACLE_Q286,
     "q288_identity_columns": ORACLE_Q288,
     "q289_streamable_feed": ORACLE_Q289,
     "q290_stream_merge_lake": ORACLE_Q290,

@@ -1,9 +1,8 @@
-"""Unit tests for text analysis, dedup, similarity and sampling ops."""
+"""Unit tests for text analysis, dedup and sampling ops."""
 
 from __future__ import annotations
 
 import hashlib
-import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,12 +16,6 @@ from etl_opensky_spark.functions.dedup import (
     minhash_signature,
     ngram_jaccard_pairs,
     simhash,
-)
-from etl_opensky_spark.functions.similarity import (
-    cosine,
-    cosine_topk,
-    lsh_topk,
-    make_hyperplanes,
 )
 
 
@@ -183,80 +176,6 @@ def test_ngram_jaccard_pairs(spark, docs):
     assert (1, 3) not in pairs
 
 
-# --- similarity --------------------------------------------------------------
-
-
-@pytest.fixture()
-def vectors(spark):
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [0.9, 0.1, 0.0]),
-        (2, [0.0, 1.0, 0.0]),
-        (3, [-1.0, 0.0, 0.0]),
-        (4, [0.7, 0.7, 0.0]),
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_cosine_expression(spark, vectors):
-    got = dict(
-        vectors.select(
-            "vec_id",
-            F.round(cosine(F.col("embedding"), F.array(F.lit(1.0), F.lit(0.0), F.lit(0.0))), 6).alias("c"),
-        ).collect()
-    )
-    assert got[0] == 1.0 and got[3] == -1.0 and got[2] == 0.0
-
-
-def test_cosine_topk_order_and_ties(spark, vectors):
-    out = cosine_topk(vectors.filter(F.col("vec_id") != 0), [1.0, 0.0, 0.0], k=3).collect()
-    assert [r["vec_id"] for r in out] == [1, 4, 2]
-    assert out[0]["cosine"] > out[1]["cosine"] > out[2]["cosine"]
-
-
-def test_lsh_topk_subset_of_bruteforce(spark, vectors):
-    planes = make_hyperplanes(dim=3, num=2, seed=7)
-    out = lsh_topk(vectors.filter(F.col("vec_id") != 0), [1.0, 0.0, 0.0], planes, k=3)
-    ids = {r["vec_id"] for r in out.collect()}
-    # candidates only from the query's bucket; exact vector 1 shares any
-    # sign pattern with the query (angle ~6 degrees, 2 planes rarely split)
-    assert ids <= {1, 2, 3, 4}
-
-
-def test_make_hyperplanes_deterministic(spark):
-    assert make_hyperplanes(4, 3, seed=1) == make_hyperplanes(4, 3, seed=1)
-    assert make_hyperplanes(4, 3, seed=1) != make_hyperplanes(4, 3, seed=2)
-
-
-def test_lsh_topk_tables_recall_dominates_single(spark, vectors):
-    """Multi-table LSH: the candidate set is the UNION over tables, so
-    L tables never recall less than any one of them, a single-table
-    call reproduces lsh_topk probe 0, and results subset brute force."""
-    from etl_opensky_spark.functions.similarity import (
-        lsh_topk_tables,
-        make_hyperplane_tables,
-    )
-
-    emb = vectors.filter(F.col("vec_id") != 0)
-    q = [1.0, 0.0, 0.0]
-    tables = make_hyperplane_tables(3, 2, n_tables=4, seed=7)
-    single = {
-        r["vec_id"]
-        for r in lsh_topk(emb, q, tables[0], k=10).collect()
-    }
-    single_via_tables = {
-        r["vec_id"]
-        for r in lsh_topk_tables(emb, q, tables[:1], k=10).collect()
-    }
-    assert single_via_tables == single
-    multi = {
-        r["vec_id"] for r in lsh_topk_tables(emb, q, tables, k=10).collect()
-    }
-    assert single <= multi  # union of partitions only adds candidates
-    exact = {r["vec_id"] for r in cosine_topk(emb, q, k=10).collect()}
-    assert multi <= exact
-
-
 def test_bpe_ish_token_count(spark):
     df = spark.createDataFrame(
         [(1, "hello world"), (2, "can't stop,won't stop"), (3, "abc123def")],
@@ -389,61 +308,6 @@ def test_stratified_sample_fraction(spark):
     assert 350 <= got.get("b", 0) <= 650
 
 
-def _unit(v):
-    import math
-    n = math.sqrt(sum(x * x for x in v))
-    return [x / n for x in v]
-
-
-def test_dedup_embedding_greedy_vs_transitive(spark):
-    from etl_opensky_spark.functions.dedup import dedup_embedding
-
-    # 1 and 3 similar, 2 and 3 similar, but 1 and 2 NOT similar:
-    # transitive clusters {1,2,3} -> keep 1; greedy drops only 3
-    # (2 has no similar LOWER id: cos(1,2) < threshold).
-    rows = [
-        (1, _unit([1.0, 0.0, 0.25])),
-        (2, _unit([0.0, 1.0, 0.25])),
-        (3, _unit([1.0, 1.0, 0.35])),
-        (4, _unit([-1.0, 0.5, -0.3])),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    greedy = sorted(
-        r["vec_id"]
-        for r in dedup_embedding(
-            df, threshold=0.7, transitive=False, exact=True
-        ).collect()
-    )
-    assert greedy == [1, 2, 4]
-    transitive = sorted(
-        r["vec_id"]
-        for r in dedup_embedding(
-            df, threshold=0.7, transitive=True, exact=True
-        ).collect()
-    )
-    assert transitive == [1, 4]
-
-
-def test_embedding_dup_pairs_lsh_subset_of_exact(spark):
-    from etl_opensky_spark.functions.dedup import embedding_dup_pairs
-    from etl_opensky_spark.functions.similarity import make_hyperplanes
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_dup_pairs(emb, threshold=0.45, exact=True).collect()
-    }
-    assert len(exact) == 7  # known pair count at sf0.001 / t=0.45
-    planes = make_hyperplanes(dim=64, num=2, seed=42)
-    bucketed = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_dup_pairs(
-            emb, threshold=0.45, hyperplanes=planes
-        ).collect()
-    }
-    assert bucketed <= exact  # LSH candidates never invent pairs
-
-
 def test_fingerprint_rolling_known_values(spark):
     from etl_opensky_spark.functions.text import fingerprint_rolling
 
@@ -461,48 +325,6 @@ def test_fingerprint_rolling_known_values(spark):
         ).collect()
     }
     assert [got[i] for i in range(len(texts))] == expected
-
-
-def test_dot_unrolled_bit_identical_to_fold(spark):
-    from etl_opensky_spark.functions.similarity import dot, dot_unrolled
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(50)
-    pairs = emb.alias("a").crossJoin(emb.alias("b")).select(
-        dot(F.col("a.embedding"), F.col("b.embedding")).alias("fold"),
-        dot_unrolled(F.col("a.embedding"), F.col("b.embedding"), 64).alias("unrolled"),
-    )
-    assert pairs.filter(F.col("fold") != F.col("unrolled")).count() == 0
-
-
-def test_embedding_dup_pairs_multi_table_recall(spark):
-    from etl_opensky_spark.functions.dedup import (
-        embedding_dup_pairs,
-        embedding_dup_pairs_multi,
-    )
-    from etl_opensky_spark.functions.similarity import make_hyperplanes
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_dup_pairs(emb, threshold=0.45, exact=True).collect()
-    }
-    one_table = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_dup_pairs(
-            emb, threshold=0.45,
-            hyperplanes=make_hyperplanes(dim=64, num=4, seed=42),
-        ).collect()
-    }
-    # shorter bucket keys + more tables -> structurally higher recall
-    multi = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_dup_pairs_multi(
-            emb, threshold=0.45, num_tables=6, num_planes=2, seed=42
-        ).collect()
-    }
-    # tables never invent pairs (exact verify inside buckets)
-    assert multi <= exact
-    assert len(multi) > len(one_table)  # recall actually amplified here
 
 
 def test_dedup_exact_skew_hardened_matches_window(spark):
@@ -529,42 +351,6 @@ def test_dedup_exact_hot_threshold_no_hot_keys(spark, docs):
         for r in dedup_exact(docs, "text", "doc_id", hot_threshold=100).collect()
     )
     assert kept == [1, 2, 3, 5, 6]
-
-
-def test_embedding_dup_pairs_default_is_lsh_not_driver_collect(spark, monkeypatch):
-    # the scale-safe default must never route through the driver-collect
-    # exact matmul — monkeypatched to explode if touched
-    from etl_opensky_spark.functions import dedup as D
-
-    def boom(*a, **k):
-        raise AssertionError("default path must not driver-collect")
-
-    monkeypatch.setattr(D, "_exact_pairs_matmul", boom)
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    pairs = D.embedding_dup_pairs(emb, threshold=0.45)  # default: LSH multi
-    assert pairs.count() >= 0  # materialize — would raise if exact path used
-
-
-def test_embedding_dup_pairs_exact_guard_raises(spark):
-    from etl_opensky_spark.functions.dedup import embedding_dup_pairs
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    with pytest.raises(ValueError, match="LSH mode"):
-        embedding_dup_pairs(emb, threshold=0.45, exact=True, max_exact_rows=10)
-
-
-def test_exact_pairs_matmul_string_ids(spark):
-    from etl_opensky_spark.functions.dedup import embedding_dup_pairs
-
-    rows = [("a", [1.0, 0.0]), ("b", [1.0, 0.01]), ("c", [0.0, 1.0])]
-    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_dup_pairs(
-            df, threshold=0.9, exact=True
-        ).collect()
-    }
-    assert pairs == {("a", "b")}
 
 
 def test_connected_components_nonconvergence_raises(spark, monkeypatch):
@@ -927,42 +713,6 @@ def test_sample_by_fractions_deterministic_and_monotone(spark):
     assert none_en == de
 
 
-def test_knn_classify_majority_and_tiebreak(spark):
-    from etl_opensky_spark.functions.similarity import knn_classify
-
-    # query 0 at origin-ish; 3 neighbors of label 1, 2 of label 2 -> k=5
-    # majority is 1.  A 2-2 split at k=4 must pick the SMALLER label.
-    rows = [
-        (0, [1.0, 0.0], 9),        # query
-        (1, [1.0, 0.01], 1),
-        (2, [1.0, 0.02], 1),
-        (3, [1.0, 0.03], 1),
-        (4, [1.0, 0.04], 2),
-        (5, [1.0, 0.05], 2),
-        (6, [-1.0, 0.0], 7),       # far away, never in top-5
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    got = knn_classify(emb, [0], k=5).collect()
-    assert [(r.query_id, r.predicted_label, r.votes) for r in got] == [(0, 1, 3)]
-    # k=4 -> labels {1,1,1,2} still 1; k=2 -> {1,1}; force a tie with k=6:
-    # adds the far vector (label 7): votes {1:3, 2:2, 7:1} -> still 1
-    got6 = knn_classify(emb, [0], k=6).collect()
-    assert got6[0].predicted_label == 1
-    # exact tie: two labels with equal votes -> smaller label wins
-    rows_tie = [
-        (0, [1.0, 0.0], 9),
-        (1, [1.0, 0.01], 5),
-        (2, [1.0, 0.02], 3),
-    ]
-    emb_tie = spark.createDataFrame(
-        rows_tie, "vec_id long, embedding array<float>, label int"
-    )
-    t = knn_classify(emb_tie, [0], k=2).collect()
-    assert t[0].predicted_label == 3 and t[0].votes == 1
-
-
 def test_fuzzy_pairs_blocking_and_threshold(spark):
     from etl_opensky_spark.functions.dedup import fuzzy_pairs
 
@@ -1043,46 +793,6 @@ def test_dsir_weights_invariant_under_repartitioning(spark):
     got = sorted(tuple(r) for r in
                  dsir_log_weights(docs.repartition(9), "doc_id", "text", tgt).collect())
     assert got == base
-
-
-def test_lsh_multiprobe_widens_candidates_and_full_probe_is_exact(spark):
-    from pyspark.sql import functions as F
-
-    from etl_opensky_spark.functions.similarity import (
-        cosine_topk,
-        lsh_topk,
-        make_hyperplanes,
-    )
-
-    rows = [(i, [((i * 13) % 17) / 8.0 - 1.0, ((i * 29) % 23) / 11.0 - 1.0,
-                 ((i * 7) % 19) / 9.0 - 1.0]) for i in range(1, 200)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    qvec = [0.5, -0.25, 0.75]
-    planes = make_hyperplanes(dim=3, num=3, seed=7)
-
-    sizes = []
-    for radius in range(4):
-        got = lsh_topk(emb, qvec, planes, k=200, probe_hamming=radius)
-        sizes.append(got.count())
-    assert sizes == sorted(sizes)  # wider probe never loses candidates
-
-    exact = [tuple(r) for r in cosine_topk(emb, qvec, k=10).collect()]
-    full = [tuple(r) for r in lsh_topk(emb, qvec, planes, k=10,
-                                       probe_hamming=3).collect()]
-    assert full == exact  # full probe radius == brute force
-
-
-def test_lsh_single_probe_finds_colocated_neighbor(spark):
-    from etl_opensky_spark.functions.similarity import lsh_topk, make_hyperplanes
-
-    # the near-duplicate of the query lands in the query's own bucket
-    rows = [(1, [1.0, 1.0, 1.0]), (2, [0.99, 1.01, 1.0]),
-            (3, [-1.0, -1.0, -1.0])]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = [r.vec_id for r in
-           lsh_topk(emb, [1.0, 1.0, 1.0], make_hyperplanes(3, 3, seed=7),
-                    k=3, probe_hamming=0).collect()]
-    assert 1 in got and 2 in got and 3 not in got
 
 
 # --- substring-level exact dedup (functions/dedup.py) -----------------------

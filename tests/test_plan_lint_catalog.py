@@ -60,9 +60,6 @@ ALLOW: dict[str, set[str]] = {
     "q234_target_encoding": BNLJ,  # 1-row global-prior crossJoin
     # bounded broadcast lists: query points / centroids / interval or
     # threshold tables of fixed small size by construction.
-    "q107_quantized_ann": BNLJ,   # 5 query vectors broadcast
-    "q86_knn_classify": BNLJ,     # 5 query vectors broadcast
-    "q236_binary_hamming": BNLJ,  # 5 packed query rows broadcast
     "q121_scd2_asof": BNLJ,       # as-of range probe vs broadcast history
     "q140_triangle_count": BNLJ,  # degree-ordered wedge close, bounded
     "q188_geo_nearest": BNLJ,     # documented bounded leftover fallback
@@ -75,9 +72,6 @@ ALLOW: dict[str, set[str]] = {
     # same Hamilton-core shape as q257: 1-row total/leftover crossJoins
     # + rank window over the aggregated strata table (key-cardinality)
     "q262_temperature_mixture": BNLJ | {"single-partition-exchange"},
-    # 1-row truth-aggregate × 1-row hits-aggregate crossJoin (the gate
-    # surface itself); the PQ scan and re-rank sides are equi/broadcast
-    "q285_pq_ann": BNLJ,
 }
 
 

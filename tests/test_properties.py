@@ -120,43 +120,6 @@ def test_hash_split_total_partition_and_stable(spark, keys, weights):
 @SETTINGS
 @given(
     st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=20),
-            st.integers(min_value=0, max_value=20),
-        ),
-        min_size=0,
-        max_size=15,
-    )
-)
-def test_greedy_embedding_losers_complement_of_pair_targets(spark, raw_pairs):
-    """Greedy mode keeps exactly the ids never appearing as the HIGHER id
-    of a dup pair — checked against driver-side set arithmetic by feeding
-    dedup_embedding vectors engineered so cosine>=t iff same group."""
-    from etl_opensky_spark.functions.dedup import dedup_embedding
-
-    # group each id by value: ids in the same group are exact duplicates
-    # (cosine 1), different groups orthogonal (cosine 0)
-    ids = sorted({i for p in raw_pairs for i in p} | {0, 1})
-    group = {i: i % 3 for i in ids}
-    vec = {0: [1.0, 0.0, 0.0], 1: [0.0, 1.0, 0.0], 2: [0.0, 0.0, 1.0]}
-    df = spark.createDataFrame(
-        [(i, vec[group[i]]) for i in ids], "vec_id long, embedding array<double>"
-    )
-    kept = sorted(
-        r["vec_id"]
-        for r in dedup_embedding(
-            df, threshold=0.5, transitive=False, exact=True
-        ).collect()
-    )
-    expected = sorted(
-        i for i in ids if not any(j < i and group[j] == group[i] for j in ids)
-    )
-    assert kept == expected
-
-
-@SETTINGS
-@given(
-    st.lists(
         st.lists(st.sampled_from(["tok", "x", "yy", "z9"]), min_size=0, max_size=17),
         min_size=1,
         max_size=6,

@@ -66,33 +66,6 @@ def test_bpe_pair_counts_partitioning_invariant(spark):
     assert one == many
 
 
-# --- rrf fusion --------------------------------------------------------------
-
-
-def test_rank_topn_orders_and_bounds(spark):
-    from etl_opensky_spark.functions.retrieval import rank_topn
-
-    scored = spark.createDataFrame(
-        [(1, 0.9), (2, 0.9), (3, 0.5), (4, 1.0)], ["doc_id", "score"]
-    )
-    got = rows(rank_topn(scored, "score", "doc_id", n=3))
-    # ties on score break by id: 4 (1.0), then 1, 2 (0.9)
-    assert got == [(1, 2), (2, 3), (4, 1)]
-
-
-def test_rrf_fuse_full_outer_and_quantization(spark):
-    from etl_opensky_spark.functions.retrieval import rrf_fuse
-
-    a = spark.createDataFrame([(1, 1), (2, 2)], ["doc_id", "rank"])
-    b = spark.createDataFrame([(2, 1), (3, 2)], ["doc_id", "rank"])
-    got = {r["doc_id"]: r for r in rrf_fuse(a, b, "doc_id", k=60).collect()}
-    assert set(got) == {1, 2, 3}
-    assert got[1]["rank_a"] == 1 and got[1]["rank_b"] is None
-    assert got[1]["rrf_micros"] == round(1e6 / 61)
-    assert got[2]["rrf_micros"] == round(1e6 * (1 / 62 + 1 / 61))
-    assert got[3]["rrf_micros"] == round(1e6 / 62)
-
-
 # --- bigram LM ---------------------------------------------------------------
 
 
@@ -127,33 +100,6 @@ def test_bigram_nll_partitioning_invariant(spark):
     one = rows(bigram_nll_scores(docs.coalesce(1), "doc_id", "text"))
     many = rows(bigram_nll_scores(docs.repartition(7), "doc_id", "text"))
     assert one == many
-
-
-# --- int8 quantized ANN ------------------------------------------------------
-
-
-def test_quantize_int8_range_and_extremes(spark):
-    from etl_opensky_spark.functions.similarity import quantize_int8
-
-    df = spark.createDataFrame(
-        [([0.5, -1.0, 0.25],), ([0.0, 0.0],)], ["v"]
-    ).select(quantize_int8(F.col("v")).alias("q"))
-    got = [r["q"] for r in df.collect()]
-    assert got[0] == [64, -127, 32]  # round(0.5*127), -127, round(0.25*127)
-    assert got[1] == [0, 0]  # zero vector maps to zero codes, no div-by-zero
-
-
-def test_quantized_topk_matches_exact_on_separable_data(spark):
-    from etl_opensky_spark.functions.similarity import quantized_topk
-
-    # well-separated vectors: quantized ranking == float ranking
-    data = [(i, [float(i), 1.0]) for i in range(20)]
-    emb = spark.createDataFrame(data, ["vec_id", "embedding"])
-    got = quantized_topk(emb, query_id=19, k=5).collect()
-    assert [r["vec_id"] for r in got] == [18, 17, 16, 15, 14]
-    assert all(r["in_exact_topk"] for r in got)
-    # integer dots are exact: dot(q18, q19) with per-vector scales
-    assert all(isinstance(r["qdot"], int) for r in got)
 
 
 # --- CDC changelog apply -----------------------------------------------------

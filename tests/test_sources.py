@@ -1,5 +1,5 @@
 """Source/sink tests: JSON envelope, CSV, REST (hermetic fake transport),
-partitioned parquet round-trip."""
+partitioned parquet round-trip, bucketed co-located join."""
 
 from __future__ import annotations
 
@@ -16,7 +16,10 @@ from etl_opensky_spark.sources.rest import (
     RestSource,
     validate_flight_rows,
 )
-from etl_opensky_spark.sources.sinks import write_parquet_partitioned
+from etl_opensky_spark.sources.sinks import (
+    write_bucketed_table,
+    write_parquet_partitioned,
+)
 from tests.conftest import rows
 
 
@@ -254,3 +257,25 @@ def test_compact_parquet_unpartitioned(spark, tmp_path):
     compact_parquet(spark, path, target_rows_per_file=10_000)
     assert len(glob.glob(f"{path}/*.parquet")) == 1
     assert sorted(r.id for r in spark.read.parquet(path).collect()) == before
+
+
+def test_bucketed_join_has_no_shuffle(spark):
+    """Two tables bucketed on the same key join WITHOUT an Exchange."""
+    a = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("va"))
+    b = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("vb"))
+    write_bucketed_table(a, "bucketed_a", ["k"], 4, sort_by=["k"])
+    write_bucketed_table(b, "bucketed_b", ["k"], 4, sort_by=["k"])
+    # force the sort-merge path: tiny test tables would otherwise broadcast
+    # (planner then ignores bucketing entirely)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        joined = spark.table("bucketed_a").join(spark.table("bucketed_b"), "k")
+        joined.collect()
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan
+        assert "Exchange hashpartitioning" not in plan  # co-located: no shuffle
+        assert "Bucketed: true" in plan
+        assert joined.count() == 1000
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
