@@ -104,7 +104,6 @@ def build_dim_aircrafts(
     src_manufacturers: DataFrame,
     src_aircraft_types: DataFrame,
     src_airlines: DataFrame,
-    key_mode: str = "row_number",
 ) -> DataFrame:
     """Three broadcast left joins + airline-name backfill + surrogate key
     (reference main flow, src/jobs/load_dim_aircrafts.py:76-122)."""
@@ -148,5 +147,5 @@ def build_dim_aircrafts(
         )
     )
 
-    df = surrogate_key(df, ["icao24_addr"], "aircraft_dim_id", mode=key_mode)
+    df = surrogate_key(df, ["icao24_addr"], "aircraft_dim_id", mode="row_number")
     return df.select(*DIM_AIRCRAFTS_COLUMNS)

@@ -26,12 +26,12 @@ DIM_AIRPORTS_COLUMNS = [
 ]
 
 
-def build_dim_airports(src_airports: DataFrame, key_mode: str = "row_number") -> DataFrame:
+def build_dim_airports(src_airports: DataFrame) -> DataFrame:
     """Rename to warehouse names and mint the surrogate key
     (reference: src/jobs/load_dim_airports.py:47-50; key = row_number over
-    orderBy(name) — key_mode="hash" gives the scalable variant)."""
+    orderBy(name))."""
     df = rename_columns(src_airports, {"icao": "icao_code", "iata": "iata_code"})
-    df = surrogate_key(df, ["name"], "airport_dim_id", mode=key_mode)
+    df = surrogate_key(df, ["name"], "airport_dim_id", mode="row_number")
     return df.select(*DIM_AIRPORTS_COLUMNS)
 
 

@@ -159,6 +159,40 @@ def test_stats_carried_and_harvested(spark, tmp_path):
         == list(range(44))
 
 
+def test_copy_into_stages_one_file_per_landing_file(spark, tmp_path):
+    """COPY INTO keeps each landing file a file of its own, whatever the
+    session's parallelism: one scan of all of them would pack the small
+    files into one split per core, so the staged file count (and what a
+    later OPTIMIZE finds to pack) would follow the core count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_opensky_spark.sources.versioned import copy_into
+
+    base = str(tmp_path / "lake")
+    write_version(
+        spark.range(4).select(F.col("id").cast("int").alias("id")).coalesce(1),
+        base,
+    )
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    # more files than two per core, so a packed scan must merge some
+    n_files = 2 * spark.sparkContext.defaultParallelism + 2
+    for i in range(n_files):
+        pq.write_table(
+            pa.table({"id": pa.array([100 + i], pa.int32())}),
+            landing / f"part-{i:03d}.parquet",
+        )
+    n_before = len(_snap_inodes(base))
+    copy_into(spark, base, str(landing))
+    assert len(_snap_inodes(base)) - n_before == n_files
+    assert sorted(r["id"] for r in read_version(spark, base).collect()) == (
+        [0, 1, 2, 3] + [100 + i for i in range(n_files)]
+    )
+    v, n_compacted = optimize_small_files(spark, base, target_rows_per_file=64)
+    assert n_compacted == n_files + 1  # the landing files and the 4-row bulk
+
+
 def test_partition_column_tombstone_key_refused(spark, tmp_path):
     base = str(tmp_path / "lake")
     write_version(
