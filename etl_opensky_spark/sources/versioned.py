@@ -4836,9 +4836,9 @@ def copy_into(
     new_files = [f for f in names if f not in seen]
     if not new_files:
         return (cur["version"] if cur else 0), 0
-    # one scan per landing file, so each stages as a file of its own: a
-    # single scan of them all packs small files into one split per core,
-    # which made the staged file count follow the session's parallelism
+    # one scan per landing file, so each stages as a file of its own on
+    # any core count: one scan of them all packs small files into one
+    # split per core
     paths = [os.path.join(src_dir, f) for f in new_files]
     schema = spark.read.parquet(*paths).schema
     batch = reduce(

@@ -71,14 +71,14 @@ def _dangling(source: str, where: str) -> list[str]:
                 problems.append(f"{where}:{node.lineno}: no module {node.module}")
                 continue
             for alias in node.names:
-                name = alias.name
-                if name in _bound_names(node.module):
-                    continue
-                if _module_path(f"{node.module}.{name}") is not None:
-                    continue  # a submodule of a package
-                problems.append(
-                    f"{where}:{node.lineno}: {node.module} has no {name}"
-                )
+                submodule = f"{node.module}.{alias.name}"
+                if (
+                    alias.name not in _bound_names(node.module)
+                    and _module_path(submodule) is None
+                ):
+                    problems.append(
+                        f"{where}:{node.lineno}: {node.module} has no {alias.name}"
+                    )
     return problems
 
 
