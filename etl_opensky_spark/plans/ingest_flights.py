@@ -44,7 +44,8 @@ PARTITION_COLS = ("flight_year", "flight_month", "flight_day")
 HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
+def hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Hadoop Path) Spark reads ``path`` through."""
     jvm = spark._jvm
     hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
     return hadoop_path.getFileSystem(spark._jsc.hadoopConfiguration()), hadoop_path
@@ -54,7 +55,7 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     """Filesystem-agnostic existence check via the Hadoop FileSystem API —
     works for local, HDFS, and object-store paths alike (the reference's
     one JVM escape hatch, src/jobs/extract_flights.py:69-73)."""
-    fs, hadoop_path = _hadoop_fs(spark, path)
+    fs, hadoop_path = hadoop_fs(spark, path)
     return bool(fs.exists(hadoop_path))
 
 
@@ -82,7 +83,7 @@ def read_partitions(
     if not parts:
         return None
     alternatives = ",".join(parts + [f"*=*/{part}" for part in parts])
-    fs, pattern = _hadoop_fs(spark, f"{lake_path.rstrip('/')}/{{{alternatives}}}")
+    fs, pattern = hadoop_fs(spark, f"{lake_path.rstrip('/')}/{{{alternatives}}}")
     dirs = [status.getPath().toString() for status in fs.globStatus(pattern) or []]
     if not dirs:
         return None

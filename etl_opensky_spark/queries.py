@@ -11,10 +11,14 @@ Determinism rules (so value-hashes match the oracle bit-for-bit):
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from collections.abc import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from etl_opensky_spark.functions import text as TX
 from etl_opensky_spark.functions.dedup import (
@@ -30,10 +34,66 @@ from etl_opensky_spark.operators.keys import date_dim_id, surrogate_key
 from etl_opensky_spark.operators.reshape import melt
 from etl_opensky_spark.operators.sets import append_missing, union_by_name
 from etl_opensky_spark.plans.dim_dates import build_dim_dates
+from etl_opensky_spark.plans.ingest_flights import hadoop_fs
+
+
+#: session confs that change the schema parquet inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+#: inferred table schemas kept by ``_t``, least recently used evicted first
+_SCHEMA_MEMO_SIZE = 64
+_schema_memo: OrderedDict[tuple, StructType] = OrderedDict()
+_schema_memo_lock = threading.Lock()
+
+
+def _leaf_files(spark: SparkSession, path: str) -> tuple:
+    """``(path, length, modification time)`` of every file under ``path``,
+    listed through the Hadoop FileSystem Spark reads it with.  Plain
+    ``listStatus``: ``listFiles`` builds located statuses, which load each
+    file's owner and permissions (~5 ms a file on the local filesystem)."""
+    fs, root = hadoop_fs(spark, path)
+    out, dirs = [], [root]
+    while dirs:
+        for status in fs.listStatus(dirs.pop()):
+            if status.isDirectory():
+                dirs.append(status.getPath())
+            else:
+                out.append(
+                    (status.getPath().toString(), status.getLen(), status.getModificationTime())
+                )
+    return tuple(sorted(out))
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Table ``name`` of ``sf_dir`` with the schema Spark infers for it.
+
+    Inference reads a parquet footer in a one-task Spark job, so it runs
+    once per set of files under the path and per value of the confs that
+    change its result; later reads pass the memoized schema and run no job.
+    A rewrite lists new files, so it is inferred again."""
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        files = _leaf_files(spark, path)
+    except Py4JJavaError:  # a missing path: Spark's own read raises PATH_NOT_FOUND
+        return spark.read.parquet(path)
+    key = (path, files, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    with _schema_memo_lock:
+        schema = _schema_memo.get(key)
+        if schema is not None:
+            _schema_memo.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _schema_memo_lock:
+        _schema_memo[key] = df.schema
+        if len(_schema_memo) > _SCHEMA_MEMO_SIZE:
+            _schema_memo.popitem(last=False)
+    return df
 
 
 def _gate_tmp(prefix: str, sf_dir: str) -> str:
@@ -73,15 +133,21 @@ def _ensure_ltz(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events reader, robust to upstream timestamp-encoding drift (see
-    ``_ensure_ltz``).  The NANOS path needs ``nanosAsLong`` active when the
-    scan *executes*, so the conf is deliberately left set on the session.
-    ``inferTimestampNTZ`` is disabled in session.py, but re-disable here
-    defensively in case the session was built elsewhere."""
+def _events_on_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events as stored, ``ts`` still in its on-disk encoding.  The NANOS
+    path needs ``nanosAsLong`` active when the scan *executes*, so the conf
+    is deliberately left set on the session.  ``inferTimestampNTZ`` is
+    disabled in session.py, but re-disable here defensively in case the
+    session was built elsewhere."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    return _ensure_ltz(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return _t(spark, sf_dir, "events")
+
+
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events reader, robust to upstream timestamp-encoding drift (see
+    ``_ensure_ltz``)."""
+    return _ensure_ltz(_events_on_disk(spark, sf_dir))
 
 
 def _dec(col: str | F.Column, scale: int = 2) -> F.Column:
@@ -898,9 +964,7 @@ def q30_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     a watermarked streaming query (availableNow over the same parquet),
     results landed in a memory sink — semantics identical to batch, so the
     batch SQL is the oracle."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    on_disk_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    on_disk_schema = _events_on_disk(spark, sf_dir).schema
     # file stream source needs a directory: stream the sf dir, glob one table
     stream = _ensure_ltz(
         spark.readStream.schema(on_disk_schema)
@@ -1469,11 +1533,11 @@ WHERE user_id < 100
 
 
 def q48_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary GROUPING SETS through the SQL surface (S6: temp view +
-    spark.sql — the DataFrame API only exposes cube/rollup): priority x
+    """Arbitrary GROUPING SETS through the SQL surface (S6: the frame is a
+    ``spark.sql`` parameter, which leaves no view behind — the DataFrame
+    API only exposes cube/rollup): priority x
     status detail, priority subtotal, and grand total in ONE pass.
     GROUPING() flags disambiguate real NULLs from subtotal rows."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_orders_q48")
     return spark.sql(
         """
         SELECT o_orderpriority, o_orderstatus,
@@ -1481,11 +1545,12 @@ def q48_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
           CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
           COUNT(*) AS n_orders,
           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        FROM v_orders_q48
+        FROM {orders}
         GROUP BY GROUPING SETS (
           (o_orderpriority, o_orderstatus), (o_orderpriority), ()
         )
-        """
+        """,
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -2008,9 +2073,7 @@ def q60_stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles so cross-engine float summation order cannot matter."""
     from etl_opensky_spark.streaming.stateful import running_totals
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    on_disk_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    on_disk_schema = _events_on_disk(spark, sf_dir).schema
     stream = _ensure_ltz(
         spark.readStream.schema(on_disk_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -2703,9 +2766,7 @@ def q29_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark.  The batch oracle is the raw table: 2× in, 1× out."""
     from etl_opensky_spark.streaming.daily import dedup_within_watermark
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_on_disk(spark, sf_dir).schema
 
     def src() -> DataFrame:
         return _ensure_ltz(
@@ -3141,9 +3202,7 @@ def q92_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     before last_ts + gap, so the batch oracle marks a new session on
     ``gap >= 30min`` — verified equivalent, hash-gated with
     decimal-stable sums."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    on_disk_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    on_disk_schema = _events_on_disk(spark, sf_dir).schema
     stream = _ensure_ltz(
         spark.readStream.schema(on_disk_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -3208,9 +3267,7 @@ def q93_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches emit as soon as both sides arrive, so the single-batch run
     equals the batch self-join oracle.  Gate: per-user pair counts with
     decimal-stable view-value sums."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_on_disk(spark, sf_dir).schema
 
     def src() -> DataFrame:
         return _ensure_ltz(
@@ -3801,9 +3858,7 @@ def q108_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3 users per day by summed value (rank windows are not legal
     inside a streaming agg; ranking the materialized state is the
     standard serving pattern).  Decimal-exact sums, total order."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    on_disk_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    on_disk_schema = _events_on_disk(spark, sf_dir).schema
     stream = _ensure_ltz(
         spark.readStream.schema(on_disk_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -4537,9 +4592,7 @@ def q123_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     every micro-batch, no state store involved — then aggregates daily
     counts per segment.  Unmatched users keep a sentinel segment (left
     join; enrichment must never drop events).  Batch SQL is the oracle."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    on_disk_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    on_disk_schema = _events_on_disk(spark, sf_dir).schema
     stream = _ensure_ltz(
         spark.readStream.schema(on_disk_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -7097,9 +7150,7 @@ def q177_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     log2(keys)).  ``CAST(FLOOR(cur / 2))`` instead of integer division
     because ``/`` on ints is double in BOTH engines — the one shared
     spelling (SCALE.md div-semantics note)."""
-    spark.read.parquet(f"{sf_dir}/part.parquet").createOrReplaceTempView(
-        "part"
-    )
+    _t(spark, sf_dir, "part").createOrReplaceTempView("part")
     return spark.sql(RECURSIVE_SQL_Q177)
 
 
@@ -7166,9 +7217,7 @@ def q179_stream_tws_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips unless protobuf imports."""
     from etl_opensky_spark.streaming.stateful import running_totals_tws
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    on_disk_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    on_disk_schema = _events_on_disk(spark, sf_dir).schema
     stream = _ensure_ltz(
         spark.readStream.schema(on_disk_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -8491,9 +8540,7 @@ def q206_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark bound.  Aggregates avoid the which-copy-won
     nondeterminism (value is copy-invariant; count/ids/value-sum are
     not)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_on_disk(spark, sf_dir).schema
 
     def src() -> DataFrame:
         return _ensure_ltz(
@@ -10218,9 +10265,7 @@ def q241_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate cuts both engines to the flushable region — watermark - 1 h of
     margin — making stream output provably equal to the batch LEFT
     JOIN, nulls included."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_on_disk(spark, sf_dir).schema
 
     def src() -> DataFrame:
         return _ensure_ltz(
@@ -11867,9 +11912,7 @@ def q269_stream_jitter_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_jittered_within_watermark,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_on_disk(spark, sf_dir).schema
 
     def src() -> DataFrame:
         return _ensure_ltz(
