@@ -115,8 +115,8 @@ def main(argv: list[str] | None = None) -> int:
         status = "overwritten"
     elif args.command == "load-dim-aircrafts":
         from etl_opensky_spark.operators.joins import check_fk
-        from etl_opensky_spark.operators.filters import filter_partition
         from etl_opensky_spark.plans.dim_aircrafts import build_dim_aircrafts
+        from etl_opensky_spark.plans.ingest_flights import path_exists, read_day
         from etl_opensky_spark.sources.files import read_csv, read_json_envelope
 
         dim = build_dim_aircrafts(
@@ -126,13 +126,13 @@ def main(argv: list[str] | None = None) -> int:
             read_json_envelope(spark, args.airlines_json, cast_to=schemas.SRC_AIRLINES),
         )
         if args.check_fk_date and args.lake:
-            day = filter_partition(
-                spark.read.parquet(args.lake),
-                flight_year=args.check_fk_date.year,
-                flight_month=args.check_fk_date.month,
-                flight_day=args.check_fk_date.day,
-            )
-            check_fk(day, "icao24", dim, "icao24_addr")
+            # the day alone, read with the declared schema; a lake without
+            # that day has nothing to check
+            day = read_day(spark, args.lake, args.check_fk_date)
+            if day is not None:
+                check_fk(day, "icao24", dim, "icao24_addr")
+            elif not path_exists(spark, args.lake):
+                raise FileNotFoundError(f"lake root does not exist: {args.lake}")
         dim.write.mode("overwrite").saveAsTable("dim_aircrafts")
         status = "overwritten"
     else:  # pragma: no cover — argparse enforces the choices

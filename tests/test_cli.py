@@ -44,3 +44,50 @@ def test_load_dim_airports_cli_runs(spark, tmp_path, capsys):
     rc = main(["load-dim-airports", "--airports-json", str(p)])
     assert rc == 0
     assert spark.table("dim_airports").count() == 1
+
+
+def _aircraft_sources(spark, tmp_path) -> list[str]:
+    """The plan fixtures' dim sources as files, as CLI arguments."""
+    import csv
+
+    from tests import fixtures
+
+    args = []
+    for flag, frame in (
+        ("--aircrafts-csv", fixtures.src_aircrafts),
+        ("--manufacturers-csv", fixtures.src_manufacturers),
+        ("--types-csv", fixtures.src_aircraft_types),
+    ):
+        path = tmp_path / f"{flag[2:]}.csv"
+        with open(path, "w", newline="") as f:
+            csv.writer(f).writerows(frame(spark).collect())
+        args += [flag, str(path)]
+    airlines = tmp_path / "airlines.json"
+    airlines.write_text(json.dumps(
+        {"rows": [r.asDict() for r in fixtures.src_airlines(spark).collect()]}
+    ))
+    return args + ["--airlines-json", str(airlines)]
+
+
+def test_load_dim_aircrafts_checks_fk_of_one_day(spark, tmp_path):
+    """``--check-fk-date`` checks the lake's flights of that day only: an
+    orphan ``icao24`` there fails the load, one on another day does not,
+    and a missing lake root fails."""
+    from pyspark.sql import functions as F
+
+    from etl_opensky_spark.plans.ingest_flights import PARTITION_COLS
+    from tests import fixtures
+
+    lake = str(tmp_path / "lake" / "airport=EDDF")
+    flights = fixtures.src_flights(spark)
+    orphan = flights.filter("flight_day = 2").withColumn("icao24", F.lit("orphan"))
+    flights.unionByName(orphan).write.partitionBy(*PARTITION_COLS).parquet(lake)
+    load = ["load-dim-aircrafts", *_aircraft_sources(spark, tmp_path), "--lake"]
+    root = str(tmp_path / "lake")
+
+    with pytest.raises(ValueError, match="orphan"):
+        main([*load, root, "--check-fk-date", "2018-01-02"])
+    assert main([*load, root, "--check-fk-date", "2018-01-01"]) == 0
+    assert main([*load, root, "--check-fk-date", "2018-01-03"]) == 0
+    with pytest.raises(FileNotFoundError):
+        main([*load, str(tmp_path / "absent"), "--check-fk-date", "2018-01-01"])
