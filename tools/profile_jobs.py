@@ -1,10 +1,13 @@
-"""Round-11 job-count profiler: run catalog queries one at a time and
-report wall seconds + HOW MANY Spark jobs each fires (statusTracker job
-groups).  At bench scale (sf0.1, tiny data) most lifecycle gates are
-bound by fixed per-job scheduling and per-commit protocol costs, so the
-job count is the first-order explanation of wall time (guide §1.2 —
-"the distributed algorithm" includes not launching jobs you don't
-need).
+"""Job-count profiler: run catalog queries one at a time and report, for
+building the frame and for executing it, the wall seconds and HOW MANY
+Spark jobs and tasks each phase fires (statusTracker job groups).  At small
+scale most queries are bound by fixed per-job scheduling cost, so the job
+count is the first-order explanation of wall time, and a job launched
+while merely building a query (schema inference, an eager action in the
+builder) is waste the build column shows.
+
+Execution is timed through ``collect()``, as ``perfbench`` does: a
+``count()`` would let Catalyst prune every output column.
 
 Usage: python tools/profile_jobs.py [--sf DIR] [--n 1] query [query ...]
 """
@@ -34,29 +37,36 @@ def main() -> int:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
+    def phase(group: str, fn):
+        """(result, wall seconds, jobs, tasks) of ``fn`` run under ``group``."""
+        sc.setJobGroup(group, group)
+        t0 = time.perf_counter()
+        try:
+            out = fn()
+        finally:
+            wall = time.perf_counter() - t0
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        job_ids = tracker.getJobIdsForGroup(group)
+        n_tasks = 0
+        for jid in job_ids:
+            ji = tracker.getJobInfo(jid)
+            if ji is None:
+                continue
+            for sid in ji.stageIds:
+                si = tracker.getStageInfo(sid)
+                if si is not None:
+                    n_tasks += si.numTasks
+        return out, wall, len(job_ids), n_tasks
+
     for name in args.queries:
         fn = QUERIES[name]
         for i in range(args.n):
-            group = f"{name}_run{i}"
-            sc.setJobGroup(group, name)
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf)
-            rows = df.count()
-            wall = time.perf_counter() - t0
-            sc.setJobGroup(None, None)
-            job_ids = tracker.getJobIdsForGroup(group)
-            n_tasks = 0
-            for jid in job_ids:
-                ji = tracker.getJobInfo(jid)
-                if ji is None:
-                    continue
-                for sid in ji.stageIds:
-                    si = tracker.getStageInfo(sid)
-                    if si is not None:
-                        n_tasks += si.numTasks
+            df, b_wall, b_jobs, b_tasks = phase(f"{name}_run{i}_build", lambda: fn(spark, args.sf))
+            rows, e_wall, e_jobs, e_tasks = phase(f"{name}_run{i}_exec", df.collect)
             print(
-                f"{name} run{i}: wall={wall:.3f}s jobs={len(job_ids)} "
-                f"tasks={n_tasks} rows={rows}",
+                f"{name} run{i}: build={b_wall:.3f}s jobs={b_jobs} tasks={b_tasks} | "
+                f"exec={e_wall:.3f}s jobs={e_jobs} tasks={e_tasks} rows={len(rows)}",
                 flush=True,
             )
     return 0
