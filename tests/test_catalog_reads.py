@@ -5,14 +5,13 @@ seen on the next read."""
 
 from __future__ import annotations
 
-import uuid
-
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 
 from etl_opensky_spark.queries import QUERIES, _t
+from tests.test_plans import _jobs_of
 
 SF = "/root/testdata/sf0.001"
 
@@ -22,20 +21,6 @@ STAR_QUERIES = (
     "q13_monthly_orders", "q14_top_revenue_orders", "q20_rollup", "q38_regional_revenue",
     "q44_shipping_priority", "q48_grouping_sets", "q130_market_share",
 )
-
-
-def _jobs_of(spark, fn) -> tuple[object, int]:
-    """(result, Spark jobs ``fn`` ran), counted by job group."""
-    sc = spark.sparkContext
-    group = f"catalog-reads-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "catalog reads")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_rebuilding_star_queries_runs_no_job(spark):
