@@ -8,7 +8,7 @@ engine reproduces them bit-for-bit:
 - KS keeps the max-CDF-gap as the integer ``|cA·nB − cB·nA|`` (cross-
   multiplied empirical CDFs — no per-row float division) and divides
   once at the end;
-- PSI micro-quantizes each bin's log-ratio ONCE (the q106/q89 rule) and
+- PSI micro-quantizes each bin's log-ratio ONCE (the q89 rule) and
   keeps the weighted sum in exact integer micros.
 
 Scale shapes:

@@ -302,7 +302,7 @@ def label_spread_oracle_sql(
     unrolled-recursion oracle pattern): ``edges_cte``/``seeds_cte`` are
     SQL bodies producing (src, dst) and (node, label).  Chained CTEs
     are left un-MATERIALIZED deliberately — each is referenced once
-    (the q113 exponential-reference trap does not apply)."""
+    (re-expanding a CTE referenced from several stages does not apply)."""
     parts = [
         f"WITH edges AS ({edges_cte})",
         "sym AS (SELECT src AS s, dst AS d FROM edges"

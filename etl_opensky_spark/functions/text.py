@@ -443,45 +443,6 @@ def vocab_coverage(
     )
 
 
-def bpe_pair_counts(
-    docs: DataFrame, text_col: str, top_n: int = 50
-) -> DataFrame:
-    """One BPE training step, distributed: count adjacent character
-    pairs across the corpus and return the ``top_n`` most frequent —
-    the pair a byte-pair-encoding tokenizer trainer would merge next
-    (Sennrich et al., 2016).
-
-    The 100 TB shape: the corpus is first collapsed to a DISTINCT-WORD
-    frequency table (one word-count aggregate — vocabulary grows ~
-    Heaps' law, sublinearly in corpus size), and the character-pair
-    explosion runs over distinct words only, weighted by frequency.
-    Exploding pairs over raw tokens would fan out O(corpus chars);
-    this fans out O(vocab chars) — orders of magnitude less data
-    through the second aggregate at trillion-token scale.
-
-    Pure integer counts, deterministic (ties at the top_n boundary
-    break on the pair string), zero UDFs.
-    """
-    from pyspark.sql import DataFrame as _DF  # noqa: F401 (signature doc)
-
-    words = docs.select(
-        F.explode(tokenize(F.col(text_col))).alias("w")
-    ).filter(F.col("w") != "")
-    word_freq = words.groupBy("w").agg(F.count("*").alias("freq"))
-    pairs = word_freq.filter(F.length("w") >= 2).select(
-        "freq",
-        F.explode(
-            F.expr("transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")
-        ).alias("pair"),
-    )
-    counts = pairs.groupBy("pair").agg(
-        F.sum("freq").cast("bigint").alias("n_occurrences")
-    )
-    return counts.orderBy(
-        F.col("n_occurrences").desc(), F.col("pair")
-    ).limit(top_n)
-
-
 def tfidf_top_terms(
     docs: DataFrame,
     id_col: str,

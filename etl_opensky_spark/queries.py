@@ -3778,79 +3778,6 @@ FROM documents WHERE doc_id < 40
 """
 
 
-def q104_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE trainer step (text.bpe_pair_counts): adjacent
-    character-pair frequencies over the corpus, computed via the
-    distinct-word frequency table so the pair explosion is O(vocab),
-    not O(corpus) — the shape that survives trillion-token tokenizer
-    training.  Top-50 pairs, integer counts, total order at the cut."""
-    docs = _t(spark, sf_dir, "documents")
-    return TX.bpe_pair_counts(docs, "text", top_n=50)
-
-
-ORACLE_Q104 = """
-WITH words AS (
-  SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-  FROM documents
-), wf AS (
-  SELECT w, COUNT(*) AS freq FROM words WHERE w <> '' GROUP BY w
-), pairs AS (
-  SELECT substr(w, CAST(i AS INTEGER), 2) AS pair, freq
-  FROM (SELECT w, freq, unnest(range(1, length(w))) AS i
-        FROM wf WHERE length(w) >= 2)
-)
-SELECT pair, CAST(SUM(freq) AS BIGINT) AS n_occurrences
-FROM pairs GROUP BY pair
-ORDER BY n_occurrences DESC, pair
-LIMIT 50
-"""
-
-
-def q106_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-trained bigram-LM document scoring (lm.bigram_nll_scores)
-    — the CCNet perplexity-filter stage expressed as two word-count
-    aggregates plus one distinct-bigram equi-join.  Per-bigram NLLs are
-    micro-quantized once (DSIR pattern) so per-doc sums are exact
-    integers: partitioning-invariant and engine-exact."""
-    from etl_opensky_spark.functions.lm import bigram_nll_scores
-
-    docs = _t(spark, sf_dir, "documents")
-    return bigram_nll_scores(docs, "doc_id", "text")
-
-
-ORACLE_Q106 = """
-WITH toklists AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                x -> x <> '') AS ts
-  FROM documents
-), toks AS (
-  SELECT doc_id, unnest(ts) AS w FROM toklists
-), uni AS (
-  SELECT w, COUNT(*) AS c1 FROM toks GROUP BY w
-), v AS (
-  SELECT COUNT(*) AS vocab FROM uni
-), doc_bigrams AS (
-  SELECT doc_id, ts[CAST(i AS INTEGER)] AS w1,
-         ts[CAST(i AS INTEGER) + 1] AS w2, COUNT(*) AS n_occ
-  FROM (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i
-        FROM toklists WHERE len(ts) >= 2)
-  GROUP BY doc_id, w1, w2
-), bg AS (
-  SELECT w1, w2, SUM(n_occ) AS c12 FROM doc_bigrams GROUP BY w1, w2
-), nll AS (
-  SELECT w1, w2,
-    CAST(round(-ln((c12 + 1.0) / (c1 + CAST(vocab AS DOUBLE)))
-               * 1000000.0) AS BIGINT) AS nll_micros_per_occ
-  FROM bg JOIN uni ON bg.w1 = uni.w CROSS JOIN v
-)
-SELECT doc_id, CAST(SUM(n_occ) AS BIGINT) AS n_bigrams,
-  CAST(SUM(n_occ * nll_micros_per_occ) AS BIGINT) AS nll_micros
-FROM doc_bigrams JOIN nll USING (w1, w2)
-GROUP BY doc_id
-"""
-
-
 def q108_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lambda-architecture serving step over a streaming aggregate:
     watermarked per-(day, user) value totals stream into a memory sink
@@ -4146,99 +4073,6 @@ FROM (
   FROM scored
 ) WHERE rn <= 5
 """
-
-
-def q113_wordpiece(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WordPiece subword tokenization (functions/wordpiece.py): greedy
-    longest-match over a corpus-derived vocab (single chars ∪ top-100
-    bigrams ∪ top-50 words), applied to the top-500 distinct words via
-    ONE Arrow mapInPandas pass — the O(vocab)-not-O(corpus) custom-op
-    pattern.  Gate = corpus piece frequencies; the oracle unrolls the
-    greedy loop as 20 longest-match join stages (the q88 unrolled-
-    recursion technique)."""
-    from etl_opensky_spark.functions.wordpiece import (
-        build_vocab,
-        wordpiece_pieces,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    vocab = build_vocab(docs, "text")
-    return wordpiece_pieces(docs, "text", vocab).limit(50)
-
-
-def _build_oracle_q113(max_word_len: int = 20) -> str:
-    """Unrolled greedy longest-match (see q113 docstring).  Pure string
-    assembly — the result is ordinary ANSI SQL for DuckDB."""
-    steps = []
-    union = []
-    for i in range(max_word_len):
-        prev = "s0" if i == 0 else f"s{i}"
-        steps.append(f"""
-m{i} AS (
-  SELECT s.w, s.freq, s.pos, MAX(length(v.piece)) AS bl
-  FROM {prev} s JOIN vocab v
-    ON substr(s.w, s.pos, 1) = v.c1
-   AND substr(s.w, s.pos, length(v.piece)) = v.piece
-  GROUP BY s.w, s.freq, s.pos
-), p{i} AS MATERIALIZED (
-  SELECT w, freq, substr(w, pos, CAST(bl AS INTEGER)) AS piece,
-         pos + CAST(bl AS INTEGER) AS npos
-  FROM m{i}
-), s{i + 1} AS (
-  SELECT w, freq, CAST(npos AS INTEGER) AS pos FROM p{i}
-  WHERE npos <= length(w)
-)""")
-        union.append(f"SELECT piece, freq FROM p{i}")
-    return (
-        """
-WITH alltoks AS (
-  SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-  FROM documents
-), awf AS MATERIALIZED (
-  SELECT w, COUNT(*) AS freq FROM alltoks WHERE w <> '' GROUP BY w
-), wf AS MATERIALIZED (
-  SELECT w, freq FROM awf WHERE length(w) <= """
-        + str(max_word_len)
-        + """
-  ORDER BY freq DESC, w LIMIT 500
-), singles AS (
-  SELECT DISTINCT substr(w, CAST(i AS INTEGER), 1) AS piece
-  FROM (SELECT w, unnest(range(1, length(w) + 1)) AS i FROM wf)
-), bigr AS (
-  SELECT pair AS piece FROM (
-    SELECT substr(w, CAST(i AS INTEGER), 2) AS pair, SUM(freq) AS n
-    FROM (SELECT w, freq, unnest(range(1, length(w2))) AS i
-          FROM (SELECT w, freq, w AS w2 FROM awf WHERE w <> ''
-                  AND length(w) >= 2))
-    GROUP BY pair ORDER BY n DESC, pair LIMIT 100
-  )
-), topw AS (
-  SELECT w AS piece FROM wf ORDER BY freq DESC, w LIMIT 50
-), vocab AS MATERIALIZED (
-  SELECT piece, substr(piece, 1, 1) AS c1 FROM (
-    SELECT DISTINCT piece FROM (
-      SELECT piece FROM singles UNION ALL
-      SELECT piece FROM bigr UNION ALL
-      SELECT piece FROM topw))
-), s0 AS (
-  SELECT w, freq, 1 AS pos FROM wf
-),"""
-        + ",".join(steps)
-        + """,
-pieces AS (
-"""
-        + "\n  UNION ALL\n".join(union)
-        + """
-)
-SELECT piece, CAST(SUM(freq) AS BIGINT) AS n_occurrences
-FROM pieces GROUP BY piece
-ORDER BY n_occurrences DESC, piece
-LIMIT 50
-"""
-    )
-
-
-ORACLE_Q113 = _build_oracle_q113()
 
 
 def q114_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5717,7 +5551,7 @@ def q147_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source token Shannon entropy — the corpus-diversity /
     quality signal.  Decomposed for exactness: H = ln(N) − S/N with
     ``S = Σ cnt·ln(cnt)``; each distinct count's ln is micro-quantized
-    ONCE (the q106/q89 integer-micros rule), so S is an exact integer
+    ONCE (the q89 integer-micros rule), so S is an exact integer
     sum, partitioning-invariant, and the single final division happens
     in double identically in both engines.  Two shuffles (token counts,
     then per-source sum) — no sort, no window."""
@@ -5817,7 +5651,7 @@ FROM cum, tot GROUP BY na, nb
 def q149_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index (``functions.drift.psi``) between the
     month's halves over fixed equal-width value bins — the scorecard
-    drift monitor.  Per-bin log-ratios micro-quantized ONCE (q106
+    drift monitor.  Per-bin log-ratios micro-quantized ONCE (q89
     integer-micros rule), weighted sum exact bigint, one final double
     division; bins empty on either side excluded deterministically."""
     from etl_opensky_spark.functions.drift import psi
@@ -6085,44 +5919,6 @@ SELECT split, CAST(COUNT(*) AS BIGINT) AS n_sources,
   CAST(MAX(n_splits_of_group) AS BIGINT) AS max_splits_per_group
 FROM per_group JOIN leak USING (source)
 GROUP BY 1
-"""
-
-
-def q155_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocation mining via adjacent-pair PMI (``functions.lm.
-    pmi_collocations``): two vocabulary-bounded word-count aggregates +
-    a join of COUNT TABLES, PMI micro-quantized once per pair type
-    (exact-integer downstream, partitioning-invariant)."""
-    from etl_opensky_spark.functions.lm import pmi_collocations
-
-    docs = _t(spark, sf_dir, "documents")
-    return pmi_collocations(docs, "text", min_pair_count=5)
-
-
-ORACLE_Q155 = """
-WITH toklists AS (
-  SELECT list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                     x -> x <> '') AS ts
-  FROM documents
-), pairs AS (
-  SELECT ts[CAST(i AS INTEGER)] AS w1, ts[CAST(i AS INTEGER) + 1] AS w2
-  FROM (SELECT ts, unnest(range(1, len(ts))) AS i
-        FROM toklists WHERE len(ts) >= 2)
-), pc AS (
-  SELECT w1, w2, COUNT(*) AS c12 FROM pairs GROUP BY 1, 2
-  HAVING COUNT(*) >= 5
-), lc AS (
-  SELECT w1 AS w, COUNT(*) AS c1 FROM pairs GROUP BY 1
-), rc AS (
-  SELECT w2 AS w, COUNT(*) AS c2 FROM pairs GROUP BY 1
-), n AS (
-  SELECT COUNT(*) AS np FROM pairs
-)
-SELECT w1, w2, c12,
-  CAST(round(ln(CAST(c12 AS DOUBLE) * CAST(np AS DOUBLE)
-                / (CAST(c1 AS DOUBLE) * CAST(c2 AS DOUBLE)))
-             * 1000000.0) AS BIGINT) AS pmi_micros
-FROM pc JOIN lc ON pc.w1 = lc.w JOIN rc ON pc.w2 = rc.w CROSS JOIN n
 """
 
 
@@ -8303,59 +8099,6 @@ FROM r GROUP BY event_type
 """
 
 
-#: fixed rank-ordered merge list for the BPE-apply gate — a Python
-#: literal embedded in BOTH engines (the q184 discount-literal rule);
-#: a real tokenizer ships its learned merges the same way.
-BPE_MERGES = [
-    ("t", "h"),
-    ("th", "e"),
-    ("i", "n"),
-    ("a", "n"),
-    ("e", "r"),
-    ("o", "n"),
-    ("r", "e"),
-    ("a", "t"),
-    ("s", "t"),
-    ("an", "d"),
-]
-
-
-def q202_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE merge application (``functions.wordpiece.bpe_apply_merges``)
-    — the inference half of byte-pair encoding, closing the tokenizer
-    loop (q104 trains pair counts, q113 applies WordPiece, this
-    applies a rank-ordered BPE merge list).  One expression fold per
-    merge: left-to-right non-overlapping semantics fall out of the
-    fold ("aaa"+(a,a) → [aa, a]).  Runs over the DISTINCT-WORD vocab
-    (Heaps' law — the corpus never re-tokenizes), zero Python, zero
-    shuffle past the vocab distinct; the oracle replays every fold
-    via DuckDB ``list_reduce``."""
-    from etl_opensky_spark.functions.wordpiece import bpe_apply_merges
-
-    vocab = (
-        _t(spark, sf_dir, "documents")
-        .select(F.explode(F.split(F.col("text"), " ")).alias("word"))
-        .filter(F.length("word") > 0)
-        .distinct()
-    )
-    toks = bpe_apply_merges(F.col("word"), BPE_MERGES)
-    return vocab.select(
-        "word",
-        F.array_join(toks, " ").alias("tokens"),
-        F.size(toks).cast("int").alias("n_tokens"),
-    )
-
-
-def _oracle_q202() -> str:
-    from etl_opensky_spark.functions.wordpiece import bpe_oracle_sql
-
-    vocab_sql = (
-        "SELECT DISTINCT unnest(string_split(text, ' ')) AS word "
-        "FROM documents"
-    )
-    return bpe_oracle_sql(vocab_sql, BPE_MERGES)
-
-
 def q203_approx_percentile_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Built-in ``percentile_approx`` under its PUBLISHED guarantee —
     upgrading the q81 sketch family from rows-only to a bound gate (the
@@ -9341,34 +9084,6 @@ SELECT event_type, d, vm,
   END AS vm_interp
 FROM ctx
 """
-
-
-def q225_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE TRAINING loop end-to-end (VERDICT r4 #6,
-    ``wordpiece.bpe_train``): count adjacent token pairs over the
-    distinct-word frequency table → merge the argmax pair → re-count,
-    iterated 6 times — q104 is one step of this, q202 is the inference
-    half, this closes the tokenizer-training story.  The gate returns
-    the learned merge table ``(rank, a, b, n)``; the oracle replays the
-    ENTIRE loop unrolled (q88 pattern), each stage's data-dependent
-    winner read back via scalar subqueries and every token CTE
-    ``AS MATERIALIZED`` (the q113 exponential-inline lesson).  Ties at
-    every argmax break on (count desc, a, b) — engine-identical total
-    order, so the learned merges match exactly."""
-    from etl_opensky_spark.functions.wordpiece import bpe_train
-
-    docs = _t(spark, sf_dir, "documents")
-    merges = bpe_train(docs, "text", n_merges=6)
-    return spark.createDataFrame(
-        [(k + 1, a, b, n) for k, (a, b, n) in enumerate(merges)],
-        "rank int, a string, b string, n bigint",
-    )
-
-
-def _oracle_q225() -> str:
-    from etl_opensky_spark.functions.wordpiece import bpe_train_oracle_sql
-
-    return bpe_train_oracle_sql(n_merges=6)
 
 
 def q227_sequential_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10442,82 +10157,6 @@ WHERE o_orderkey = (SELECT MAX(o_orderkey) FROM orders)
 """
 
 
-def q245_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Held-out perplexity under an interpolated ABSOLUTE-DISCOUNTING
-    bigram LM (``lm.discounted_bigram_nll_scores`` — the Kneser–Ney
-    smoothing family that ships in KenLM/CCNet, beyond q106's add-one
-    baseline): train on even doc_ids, score odd doc_ids, discount
-    d = 3/4 kept RATIONAL so the only floats are two divides + one
-    multiply-add + ln per bigram type, micro-quantized once.  The
-    oracle replays the full train/eval pipeline."""
-    from etl_opensky_spark.functions.lm import discounted_bigram_nll_scores
-
-    docs = _t(spark, sf_dir, "documents")
-    return discounted_bigram_nll_scores(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-        "doc_id",
-        "text",
-    )
-
-
-ORACLE_Q245 = """
-WITH toklists AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                x -> x <> '') AS ts
-  FROM documents
-), train_bg AS (
-  SELECT ts[CAST(i AS INTEGER)] AS w1, ts[CAST(i AS INTEGER) + 1] AS w2,
-         CAST(COUNT(*) AS BIGINT) AS c12
-  FROM (SELECT ts, unnest(range(1, len(ts))) AS i
-        FROM toklists WHERE doc_id % 2 = 0 AND len(ts) >= 2)
-  GROUP BY w1, w2
-), ctx AS (
-  SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1,
-         CAST(COUNT(*) AS BIGINT) AS n1v
-  FROM train_bg GROUP BY w1
-), cont AS (
-  SELECT w2, CAST(COUNT(*) AS BIGINT) AS n1w FROM train_bg GROUP BY w2
-), scal AS (
-  SELECT (SELECT COUNT(*) FROM train_bg)
-       + (SELECT COUNT(DISTINCT w) FROM (
-            SELECT unnest(ts) AS w FROM toklists WHERE doc_id % 2 = 0))
-       AS denom
-), ev AS (
-  SELECT doc_id, ts[CAST(i AS INTEGER)] AS w1,
-         ts[CAST(i AS INTEGER) + 1] AS w2, COUNT(*) AS n_occ
-  FROM (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i
-        FROM toklists WHERE doc_id % 2 = 1 AND len(ts) >= 2)
-  GROUP BY doc_id, w1, w2
-), types AS (
-  SELECT DISTINCT w1, w2 FROM ev
-), nll AS (
-  SELECT t.w1, t.w2,
-    CAST(round(-ln(
-      CASE WHEN ctx.c1 IS NOT NULL THEN
-        CAST(GREATEST(4 * COALESCE(b.c12, 0) - 3, 0) AS DOUBLE)
-          / CAST(4 * ctx.c1 AS DOUBLE)
-        + (CAST(3 * ctx.n1v AS DOUBLE) / CAST(4 * ctx.c1 AS DOUBLE))
-          * (CAST(COALESCE(cont.n1w, 0) + 1 AS DOUBLE)
-             / CAST(scal.denom AS DOUBLE))
-      ELSE
-        CAST(COALESCE(cont.n1w, 0) + 1 AS DOUBLE)
-          / CAST(scal.denom AS DOUBLE)
-      END) * 1000000.0) AS BIGINT) AS nll_mu
-  FROM types t
-  LEFT JOIN train_bg b ON b.w1 = t.w1 AND b.w2 = t.w2
-  LEFT JOIN ctx ON ctx.w1 = t.w1
-  LEFT JOIN cont ON cont.w2 = t.w2
-  CROSS JOIN scal
-)
-SELECT doc_id, CAST(SUM(n_occ) AS BIGINT) AS n_bigrams,
-  CAST(SUM(n_occ * nll_mu) AS BIGINT) AS nll_micros
-FROM ev JOIN nll USING (w1, w2)
-GROUP BY doc_id
-"""
-
-
 def q244_point_in_time_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time-correct TRAINING-SET ASSEMBLY (the feature-store
     join): every purchase gets (a) the user's cumulative event count /
@@ -11011,7 +10650,7 @@ def q252_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     detector in financial data quality): leading-digit distribution vs
     ``log10(1 + 1/d)``, with the chi-square statistic.  Expected
     probabilities micro-quantized ONCE (log10 is the only
-    transcendental — q106 ln treatment); observed counts exact; the
+    transcendental — q89 log treatment); observed counts exact; the
     chi-square terms use the pinned quantized p so both engines compute
     the identical statistic."""
     orders = _t(spark, sf_dir, "orders")
@@ -15302,14 +14941,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q101_salted_join": q101_salted_join,
     "q102_merge_upsert": q102_merge_upsert,
     "q103_binary_source": q103_binary_source,
-    "q104_bpe_pairs": q104_bpe_pairs,
-    "q106_lm_perplexity": q106_lm_perplexity,
     "q108_stream_topk": q108_stream_topk,
     "q109_cdc_apply": q109_cdc_apply,
     "q110_compaction": q110_compaction,
     "q111_stream_upsert": q111_stream_upsert,
     "q112_tfidf_terms": q112_tfidf_terms,
-    "q113_wordpiece": q113_wordpiece,
     "q114_ppjoin": q114_ppjoin,
     "q115_quantile_bins": q115_quantile_bins,
     "q116_quality_quarantine": q116_quality_quarantine,
@@ -15350,7 +14986,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q152_set_ops": q152_set_ops,
     "q153_constraint_audit": q153_constraint_audit,
     "q154_group_split": q154_group_split,
-    "q155_pmi_collocations": q155_pmi_collocations,
     "q156_zorder_layout": q156_zorder_layout,
     "q157_array_hof_suite": q157_array_hof_suite,
     "q158_json_flatten": q158_json_flatten,
@@ -15396,7 +15031,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q199_pseudonymize": q199_pseudonymize,
     "q200_window_suite": q200_window_suite,
     "q201_pandas_grouped_agg": q201_pandas_grouped_agg,
-    "q202_bpe_encode": q202_bpe_encode,
     "q203_approx_percentile_bound": q203_approx_percentile_bound,
     "q204_not_in_null_semantics": q204_not_in_null_semantics,
     "q205_stream_restart_recovery": q205_stream_restart_recovery,
@@ -15419,7 +15053,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q222_regex_suite": q222_regex_suite,
     "q223_grouped_trend": q223_grouped_trend,
     "q224_linear_interpolation": q224_linear_interpolation,
-    "q225_bpe_train": q225_bpe_train,
     "q226_lake_lifecycle": q226_lake_lifecycle,
     "q227_sequential_index_dedup": q227_sequential_index_dedup,
     "q228_data_skipping": q228_data_skipping,
@@ -15437,7 +15070,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q241_stream_outer_join": q241_stream_outer_join,
     "q242_sql_pivot": q242_sql_pivot,
     "q243_bloom_point_lookup": q243_bloom_point_lookup,
-    "q245_kn_perplexity": q245_kn_perplexity,
     "q244_point_in_time_features": q244_point_in_time_features,
     "q246_embedding_drift": q246_embedding_drift,
     "q247_ab_test": q247_ab_test,
@@ -15601,14 +15233,11 @@ ORACLES: dict[str, str] = {
     "q101_salted_join": ORACLE_Q101,
     "q102_merge_upsert": ORACLE_Q102,
     "q103_binary_source": ORACLE_Q103,
-    "q104_bpe_pairs": ORACLE_Q104,
-    "q106_lm_perplexity": ORACLE_Q106,
     "q108_stream_topk": ORACLE_Q108,
     "q109_cdc_apply": ORACLE_Q109,
     "q110_compaction": ORACLE_Q110,
     "q111_stream_upsert": ORACLE_Q111,
     "q112_tfidf_terms": ORACLE_Q112,
-    "q113_wordpiece": ORACLE_Q113,
     "q114_ppjoin": ORACLE_Q114,
     "q115_quantile_bins": ORACLE_Q115,
     "q116_quality_quarantine": ORACLE_Q116,
@@ -15649,7 +15278,6 @@ ORACLES: dict[str, str] = {
     "q152_set_ops": ORACLE_Q152,
     "q153_constraint_audit": ORACLE_Q153,
     "q154_group_split": ORACLE_Q154,
-    "q155_pmi_collocations": ORACLE_Q155,
     "q156_zorder_layout": ORACLE_Q156,
     "q157_array_hof_suite": ORACLE_Q157,
     "q158_json_flatten": ORACLE_Q158,
@@ -15695,7 +15323,6 @@ ORACLES: dict[str, str] = {
     "q199_pseudonymize": ORACLE_Q199,
     "q200_window_suite": ORACLE_Q200,
     "q201_pandas_grouped_agg": ORACLE_Q201,
-    "q202_bpe_encode": _oracle_q202(),
     "q203_approx_percentile_bound": ORACLE_Q203,
     "q204_not_in_null_semantics": ORACLE_Q204,
     "q205_stream_restart_recovery": ORACLE_Q205,
@@ -15718,7 +15345,6 @@ ORACLES: dict[str, str] = {
     "q222_regex_suite": ORACLE_Q222,
     "q223_grouped_trend": ORACLE_Q223,
     "q224_linear_interpolation": ORACLE_Q224,
-    "q225_bpe_train": _oracle_q225(),
     "q226_lake_lifecycle": ORACLE_Q226,
     "q227_sequential_index_dedup": _oracle_q227(),
     "q228_data_skipping": ORACLE_Q228,
@@ -15736,7 +15362,6 @@ ORACLES: dict[str, str] = {
     "q241_stream_outer_join": ORACLE_Q241,
     "q242_sql_pivot": ORACLE_Q242,
     "q243_bloom_point_lookup": ORACLE_Q243,
-    "q245_kn_perplexity": ORACLE_Q245,
     "q244_point_in_time_features": ORACLE_Q244,
     "q246_embedding_drift": ORACLE_Q246,
     "q247_ab_test": ORACLE_Q247,

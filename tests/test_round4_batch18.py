@@ -141,64 +141,7 @@ def test_pseudonymize_deterministic_and_null_preserving(spark):
     assert out2[1] != out[1]  # salt rotation re-keys
 
 
-# ------------------------------------------------------- batch 19: BPE
-
-
-def test_bpe_apply_merges_rank_order_and_overlap(spark):
-    from etl_opensky_spark.functions.wordpiece import bpe_apply_merges
-
-    merges = [("t", "h"), ("th", "e"), ("a", "a")]
-    df = spark.createDataFrame(
-        [("the",), ("thatch",), ("aaa",), ("x",)], ["w"]
-    )
-    out = {
-        r["w"]: r["t"]
-        for r in df.select(
-            "w", bpe_apply_merges(F.col("w"), merges).alias("t")
-        ).collect()
-    }
-    assert out["the"] == ["the"]  # (t,h) then (th,e) — rank order chains
-    assert out["thatch"] == ["th", "a", "t", "c", "h"]
-    assert out["aaa"] == ["aa", "a"]  # left-to-right non-overlapping
-    assert out["x"] == ["x"]
-
-
-def test_bpe_oracle_sql_matches_spark_fold(spark):
-    import duckdb
-
-    from etl_opensky_spark.functions.wordpiece import (
-        bpe_apply_merges,
-        bpe_oracle_sql,
-    )
-
-    words = ["the", "thatch", "stand", "banana", "inner", "at", "z"]
-    merges = [("t", "h"), ("th", "e"), ("a", "n"), ("an", "d"), ("n", "a")]
-    df = spark.createDataFrame([(w,) for w in words], ["word"])
-    got = sorted(
-        (r["word"], r["tokens"], r["n_tokens"])
-        for r in df.select(
-            "word",
-            F.array_join(
-                bpe_apply_merges(F.col("word"), merges), " "
-            ).alias("tokens"),
-            F.size(bpe_apply_merges(F.col("word"), merges))
-            .cast("int")
-            .alias("n_tokens"),
-        ).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE documents AS SELECT * FROM (VALUES "
-        + ", ".join(f"('{w}')" for w in words)
-        + ") t(text)"
-    )
-    sql = bpe_oracle_sql(
-        "SELECT DISTINCT unnest(string_split(text, ' ')) AS word "
-        "FROM documents",
-        merges,
-    )
-    want = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == want
+# ------------------------------------------------------- batch 19
 
 
 def test_pandas_grouped_agg_trimmed_sum_exact(spark):

@@ -155,42 +155,6 @@ def test_zorder_sql_matches_column_expression(spark):
     assert both.filter(F.col("a") != F.col("b")).count() == 0
 
 
-# --- PMI collocations --------------------------------------------------------
-
-
-def test_pmi_positive_for_collocation_negative_for_rare_pair(spark):
-    from etl_opensky_spark.functions.lm import pmi_collocations
-
-    # "new york" always together; "the" everywhere -> "the the" dilute
-    docs = spark.createDataFrame(
-        [(i, "new york " + "the " * 3) for i in range(10)]
-        + [(100 + j, "the city the town") for j in range(10)],
-        ["doc_id", "text"],
-    )
-    got = {
-        (r.w1, r.w2): r
-        for r in pmi_collocations(docs, "text", min_pair_count=5).collect()
-    }
-    assert got[("new", "york")].pmi_micros > 0
-    assert got[("new", "york")].c12 == 10
-    # "the the" occurs often but both words are frequent -> lower PMI
-    assert got[("the", "the")].pmi_micros < got[("new", "york")].pmi_micros
-    # min_pair_count prunes the tail
-    assert ("city", "the") not in got or got[("city", "the")].c12 >= 5
-
-
-def test_pmi_partitioning_invariant(spark):
-    from etl_opensky_spark.functions.lm import pmi_collocations
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma alpha beta w{i % 7}") for i in range(40)],
-        ["doc_id", "text"],
-    )
-    a = rows(pmi_collocations(docs, "text", 5))
-    b = rows(pmi_collocations(docs.repartition(7), "text", 5))
-    assert a == b
-
-
 # --- gram matrix / moments ---------------------------------------------------
 
 

@@ -29,79 +29,6 @@ def test_binary_source_reads_bytes_and_metadata(spark, tmp_path):
     assert lengths == {"a.bin": 5, "b.bin": 7}
 
 
-# --- bpe_pair_counts ---------------------------------------------------------
-
-
-def test_bpe_pair_counts_hand_checked(spark):
-    from etl_opensky_spark.functions.text import bpe_pair_counts
-
-    docs = spark.createDataFrame(
-        [(1, "abab ab"), (2, "ab cd")], ["doc_id", "text"]
-    )
-    # words: abab(1), ab(2), cd(1)
-    # abab pairs: ab, ba, ab -> ab:2, ba:1 ; ab -> ab:1 per occurrence (x2)
-    # totals: ab = 2 + 2 = 4, ba = 1, cd = 1
-    got = {r["pair"]: r["n_occurrences"] for r in
-           bpe_pair_counts(docs, "text", top_n=10).collect()}
-    assert got == {"ab": 4, "ba": 1, "cd": 1}
-
-
-def test_bpe_pair_counts_ignores_single_char_words(spark):
-    from etl_opensky_spark.functions.text import bpe_pair_counts
-
-    docs = spark.createDataFrame([(1, "a b c xy")], ["doc_id", "text"])
-    got = rows(bpe_pair_counts(docs, "text", top_n=10))
-    assert got == [("xy", 1)]
-
-
-def test_bpe_pair_counts_partitioning_invariant(spark):
-    from etl_opensky_spark.functions.text import bpe_pair_counts
-
-    docs = spark.createDataFrame(
-        [(i, f"tok{i % 7} shared shared tok{i % 3}") for i in range(100)],
-        ["doc_id", "text"],
-    )
-    one = rows(bpe_pair_counts(docs.coalesce(1), "text", top_n=20))
-    many = rows(bpe_pair_counts(docs.repartition(8), "text", top_n=20))
-    assert one == many
-
-
-# --- bigram LM ---------------------------------------------------------------
-
-
-def test_bigram_nll_hand_computed(spark):
-    from etl_opensky_spark.functions.lm import bigram_nll_scores
-
-    docs = spark.createDataFrame(
-        [(1, "a b a b"), (2, "a b"), (3, "c")], ["doc_id", "text"]
-    )
-    # tokens: doc1 [a b a b], doc2 [a b], doc3 [c]  -> V = 3 (a, b, c)
-    # unigrams: a=3, b=3, c=1
-    # bigrams:  (a,b) c12=3  (doc1 x2, doc2 x1);  (b,a) c12=1
-    # nll(a,b) = -ln((3+1)/(3+3)); nll(b,a) = -ln((1+1)/(3+3))
-    nll_ab = round(-math.log(4 / 6) * 1e6)
-    nll_ba = round(-math.log(2 / 6) * 1e6)
-    got = {r["doc_id"]: r for r in
-           bigram_nll_scores(docs, "doc_id", "text").collect()}
-    assert set(got) == {1, 2}  # doc3 has no bigrams
-    assert got[1]["n_bigrams"] == 3
-    assert got[1]["nll_micros"] == 2 * nll_ab + nll_ba
-    assert got[2]["n_bigrams"] == 1
-    assert got[2]["nll_micros"] == nll_ab
-
-
-def test_bigram_nll_partitioning_invariant(spark):
-    from etl_opensky_spark.functions.lm import bigram_nll_scores
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i % 5} w{(i + 1) % 5} w{i % 3} end") for i in range(60)],
-        ["doc_id", "text"],
-    )
-    one = rows(bigram_nll_scores(docs.coalesce(1), "doc_id", "text"))
-    many = rows(bigram_nll_scores(docs.repartition(7), "doc_id", "text"))
-    assert one == many
-
-
 # --- CDC changelog apply -----------------------------------------------------
 
 
@@ -212,46 +139,6 @@ def test_tfidf_partitioning_invariant(spark):
     one = rows(tfidf_top_terms(docs.coalesce(1), "doc_id", "text"))
     many = rows(tfidf_top_terms(docs.repartition(8), "doc_id", "text"))
     assert one == many
-
-
-# --- wordpiece ---------------------------------------------------------------
-
-
-def test_wordpiece_greedy_longest_match(spark):
-    from etl_opensky_spark.functions.wordpiece import wordpiece_pieces
-
-    docs = spark.createDataFrame(
-        [(1, "unhappy unhappy cat"), (2, "hap cat")], ["doc_id", "text"]
-    )
-    vocab = ["un", "hap", "py", "cat", "u", "n", "h", "a", "p", "y", "c", "t"]
-    got = {r["piece"]: r["n_occurrences"] for r in
-           wordpiece_pieces(docs, "text", vocab).collect()}
-    # unhappy -> un + hap + py (greedy longest at each pos), x2
-    # hap -> hap; cat -> cat x2
-    assert got == {"un": 2, "hap": 3, "py": 2, "cat": 2}
-
-
-def test_wordpiece_unknown_chars_fall_back_to_singles(spark):
-    from etl_opensky_spark.functions.wordpiece import wordpiece_pieces
-
-    docs = spark.createDataFrame([(1, "xyz")], ["doc_id", "text"])
-    got = {r["piece"]: r["n_occurrences"] for r in
-           wordpiece_pieces(docs, "text", ["x"]).collect()}
-    # y/z not in vocab: emitted as single chars, never dropped
-    assert got == {"x": 1, "y": 1, "z": 1}
-
-
-def test_build_vocab_contains_all_tiers(spark):
-    from etl_opensky_spark.functions.wordpiece import build_vocab
-
-    docs = spark.createDataFrame(
-        [(i, "the the quick fox") for i in range(5)], ["doc_id", "text"]
-    )
-    vocab = build_vocab(docs, "text", top_bigrams=5, top_words=2)
-    assert "t" in vocab and "h" in vocab          # singles
-    assert "th" in vocab or "he" in vocab          # bigrams
-    assert "the" in vocab                          # top word
-    assert vocab == sorted(vocab)                  # deterministic order
 
 
 # --- numpy XxHash64 + vectorized minhash -------------------------------------
