@@ -1,9 +1,8 @@
 """Iterative graph algorithms on edge DataFrames: PageRank.
 
-Complements the star-contraction connected components in
-``functions.dedup`` — PageRank is the other graph primitive a
-training-data pipeline needs (link-graph quality weighting a la
-Common Crawl harmonic/PageRank centrality for source selection).
+PageRank is the link-graph quality weighting a training-data pipeline
+uses (a la Common Crawl harmonic/PageRank centrality for source
+selection).
 
 Spark-first shape (per iteration):
 

@@ -19,7 +19,7 @@ mergeability per Agarwal et al., "Mergeable Summaries", PODS 2012):
   undercounts by at most ``n/(k+1)`` in total;
 - hence every item with ``true(t) > n/(k+1)`` survives the merge.
 
-Those bounds are what the q97 accuracy gate checks against exact
+Those bounds are what the tests check against exact
 counts — the same pattern as the HLL/quantile-sketch gates (q78/q79):
 the approximate operator is oracle-checkable through its contract,
 not its engine-specific internals.
@@ -47,14 +47,14 @@ def misra_gries(df: DataFrame, col: str, k: int = 256) -> DataFrame:
 
     The *estimates* depend on partition layout (any MG run's do); the
     guarantees above hold under every layout, which is what downstream
-    consumers and the q97 gate rely on — see
-    ``tests/test_functions_trainingdata.py`` partitioning-invariance.
+    consumers rely on — see
+    ``tests/test_graph_sketch.py`` partitioning-invariance.
 
     NULLs are IGNORED: ``value_counts`` drops them, so null never
     appears as an item and contributes nothing to any counter.  The
     ``true - n/(k+1) <= est`` bound therefore holds for n = count of
     NON-null rows — callers computing n with nulls included would apply
-    the bound to the wrong n (q97 pre-filters nulls, so it's unaffected).
+    the bound to the wrong n.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -140,7 +140,7 @@ def countmin_estimates(
     key = F.col(col).cast("string")
     # checkpoint: the key-count table feeds BOTH the cell build and the
     # estimate join — without it Catalyst re-scans the corpus per
-    # consumer (the q112 exchange-reuse lesson)
+    # consumer (Catalyst does not reuse the exchange)
     counts = (
         df.select(key.alias("item"))
         .groupBy("item")

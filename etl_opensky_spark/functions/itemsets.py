@@ -46,7 +46,7 @@ def frequent_pairs(
             F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
         )
         .distinct()
-        # feeds the support count AND the pruned pair join (q112 lesson)
+        # feeds the support count AND the pruned pair join (exchange reuse)
         .localCheckpoint()
     )
     if max_basket_items is not None:

@@ -133,7 +133,7 @@ def correlation_matrix(
     # checkpoint both moment tables (d²- and d-sized): gram feeds the
     # pair rows AND the diagonal, mom feeds both marginals — without
     # this each consumer re-runs its corpus pass (plan-sweep finding;
-    # the q112 exchange-reuse lesson)
+    # Catalyst does not reuse the exchange)
     gram = gram_upper_triangle(embeddings, vec_col, scale).localCheckpoint()
     mom = moment_sums(embeddings, vec_col, scale).localCheckpoint()
 

@@ -117,7 +117,7 @@ def grid_nearest_neighbor(
         .select("_lid", F.col("_m._rid").alias("_rid"), F.col("_m._d2").alias("_d2"))
         # both the sure-winner filter and the fallback's anti-join consume
         # this; without the persist the 9-way ring join runs TWICE (the
-        # q112 exchange-reuse lesson: Catalyst does not reuse exchanges
+        # exchange-reuse lesson: Catalyst does not reuse exchanges
         # across differently-filtered consumers).  |L|-rows × 3 cols —
         # far smaller than the corpus.  The left input's cell derivation
         # is recomputed instead (column-pruned scan, no join — cheap).

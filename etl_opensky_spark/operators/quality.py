@@ -201,8 +201,7 @@ def pseudonymize(
 
     Pure Column expressions (JVM sha2, whole-stage codegen) — a
     map-only pass at any scale, composing with the governance suite:
-    q170 keyed purge, q185 k-anonymity audit, PII redaction
-    (functions/text.py:redact_pii).
+    q170 keyed purge and q185 k-anonymity audit.
     """
     out = df
     for c in cols:

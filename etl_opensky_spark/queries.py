@@ -20,13 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from etl_opensky_spark.functions import text as TX
-from etl_opensky_spark.functions.dedup import (
-    dedup_exact,
-    minhash_lsh_pairs,
-    minhash_signature,
-    ngram_jaccard_pairs,
-)
+from etl_opensky_spark.functions.dedup import dedup_exact
 from etl_opensky_spark.operators.aggregates import top_k_per_group
 from etl_opensky_spark.operators.filters import filter_partition, nullify_values
 from etl_opensky_spark.operators.joins import fk_orphans, lookup_dim
@@ -735,228 +729,7 @@ FROM (
 """
 
 
-# --- text analysis / dedup / similarity (training-data ops) ------------------
-
-
-def q22_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting + content fingerprint (md5, externally reproducible)."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        TX.token_count(F.col("text")).alias("n_tokens"),
-        F.length("text").alias("n_chars_actual"),
-        TX.fingerprint_md5(F.col("text")).alias("fingerprint"),
-    )
-
-
-ORACLE_Q22 = """
-SELECT doc_id,
-  CASE WHEN length(trim(text)) = 0 THEN 0
-       ELSE len(string_split_regex(trim(lower(text)), '\\s+')) END AS n_tokens,
-  length(text) AS n_chars_actual,
-  md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint
-FROM documents
-"""
-
-
-def q23_quality_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality ratios + stopword-hit language ID heuristic."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        TX.alpha_ratio(F.col("text")).alias("alpha_ratio"),
-        TX.stopword_ratio(F.col("text"), TX.STOPWORDS["en"]).alias("stop_en"),
-        TX.lang_id(F.col("text")).alias("lang_pred"),
-    )
-
-
-_SW = {k: ", ".join(f"'{w}'" for w in v) for k, v in TX.STOPWORDS.items()}
-ORACLE_Q23 = f"""
-WITH toks AS (
-  SELECT doc_id, text, string_split_regex(trim(lower(text)), '\\s+') AS t,
-    length(text) AS n
-  FROM documents
-), hits AS (
-  SELECT doc_id, text, n,
-    len(t) AS n_tok,
-    len(list_filter(t, x -> x IN ({_SW['de']}))) AS h_de,
-    len(list_filter(t, x -> x IN ({_SW['en']}))) AS h_en,
-    len(list_filter(t, x -> x IN ({_SW['es']}))) AS h_es,
-    len(list_filter(t, x -> x IN ({_SW['fr']}))) AS h_fr
-  FROM toks
-)
-SELECT doc_id,
-  CASE WHEN n = 0 THEN 0.0
-       ELSE (n - length(regexp_replace(text, '[a-zA-Z]', '', 'g'))) / n END AS alpha_ratio,
-  CASE WHEN length(trim(text)) = 0 THEN 0.0 ELSE h_en / n_tok END AS stop_en,
-  CASE WHEN greatest(h_de, h_en, h_es, h_fr) = 0 THEN 'und'
-       WHEN h_de >= h_en AND h_de >= h_es AND h_de >= h_fr THEN 'de'
-       WHEN h_en >= h_es AND h_en >= h_fr THEN 'en'
-       WHEN h_es >= h_fr THEN 'es'
-       ELSE 'fr' END AS lang_pred
-FROM hits
-"""
-
-
-def q69_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact unigram-set Jaccard near-dup pairs on a doc subset."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    # max_df=None: exact scores on a bounded 100-doc subset (the
-    # corpus-relative default is the production path — q24)
-    pairs = ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=1, threshold=0.5, max_df=None
-    )
-    return pairs.select(
-        "id_a", "id_b", F.round(F.col("jaccard"), 6).alias("jaccard")
-    )
-
-
-ORACLE_Q69 = """
-WITH grams AS (
-  SELECT DISTINCT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS g
-  FROM documents WHERE doc_id < 100
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
-  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT id_a, id_b, ROUND(i / (sa.sz + sb.sz - i), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE i / (sa.sz + sb.sz - i) >= 0.5
-"""
-
-
-def q63_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH recall-bound gate (the accuracy-bound pattern that
-    makes an approximate, hash-family-specific op oracle-checkable):
-    ground truth = EXACT 3-gram-shingle Jaccard pairs >= 0.8 (SQL-
-    reproducible); the LSH banding (32 hashes, 8 bands) must recover
-    >= 70% of them.  The truth count hash-matches the oracle; the
-    recall bound is exact integer arithmetic (hits*10 >= true*7).
-    Bounds are corpus-independent: banding hits a J=0.8 pair with
-    p>=0.985, so recall>=0.7 holds for ANY regenerated corpus (the
-    NTZ lesson: gates must survive driver-side data drift), while a
-    broken hash fold or banding join still drives recall to 0.
-    Measured recall here: 1.0."""
-    # single-file local input = one scan partition; spread the per-row
-    # hash fold across cores (at corpus scale the input is already split)
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    # corpus-relative hot-gram pruning (the q24 rule): truth pairs are
-    # then proven by RARE shared grams — a subset of the unpruned truth,
-    # so the recall bound only gets harder; cost stops scaling with
-    # stop-gram df^2
-    max_df = max(int(0.05 * docs.count()), 2)
-    truth = ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.8, max_df=max_df
-    ).select("id_a", "id_b")
-    sigs = minhash_signature(docs, "doc_id", "text", num_hashes=32, shingle_n=3)
-    cand = minhash_lsh_pairs(sigs, "doc_id", num_bands=8).select(
-        "id_a", "id_b", F.lit(1).alias("_hit")
-    )
-    return truth.join(cand, ["id_a", "id_b"], "left").agg(
-        F.count("*").alias("n_true_pairs"),
-        (F.count_if(F.col("_hit").isNotNull()) * 10 >= F.count("*") * 7).alias(
-            "recall_ok"
-        ),
-    )
-
-
-ORACLE_Q63 = """
-WITH grams AS (
-  SELECT DISTINCT doc_id, unnest(
-    CASE WHEN len(ts) < 3 THEN []::VARCHAR[]
-         ELSE list_transform(range(1, len(ts) - 1),
-                             i -> array_to_string(ts[i:i+2], ' ')) END) AS g
-  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ts
-        FROM documents)
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id
-), rare AS (
-  SELECT g FROM grams GROUP BY g
-  HAVING COUNT(*) <= GREATEST(CAST(FLOOR(0.05 * (SELECT COUNT(*) FROM documents)) AS INTEGER), 2)
-), pruned AS (
-  SELECT doc_id, g FROM grams WHERE g IN (SELECT g FROM rare)
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
-  FROM pruned a JOIN pruned b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT COUNT(*) AS n_true_pairs, TRUE AS recall_ok
-FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE i / (sa.sz + sb.sz - i) >= 0.8
-"""
-
-
-def q71_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash accuracy-bound gate: every EXACT 3-gram-Jaccard >= 0.8
-    near-dup pair must land within hamming distance 16 of 64 bits
-    (measured here: true pairs <= 9, background median 18).  The 0.8
-    truth cut keeps the bound corpus-independent — J>=0.8 docs share
-    >=89%% of grams, so their weighted-token vectors cannot diverge by
-    16 bits — while a broken fingerprint fold still lands near the
-    random-pair median of 32.  Truth count hash-matches SQL.
-
-    Uses the Arrow/numpy fingerprint path (bit-identical to the
-    expression fold — equivalence pinned in tests); the r3 20.7 s bench
-    outlier was the 64-wide codegen tree, not the truth computation."""
-    from etl_opensky_spark.functions.dedup import hamming64, simhash_vectorized
-
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    sh = simhash_vectorized(docs, "doc_id", "text")
-    max_df = max(int(0.05 * docs.count()), 2)
-    truth = ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.8, max_df=max_df
-    ).select("id_a", "id_b")
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("_ha"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("_hb"))
-    return (
-        truth.join(a, "id_a")
-        .join(b, "id_b")
-        .agg(
-            F.count("*").alias("n_true_pairs"),
-            (
-                F.max(hamming64(F.col("_ha"), F.col("_hb"))) <= F.lit(16)
-            ).alias("within_bound"),
-        )
-    )
-
-
-ORACLE_Q71 = """
-WITH grams AS (
-  SELECT DISTINCT doc_id, unnest(
-    CASE WHEN len(ts) < 3 THEN []::VARCHAR[]
-         ELSE list_transform(range(1, len(ts) - 1),
-                             i -> array_to_string(ts[i:i+2], ' ')) END) AS g
-  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ts
-        FROM documents)
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id
-), rare AS (
-  SELECT g FROM grams GROUP BY g
-  HAVING COUNT(*) <= GREATEST(CAST(FLOOR(0.05 * (SELECT COUNT(*) FROM documents)) AS INTEGER), 2)
-), pruned AS (
-  SELECT doc_id, g FROM grams WHERE g IN (SELECT g FROM rare)
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
-  FROM pruned a JOIN pruned b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT COUNT(*) AS n_true_pairs, TRUE AS within_bound
-FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE i / (sa.sz + sb.sz - i) >= 0.8
-"""
+# --- extended operator surface -----------------------------------------------
 
 
 def q30_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1080,46 +853,6 @@ def q81_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q36_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed training-data pipeline: quality filter -> language match ->
-    exact dedup -> per-language token stats.  Each stage is an engine op;
-    the whole chain stays one declarative plan (filters fused into the
-    scan, one shuffle for the dedup window, one for the final agg)."""
-    docs = _t(spark, sf_dir, "documents")
-    cleaned = docs.filter(
-        (TX.token_count(F.col("text")) >= 20)
-        & (TX.alpha_ratio(F.col("text")) >= 0.5)
-    )
-    deduped = dedup_exact(cleaned, "text", "doc_id")
-    return deduped.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(TX.token_count(F.col("text"))).alias("total_tokens"),
-        F.min("doc_id").alias("min_doc_id"),
-    )
-
-
-ORACLE_Q36 = """
-WITH cleaned AS (
-  SELECT doc_id, lang, text,
-    CASE WHEN length(trim(text)) = 0 THEN 0
-         ELSE len(string_split_regex(trim(lower(text)), '\\s+')) END AS n_tokens
-  FROM documents
-  WHERE (CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(lower(text)), '\\s+')) END) >= 20
-    AND (CASE WHEN length(text) = 0 THEN 0.0
-              ELSE (length(text) - length(regexp_replace(text, '[a-zA-Z]', '', 'g'))) / length(text) END) >= 0.5
-), deduped AS (
-  SELECT * FROM cleaned
-  WHERE doc_id IN (
-    SELECT MIN(doc_id) FROM cleaned
-    GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')))
-)
-SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-       MIN(doc_id) AS min_doc_id
-FROM deduped GROUP BY lang
-"""
-
-
 def q37_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K1+S1+F1 in one gate query: write a y/m/d-partitioned parquet lake
     from orders, read it back, and answer with a partition-pruned scan —
@@ -1241,77 +974,6 @@ WHERE l.l_quantity < 0.2 * a.avg_qty
 """
 
 
-def q83_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive near-dedup end-to-end, two ways: (a) the production
-    MinHash -> LSH -> verify -> components pipeline, (b) the same
-    components over EXACT 3-gram-Jaccard pairs.  The exact per-language
-    survivor counts HASH-match the oracle's recursive-CTE closure; the
-    estimate pipeline must agree within +/-2 docs per language —
-    tolerant of MinHash flips on borderline pairs if a regenerated
-    corpus ever has them (this one is bimodal and agrees exactly),
-    while a broken banding/verify/components stage still blows the
-    tolerance."""
-    from etl_opensky_spark.functions.dedup import _transitive_losers, dedup_near
-
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    est = dedup_near(docs, "doc_id", "text", threshold=0.5)
-    est_counts = est.groupBy("lang").agg(F.count("*").alias("_est_n"))
-    exact_pairs = ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.5, max_df=None
-    ).select("id_a", "id_b")
-    losers = _transitive_losers(docs, exact_pairs, "doc_id", exact_pairs.count())
-    exact_counts = (
-        docs.join(losers, on="doc_id", how="left_anti")
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_docs"))
-    )
-    return exact_counts.join(est_counts, "lang", "left").select(
-        "lang",
-        "n_docs",
-        (
-            F.abs(F.col("n_docs") - F.coalesce(F.col("_est_n"), F.lit(0))) <= 2
-        ).alias("est_within_tolerance"),
-    )
-
-
-ORACLE_Q83 = """
-WITH RECURSIVE grams AS (
-  SELECT DISTINCT doc_id, unnest(
-    CASE WHEN len(ts) < 3 THEN []::VARCHAR[]
-         ELSE list_transform(range(1, len(ts) - 1),
-                             i -> array_to_string(ts[i:i+2], ' ')) END) AS g
-  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ts
-        FROM documents)
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
-  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-), pairs AS (
-  SELECT id_a, id_b FROM inter
-  JOIN sizes sa ON sa.doc_id = id_a
-  JOIN sizes sb ON sb.doc_id = id_b
-  WHERE i / (sa.sz + sb.sz - i) >= 0.5
-), edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION SELECT id_b, id_a FROM pairs
-), reach(a, b) AS (
-  SELECT u, v FROM edges
-  UNION
-  SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u WHERE e.v <> r.a
-), dropped AS (
-  SELECT a AS node FROM reach GROUP BY a HAVING MIN(b) < a
-)
-SELECT d.lang, COUNT(*) AS n_docs, TRUE AS est_within_tolerance
-FROM documents d
-WHERE d.doc_id NOT IN (SELECT node FROM dropped)
-GROUP BY d.lang
-"""
-
-
 def q41_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-bucket train/val/test split over documents —
     reproducible across engines (md5 buckets), oracle-checked."""
@@ -1337,37 +999,6 @@ SELECT CASE WHEN bucket < 1000 THEN 'test'
             ELSE 'val' END AS split,
   lang, COUNT(*) AS n_docs, MIN(doc_id) AS min_id
 FROM b GROUP BY 1, 2
-"""
-
-
-def q43_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rabin-Karp rolling fingerprint per document — integer polynomial
-    hash, bit-for-bit reproducible across engines (DuckDB list_reduce
-    oracle), plus a per-language distinct-fingerprint rollup."""
-    docs = _t(spark, sf_dir, "documents")
-    fp = docs.select(
-        "lang", TX.fingerprint_rolling(F.col("text")).alias("fp")
-    )
-    return fp.groupBy("lang").agg(
-        F.count_distinct("fp").alias("n_distinct"),
-        F.min("fp").alias("min_fp"),
-        F.max("fp").alias("max_fp"),
-        (F.sum("fp") % F.lit(1_000_000_007)).alias("fp_sum_mod"),
-    )
-
-
-ORACLE_Q43 = """
-WITH fp AS (
-  SELECT lang,
-    list_reduce(
-      list_prepend(0::BIGINT,
-        list_transform(regexp_split_to_array(text, ''), c -> ascii(c)::BIGINT)),
-      (acc, ch) -> (acc * 31 + ch) % 1000000007) AS fp
-  FROM documents
-)
-SELECT lang, COUNT(DISTINCT fp) AS n_distinct, MIN(fp) AS min_fp,
-  MAX(fp) AS max_fp, (SUM(fp) % 1000000007)::BIGINT AS fp_sum_mod
-FROM fp GROUP BY lang
 """
 
 
@@ -1808,49 +1439,6 @@ WHERE doc_id IN (
 """
 
 
-def q54_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition quality signals per document: fraction of
-    2-gram occurrences taken by the most frequent 2-gram, and fraction of
-    3-gram occurrences whose gram repeats.  Shingle arrays are
-    MATERIALIZED once per row (no CSE across lambda boundaries), all
-    row-local array expressions — zero shuffle."""
-    docs = _t(spark, sf_dir, "documents")
-    staged = docs.withColumn(
-        "_g2", TX.word_shingles(F.col("text"), 2)
-    ).withColumn("_g3", TX.word_shingles(F.col("text"), 3))
-    return staged.select(
-        "doc_id",
-        TX.top_ngram_fraction(F.col("_g2")).alias("top2_frac"),
-        TX.dup_ngram_fraction(F.col("_g3")).alias("dup3_frac"),
-    )
-
-
-ORACLE_Q54 = """
-WITH tok AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ts
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-    CASE WHEN len(ts) < 2 THEN []::VARCHAR[]
-         ELSE list_transform(range(1, len(ts)),
-                             i -> array_to_string(ts[i:i+1], ' ')) END AS g2,
-    CASE WHEN len(ts) < 3 THEN []::VARCHAR[]
-         ELSE list_transform(range(1, len(ts) - 1),
-                             i -> array_to_string(ts[i:i+2], ' ')) END AS g3
-  FROM tok
-)
-SELECT doc_id,
-  CASE WHEN len(g2) = 0 THEN 0.0
-       ELSE list_max(list_transform(list_distinct(g2),
-                       s -> len(list_filter(g2, x -> x = s))))
-            / CAST(len(g2) AS DOUBLE) END AS top2_frac,
-  CASE WHEN len(g3) = 0 THEN 0.0
-       ELSE len(list_filter(g3, x -> len(list_filter(g3, y -> y = x)) > 1))
-            / CAST(len(g3) AS DOUBLE) END AS dup3_frac
-FROM sh
-"""
-
-
 def q55_shuffle_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-reproducible corpus shuffle: md5(seed||id) total order —
     first 20 docs of the shuffled stream.  orderBy+limit compiles to
@@ -1888,49 +1476,6 @@ SELECT doc_id,
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
               - n_chars) / 2000.0) AS BIGINT) AS bin
 FROM documents
-"""
-
-
-def q57_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/test decontamination gate: reference = every 37th doc,
-    corpus = the rest; drop corpus docs sharing any word 3-gram with the
-    reference, summarize survivors per language.  Shuffle key is the
-    gram (semi join — no pair blowup on hot grams)."""
-    from etl_opensky_spark.functions.dedup import decontaminate
-
-    # single-parquet-file input = one scan task: spread the (interpreted)
-    # shingle transform across cores before exploding.  A multi-split
-    # production corpus is already parallel and skips this.
-    docs = _t(spark, sf_dir, "documents").repartition(32)
-    reference = docs.filter(F.col("doc_id") % 37 == 0)
-    corpus = docs.filter(F.col("doc_id") % 37 != 0)
-    kept = decontaminate(corpus, reference, "doc_id", "text", n=3)
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.min("doc_id").alias("min_doc_id"),
-    )
-
-
-ORACLE_Q57 = """
-WITH tok AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ts
-  FROM documents
-), sh AS (
-  SELECT doc_id, unnest(
-    CASE WHEN len(ts) < 3 THEN []::VARCHAR[]
-         ELSE list_transform(range(1, len(ts) - 1),
-                             i -> array_to_string(ts[i:i+2], ' ')) END) AS g
-  FROM tok
-), contaminated AS (
-  SELECT DISTINCT c.doc_id
-  FROM sh c JOIN (SELECT DISTINCT g FROM sh WHERE doc_id % 37 = 0) r USING (g)
-  WHERE c.doc_id % 37 <> 0
-)
-SELECT lang, COUNT(*) AS n_docs, MIN(doc_id) AS min_doc_id
-FROM documents
-WHERE doc_id % 37 <> 0
-  AND doc_id NOT IN (SELECT doc_id FROM contaminated)
-GROUP BY lang
 """
 
 
@@ -2018,53 +1563,6 @@ FROM base WHERE k % 5 = 2
 """
 
 
-def q59_strip_common_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level line dedup gate: documents are reshaped one-word-per-
-    line (the synthetic corpus has no newlines), then every 'line' present
-    in more than 77% of documents is stripped — the RefinedWeb-style
-    boilerplate pass.  At that cut the ~19 corpus-hot words go while
-    every document stays alive, so the gate hash-matches the full set of
-    REBUILT texts: order preservation and reassembly are what's verified.
-    (Integer counts make ``count > 0.77*n`` and ``count > floor(0.77*n)``
-    the same predicate, so the Spark and DuckDB cuts agree exactly.)"""
-    from etl_opensky_spark.functions.dedup import strip_common_lines
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .repartition(32)  # single-file input: parallelize the explode
-        .select(
-            "doc_id",
-            F.translate(F.col("text"), " ", "\n").alias("text"),
-            "lang",
-        )
-    )
-    threshold = int(0.77 * docs.count())
-    out = strip_common_lines(docs, "doc_id", "text", max_doc_freq=threshold)
-    return out.select("doc_id", "lang", "text")
-
-
-ORACLE_Q59 = """
-WITH reshaped AS (
-  SELECT doc_id, lang, replace(text, ' ', chr(10)) AS text FROM documents
-), exploded AS (
-  SELECT doc_id, lang, unnest(range(1, len(ls) + 1)) AS pos, ls
-  FROM (SELECT doc_id, lang, string_split(text, chr(10)) AS ls FROM reshaped)
-), lines AS (
-  SELECT doc_id, lang, pos, ls[pos] AS line FROM exploded
-), hot AS (
-  SELECT k FROM (
-    SELECT DISTINCT doc_id, trim(line) AS k FROM lines
-  ) GROUP BY k HAVING COUNT(*) > 0.77 * (SELECT COUNT(*) FROM documents)
-), kept AS (
-  SELECT doc_id, lang, pos, line FROM lines
-  WHERE trim(line) NOT IN (SELECT k FROM hot)
-)
-SELECT doc_id, any_value(lang) AS lang,
-       string_agg(line, chr(10) ORDER BY pos) AS text
-FROM kept GROUP BY doc_id
-"""
-
-
 def q60_stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming gate (`applyInPandasWithState`): per-user
     running (count, total) accumulated across micro-batches over the
@@ -2112,49 +1610,6 @@ ORACLE_Q60 = """
 SELECT user_id, COUNT(*) AS n,
   CAST(SUM(CAST(FLOOR(CAST(value AS DOUBLE) * 1e6) AS BIGINT)) AS DOUBLE) AS total
 FROM events GROUP BY user_id
-"""
-
-
-def q61_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub gate: deterministic emails / IPv4s / phone numbers are
-    woven into each document, then ``redact_pii`` must remove exactly
-    them — the rebuilt strings hash-match an oracle running the same
-    RE2-compatible patterns in DuckDB."""
-    docs = _t(spark, sf_dir, "documents")
-    seeded = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com or 555-123-"),
-            F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-            F.lit(" from 192.168."),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".1 thanks"),
-        ).alias("text"),
-    )
-    return seeded.select(
-        "doc_id", TX.redact_pii(F.col("text")).alias("text")
-    )
-
-
-ORACLE_Q61 = """
-WITH seeded AS (
-  SELECT doc_id,
-    text || ' contact user' || doc_id || '@example.com or 555-123-' ||
-    lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' from 192.168.' ||
-    CAST(doc_id % 256 AS VARCHAR) || '.1 thanks' AS text
-  FROM documents
-)
-SELECT doc_id,
-  regexp_replace(
-    regexp_replace(
-      regexp_replace(text,
-        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '[REDACTED]', 'g'),
-      '\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b', '[REDACTED]', 'g'),
-    '\\+?\\d{3}[-. ]\\d{3,4}[-. ]\\d{4}', '[REDACTED]', 'g') AS text
-FROM seeded
 """
 
 
@@ -2352,51 +1807,6 @@ ORDER BY score DESC, doc_id LIMIT 25
 """
 
 
-def q24_ngram_jaccard_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL-corpus n-gram Jaccard (q69 gates a doc_id<100 subset): word
-    3-gram shingles are selective enough that the inverted-index
-    self-join runs uncapped, with ``max_df`` hot-key pruning active —
-    the corpus-scale configuration of the operator.  max_df is
-    corpus-relative (5% of docs), and pruned grams still count toward
-    set sizes, so jaccard is a documented LOWER BOUND; the oracle
-    replicates the identical pruning."""
-    docs = _t(spark, sf_dir, "documents").repartition(32)
-    # max_df omitted: the corpus-relative 5%-floor-2 rule this gate
-    # proved out IS the op default now (ADVICE r5 watch-item #1)
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.2)
-    return pairs.select(
-        "id_a", "id_b", F.round(F.col("jaccard"), 6).alias("jaccard")
-    )
-
-
-ORACLE_Q24 = """
-WITH grams AS (
-  SELECT DISTINCT doc_id, unnest(
-    CASE WHEN len(ts) < 3 THEN []::VARCHAR[]
-         ELSE list_transform(range(1, len(ts) - 1),
-                             i -> array_to_string(ts[i:i+2], ' ')) END) AS g
-  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ts
-        FROM documents)
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id
-), rare AS (
-  SELECT g FROM grams GROUP BY g
-  HAVING COUNT(*) <= GREATEST(CAST(FLOOR(0.05 * (SELECT COUNT(*) FROM documents)) AS INTEGER), 2)
-), pruned AS (
-  SELECT doc_id, g FROM grams WHERE g IN (SELECT g FROM rare)
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
-  FROM pruned a JOIN pruned b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT id_a, id_b, ROUND(i / (sa.sz + sb.sz - i), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE i / (sa.sz + sb.sz - i) >= 0.2
-"""
-
-
 def q70_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Budgeted corpus selection gate: take documents best-first
     (n_chars DESC as the quality proxy) until 30% of the corpus's total
@@ -2513,82 +1923,6 @@ SELECT l_returnflag, COUNT(*) AS n_items,
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 WHERE o_orderpriority = '1-URGENT'
 GROUP BY l_returnflag
-"""
-
-
-def q73_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window chunking gate: every document's token stream cut
-    into 40-token windows advancing by 30 (10-token overlap) — the
-    training-pipeline step between cleaning and packing.  Narrow
-    per-row explode, no shuffle, no UDF."""
-    docs = _t(spark, sf_dir, "documents")
-    return TX.chunk_documents(docs, "doc_id", "text", window=40, stride=30)
-
-
-ORACLE_Q73 = """
-WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ts
-  FROM documents WHERE length(trim(text)) > 0
-), starts AS (
-  SELECT doc_id, ts, unnest(range(0, len(ts), 30)) AS s
-  FROM toks
-)
-SELECT doc_id,
-  CAST(s // 30 AS INTEGER) AS chunk_idx,
-  array_to_string(ts[s + 1 : s + 40], ' ') AS chunk_text,
-  CAST(len(ts[s + 1 : s + 40]) AS INTEGER) AS chunk_tokens
-FROM starts
-"""
-
-
-def q74_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 keyword-relevance gate over the corpus for a 3-term query.
-    Global stats (N, avgdl, per-term df) come from ONE map-side-combined
-    aggregate; scoring is a narrow per-row pass — zero shuffles.  The
-    oracle replays the identical arithmetic (same association order) so
-    the doubles agree to the rounded precision."""
-    docs = _t(spark, sf_dir, "documents")
-    scored = TX.bm25_scores(
-        docs, "doc_id", "text", ["spark", "vector", "join"], k1=1.2, b=0.75
-    )
-    return scored.select(
-        "doc_id", "matched_terms", F.round("bm25", 6).alias("bm25")
-    )
-
-
-ORACLE_Q74 = """
-WITH base AS (
-  SELECT doc_id,
-    CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         ELSE string_split_regex(trim(lower(text)), '\\s+') END AS ts
-  FROM documents
-), stats AS (
-  SELECT COUNT(*) AS n, AVG(len(ts)) AS avgdl,
-    COUNT(*) FILTER (WHERE list_contains(ts, 'spark'))  AS df0,
-    COUNT(*) FILTER (WHERE list_contains(ts, 'vector')) AS df1,
-    COUNT(*) FILTER (WHERE list_contains(ts, 'join'))   AS df2
-  FROM base
-)
-SELECT doc_id, matched_terms, ROUND(bm25, 6) AS bm25 FROM (
-  SELECT doc_id,
-    CAST(list_contains(ts, 'spark') AS INTEGER)
-      + CAST(list_contains(ts, 'vector') AS INTEGER)
-      + CAST(list_contains(ts, 'join') AS INTEGER) AS matched_terms,
-      (ln(1 + (n - df0 + 0.5) / (df0 + 0.5))
-         * (len(list_filter(ts, x -> x = 'spark')) * 2.2)
-         / (len(list_filter(ts, x -> x = 'spark'))
-            + 1.2 * (0.25 + (0.75 * len(ts)) / avgdl)))
-    + (ln(1 + (n - df1 + 0.5) / (df1 + 0.5))
-         * (len(list_filter(ts, x -> x = 'vector')) * 2.2)
-         / (len(list_filter(ts, x -> x = 'vector'))
-            + 1.2 * (0.25 + (0.75 * len(ts)) / avgdl)))
-    + (ln(1 + (n - df2 + 0.5) / (df2 + 0.5))
-         * (len(list_filter(ts, x -> x = 'join')) * 2.2)
-         / (len(list_filter(ts, x -> x = 'join'))
-            + 1.2 * (0.25 + (0.75 * len(ts)) / avgdl))) AS bm25
-  FROM base CROSS JOIN stats
-)
-WHERE matched_terms > 0
 """
 
 
@@ -2975,35 +2309,6 @@ SELECT prev_type, next_type, COUNT(*) AS n_transitions FROM (
 """
 
 
-def q87_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked edit-distance near-duplicate pairs: documents sharing a
-    first token, levenshtein on the 24-char prefix <= 8.  Integer
-    distances, so no cross-engine float boundary exists."""
-    from etl_opensky_spark.functions.dedup import fuzzy_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    return fuzzy_pairs(
-        docs,
-        "doc_id",
-        "text",
-        block_col=F.substring_index(F.col("text"), " ", 1),
-        max_distance=8,
-        compare_len=24,
-    )
-
-
-ORACLE_Q87 = """
-WITH t AS (
-  SELECT doc_id, substr(text, 1, 24) AS cmp, split_part(text, ' ', 1) AS blk
-  FROM documents
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-  CAST(levenshtein(a.cmp, b.cmp) AS INTEGER) AS distance
-FROM t a JOIN t b ON a.blk = b.blk AND a.doc_id < b.doc_id
-WHERE levenshtein(a.cmp, b.cmp) <= 8
-"""
-
-
 def q88_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed k-means (Lloyd's, k=8, 2 iterations) over the
     embeddings table — the clustering block behind diversity sampling /
@@ -3112,40 +2417,6 @@ lr AS (
 SELECT toks.doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
        CAST(SUM(w) AS BIGINT) AS log_weight_micros
 FROM toks JOIN lr USING (b) GROUP BY toks.doc_id
-"""
-
-
-def q90_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary-coverage gate: the number of distinct tokens that
-    cover 90% of all token occurrences (tokenizer/vocab budgeting).
-    The global frequency-ranked cumulative walk runs through the
-    distributed prefix sum (range buckets + driver offsets), never a
-    one-partition window; strictly-increasing integer cumsums make the
-    boundary rank hash-exact."""
-    from etl_opensky_spark.functions.text import vocab_coverage
-
-    docs = _t(spark, sf_dir, "documents")
-    return vocab_coverage(docs, "text", coverage_pct=90)
-
-
-ORACLE_Q90 = """
-WITH toks AS (
-  SELECT unnest(string_split_regex(lower(text), '\\s+')) AS tok FROM documents
-),
-f AS (SELECT tok, COUNT(*) AS cnt FROM toks WHERE tok <> '' GROUP BY tok),
-t AS (
-  SELECT CAST(SUM(cnt) AS BIGINT) AS total, CAST(COUNT(*) AS BIGINT) AS vocab
-  FROM f
-),
-c AS (
-  SELECT row_number() OVER (ORDER BY cnt DESC, tok) AS rk,
-         SUM(cnt) OVER (ORDER BY cnt DESC, tok ROWS UNBOUNDED PRECEDING) AS cum
-  FROM f
-)
-SELECT CAST(MIN(rk) AS BIGINT) AS vocab_size_at_pct,
-       t.total AS total_tokens, t.vocab AS vocab_size
-FROM c, t WHERE cum >= (90 * t.total + 99) // 100
-GROUP BY t.total, t.vocab
 """
 
 
@@ -3415,90 +2686,6 @@ FROM orders WHERE o_orderstatus = 'F' GROUP BY o_orderstatus
 """
 
 
-def q96_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Posting-list build — the decontamination / search-index
-    primitive: explode documents to DISTINCT (token, doc_id) pairs,
-    group to per-token document frequency plus a sorted, capped posting
-    list.  One shuffle on the token key with map-side distinct;
-    posting lists are bounded (first 15 doc ids via slice) so reducer
-    state stays capped however hot the token.  Top-20 by df under a
-    total order makes the gate deterministic."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = (
-        docs.select("doc_id", F.explode(TX.tokenize(F.col("text"))).alias("token"))
-        .filter(F.col("token").rlike("^[a-z]{4,}$"))
-        .distinct()
-    )
-    idx = pairs.groupBy("token").agg(
-        F.count("*").alias("df"),
-        F.slice(F.sort_array(F.collect_list("doc_id")), 1, 15).alias("postings"),
-    )
-    return idx.orderBy(F.col("df").desc(), F.col("token").asc()).limit(20)
-
-
-ORACLE_Q96 = r"""
-WITH pairs AS (
-  SELECT DISTINCT doc_id, token FROM (
-    SELECT doc_id,
-           unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-    FROM documents) t
-  WHERE regexp_matches(token, '^[a-z]{4,}$')
-)
-SELECT token, COUNT(*) AS df,
-       (list(doc_id ORDER BY doc_id))[1:15] AS postings
-FROM pairs GROUP BY token
-ORDER BY df DESC, token ASC LIMIT 20
-"""
-
-
-def q97_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Accuracy-bound gate for distributed Misra-Gries heavy hitters
-    (``functions.heavyhitters``, q78/q79 pattern): for every token
-    whose EXACT count exceeds n/k, the merged k-counter summary must
-    contain it with ``true - n/(k+1) <= est <= true`` — the documented
-    MG contract, valid under ANY partition layout.  DuckDB supplies
-    the exact heavy set and TRUE; if the sketch ever breaks its bound
-    the hash mismatches.  At 100 TB the summary is the only fixed-state
-    plan: k counters per partition, k rows per partition merged."""
-    from etl_opensky_spark.functions.heavyhitters import misra_gries
-
-    k = 48
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(TX.tokenize(F.col("text"))).alias("token")
-    ).filter(F.col("token").rlike("^[a-z]+$"))
-    merged = misra_gries(toks, "token", k=k)
-    exact = toks.groupBy("token").agg(F.count("*").alias("exact_cnt"))
-    total = toks.groupBy().agg(F.count("*").alias("_n"))
-    heavy = exact.join(F.broadcast(total)).filter(
-        F.col("exact_cnt") * k > F.col("_n")
-    )
-    return heavy.join(
-        merged, heavy["token"] == merged["item"], "left"
-    ).select(
-        "token",
-        "exact_cnt",
-        (
-            F.col("est").isNotNull()
-            & (F.col("est") <= F.col("exact_cnt"))
-            & ((F.col("exact_cnt") - F.col("est")) * (k + 1) <= F.col("_n"))
-        ).alias("within_bound"),
-    )
-
-
-ORACLE_Q97 = r"""
-WITH toks AS (
-  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-  FROM documents
-), clean AS (
-  SELECT token FROM toks WHERE regexp_matches(token, '^[a-z]+$')
-)
-SELECT token, COUNT(*) AS exact_cnt, TRUE AS within_bound
-FROM clean GROUP BY token
-HAVING COUNT(*) * 48 > (SELECT COUNT(*) FROM clean)
-"""
-
-
 def q98_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over the event-type transition graph
     (``functions.graph`` — link-graph centrality for source-quality
@@ -3548,38 +2735,6 @@ def _oracle_q98() -> str:
 
 
 ORACLE_Q98 = _oracle_q98()
-
-
-def q99_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact substring-level duplicate pairs (functions.dedup.
-    substring_dup_pairs — Lee et al. 2022 semantics, inverted-index
-    shape): doc pairs sharing verbatim 40-char windows, top-20 by
-    shared-window count under a total order.  sample_mod=1 here (exact,
-    oracle-matched); content-defined window sampling (sample_mod>1,
-    winnowing-style — alignment-free) is the 100 TB path."""
-    from etl_opensky_spark.functions.dedup import substring_dup_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = substring_dup_pairs(docs, "doc_id", "text", window=40, max_df=10)
-    return pairs.orderBy(
-        F.col("n_shared").desc(), F.col("doc_a").asc(), F.col("doc_b").asc()
-    ).limit(20)
-
-
-ORACLE_Q99 = """
-WITH wins AS (
-  SELECT doc_id, md5(substr(text, p, 40)) AS h FROM (
-    SELECT doc_id, text,
-           unnest(generate_series(1, length(text) - 39)) AS p
-    FROM documents WHERE length(text) >= 40) t
-), grams AS (SELECT DISTINCT doc_id, h FROM wins),
-rare AS (SELECT h FROM grams GROUP BY h HAVING COUNT(*) BETWEEN 2 AND 10)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-FROM grams a JOIN rare USING (h) JOIN grams b USING (h)
-WHERE a.doc_id < b.doc_id
-GROUP BY doc_a, doc_b
-ORDER BY n_shared DESC, doc_a, doc_b LIMIT 20
-"""
 
 
 def q100_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4033,89 +3188,6 @@ FROM events GROUP BY 1
 """
 
 
-def q112_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document tf-idf top-5 keyword extraction
-    (text.tfidf_top_terms): one corpus word-count aggregate whose
-    shuffle output is REUSED for the df table (ReusedExchange, no
-    second corpus pass), micro-quantized idf so scores are exact
-    integers, per-doc bounded top-k window."""
-    docs = _t(spark, sf_dir, "documents")
-    return TX.tfidf_top_terms(docs, "doc_id", "text", top_k=5, min_df=2)
-
-
-ORACLE_Q112 = """
-WITH toks AS (
-  SELECT doc_id,
-    unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
-  FROM documents
-), t2 AS (
-  SELECT doc_id, term FROM toks WHERE term <> ''
-), doc_tf AS (
-  SELECT doc_id, term, COUNT(*) AS tf FROM t2 GROUP BY doc_id, term
-), dfq AS (
-  SELECT term, COUNT(*) AS df FROM doc_tf GROUP BY term
-), n AS (
-  SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents
-), idf AS (
-  SELECT term,
-    CAST(round(ln(CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE))
-               * 1000000.0) AS BIGINT) AS idf_micros
-  FROM dfq, n WHERE df >= 2
-), scored AS (
-  SELECT doc_id, doc_tf.term, CAST(tf AS BIGINT) AS tf,
-    CAST(tf * idf_micros AS BIGINT) AS tfidf_micros
-  FROM doc_tf JOIN idf USING (term)
-)
-SELECT doc_id, term, tf, tfidf_micros, CAST(rn AS INTEGER) AS term_rank
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY doc_id
-                               ORDER BY tfidf_micros DESC, term) AS rn
-  FROM scored
-) WHERE rn <= 5
-"""
-
-
-def q114_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-filtered set-similarity self-join (dedup.
-    prefix_jaccard_pairs, PPJoin family): all doc pairs with token-set
-    Jaccard >= 4/5, candidates generated ONLY from rarest-first token
-    prefixes — lossless by the pigeonhole bound, verified here by the
-    gate itself: the oracle is the BRUTE-FORCE all-shared-token join,
-    and the results must hash-match exactly.  Gate corpus bounded to
-    doc_id < 300 (the brute-force oracle is quadratic in shared
-    tokens; the operator is the scale path)."""
-    from etl_opensky_spark.functions.dedup import prefix_jaccard_pairs
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return prefix_jaccard_pairs(
-        docs, "doc_id", "text", threshold_num=4, threshold_den=5
-    )
-
-
-ORACLE_Q114 = """
-WITH dt AS (
-  SELECT DISTINCT doc_id, tok FROM (
-    SELECT doc_id,
-      unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
-    FROM documents WHERE doc_id < 300
-  ) WHERE tok <> ''
-), sz AS (
-  SELECT doc_id, COUNT(*) AS n FROM dt GROUP BY doc_id
-), pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-    CAST(COUNT(*) AS BIGINT) AS n_common
-  FROM dt a JOIN dt b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b, n_common,
-  sa.n AS size_a, sb.n AS size_b
-FROM pairs
-JOIN sz sa ON sa.doc_id = id_a
-JOIN sz sb ON sb.doc_id = id_b
-WHERE n_common * 5 >= (sa.n + sb.n - n_common) * 4
-"""
-
-
 def q115_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group EXACT equal-frequency binning (aggregates.
     equal_frequency_bins): events discretized into value deciles per
@@ -4362,60 +3434,6 @@ SELECT as_of, COUNT(*) AS n_probes,
               THEN CAST(c_acctbal AS DECIMAL(18,2)) - 100
           END) AS DOUBLE) AS sum_bal
 FROM probes GROUP BY as_of
-"""
-
-
-def q122_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document contamination FRACTION (the reporting sibling of
-    q57's binary decontamination): share of each doc's distinct
-    3-grams that also appear in a benchmark set (docs 0–19) — the
-    overlap statistic an eval-contamination report publishes.  Shape:
-    distinct n-grams per doc, LEFT SEMI-flagged against the broadcast
-    benchmark n-gram set, one count aggregate; exact integers."""
-    from etl_opensky_spark.functions.text import word_shingle_rows
-
-    docs = _t(spark, sf_dir, "documents")
-    # distinct gram rows via the exploded-index codegen shape (round 11)
-    grams = word_shingle_rows(
-        docs, "doc_id", "text", 3, distinct=True
-    ).withColumnRenamed("_g", "g")
-    bench = (
-        grams.filter(F.col("doc_id") < 20).select("g").distinct()
-        .withColumn("_hit", F.lit(1))
-    )
-    rest = grams.filter(F.col("doc_id") >= 20)
-    return (
-        rest.join(F.broadcast(bench), "g", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_grams"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_overlap"),
-        )
-    )
-
-
-ORACLE_Q122 = """
-WITH toks AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                x -> x <> '') AS ts
-  FROM documents
-), grams AS (
-  SELECT DISTINCT doc_id,
-    array_to_string(ts[CAST(i AS INTEGER) : CAST(i AS INTEGER) + 2], ' ')
-      AS g
-  FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 1)) AS i
-        FROM toks WHERE len(ts) >= 3)
-), bench AS (
-  SELECT DISTINCT g FROM grams WHERE doc_id < 20
-)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-  CAST(COUNT(*) FILTER (WHERE g IN (SELECT g FROM bench)) AS BIGINT)
-    AS n_overlap
-FROM grams WHERE doc_id >= 20
-GROUP BY doc_id
 """
 
 
@@ -5361,52 +4379,6 @@ FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day = d.day
 """
 
 
-def q142_hashed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashed linear text classifier inference (``functions.text.
-    hashed_linear_score``) — the fastText serving shape: unigram+bigram
-    features, integer hashed weights, ONE codegen'd Column expression
-    per row (no explode, no shuffle, no Python).  Weights are
-    md5-derived stand-ins; a trained model swaps in a broadcast weight
-    table without changing the scoring plan.  Gate groups score sign by
-    language."""
-    from etl_opensky_spark.functions.text import hashed_linear_score
-
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.withColumn("score", hashed_linear_score(F.col("text")))
-    return scored.groupBy("lang").agg(
-        F.sum(F.when(F.col("score") > 0, 1).otherwise(0)).alias("n_pos"),
-        F.sum(F.when(F.col("score") <= 0, 1).otherwise(0)).alias("n_neg"),
-        F.sum("score").alias("sum_score"),
-    )
-
-
-ORACLE_Q142 = """
-WITH toks AS (
-  SELECT doc_id, lang,
-    unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok,
-    generate_subscripts(string_split_regex(lower(trim(text)), '\\s+'), 1) AS ord
-  FROM documents
-), feats AS (
-  SELECT doc_id, lang, ord,
-    CAST(CONCAT('0x', substr(md5(tok), 1, 4)) AS INTEGER) % 2001 - 1000 AS w_uni,
-    CASE WHEN lead(tok) OVER (PARTITION BY doc_id ORDER BY ord) IS NULL
-         THEN 0
-         ELSE CAST(CONCAT('0x', substr(md5(
-                tok || ' ' || lead(tok) OVER (PARTITION BY doc_id ORDER BY ord)
-              ), 1, 4)) AS INTEGER) % 2001 - 1000 END AS w_bi
-  FROM toks
-), scores AS (
-  SELECT doc_id, lang, SUM(w_uni) + SUM(w_bi) AS score
-  FROM feats GROUP BY 1, 2
-)
-SELECT lang,
-  SUM(CASE WHEN score > 0 THEN 1 ELSE 0 END) AS n_pos,
-  SUM(CASE WHEN score <= 0 THEN 1 ELSE 0 END) AS n_neg,
-  CAST(SUM(score) AS BIGINT) AS sum_score
-FROM scores GROUP BY 1
-"""
-
-
 def q143_hopping_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping (sliding) time windows — ``F.window(ts, '6 hours',
     '2 hours')``: every event lands in exactly 3 overlapping windows,
@@ -5544,67 +4516,6 @@ WHERE NOT EXISTS (
   SELECT 1 FROM d b
   WHERE b.p_retailprice <= a.p_retailprice AND b.p_size >= a.p_size
     AND (b.p_retailprice < a.p_retailprice OR b.p_size > a.p_size))
-"""
-
-
-def q147_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token Shannon entropy — the corpus-diversity /
-    quality signal.  Decomposed for exactness: H = ln(N) − S/N with
-    ``S = Σ cnt·ln(cnt)``; each distinct count's ln is micro-quantized
-    ONCE (the q89 integer-micros rule), so S is an exact integer
-    sum, partitioning-invariant, and the single final division happens
-    in double identically in both engines.  Two shuffles (token counts,
-    then per-source sum) — no sort, no window."""
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )  # single parquet file = single task; spread BEFORE the explode
-    toks = docs.select(
-        "source", F.explode(TX.tokenize(F.col("text"))).alias("tok")
-    )
-    counts = toks.groupBy("source", "tok").agg(F.count("*").alias("cnt"))
-    per_source = counts.groupBy("source").agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.sum(
-            F.col("cnt")
-            * F.round(F.log(F.col("cnt").cast("double")) * 1_000_000.0).cast(
-                "bigint"
-            )
-        ).alias("s_micros"),
-        F.count("*").alias("n_types"),
-    )
-    return per_source.select(
-        "source",
-        "n_tokens",
-        "n_types",
-        "s_micros",
-        (
-            F.log(F.col("n_tokens").cast("double"))
-            - (F.col("s_micros").cast("double") / 1e6)
-            / F.col("n_tokens").cast("double")
-        ).alias("entropy_nats"),
-    )
-
-
-ORACLE_Q147 = """
-WITH toks AS (
-  SELECT source,
-    unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
-  FROM documents
-), counts AS (
-  SELECT source, tok, COUNT(*) AS cnt FROM toks GROUP BY 1, 2
-), per_source AS (
-  SELECT source,
-    CAST(SUM(cnt) AS BIGINT) AS n_tokens,
-    CAST(SUM(cnt * CAST(ROUND(ln(CAST(cnt AS DOUBLE)) * 1000000) AS BIGINT))
-         AS BIGINT) AS s_micros,
-    COUNT(*) AS n_types
-  FROM counts GROUP BY 1
-)
-SELECT source, n_tokens, n_types, s_micros,
-  ln(CAST(n_tokens AS DOUBLE))
-    - (CAST(s_micros AS DOUBLE) / 1e6) / CAST(n_tokens AS DOUBLE)
-    AS entropy_nats
-FROM per_source
 """
 
 
@@ -6084,7 +4995,7 @@ GROUP BY 1, 2
 def q160_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch point queries (``functions.heavyhitters.
     countmin_estimates``) — the over-estimating mergeable complement to
-    Misra–Gries (q97): cells built from the KEY-COUNT table (never
+    Misra–Gries (``functions.heavyhitters.misra_gries``): cells built from the KEY-COUNT table (never
     depth-fold row explosion), cell table is depth×width rows
     regardless of corpus size, per-partition partials merge by SUM.
     ``over_ok`` is the deterministic ``true <= est`` guarantee."""
@@ -6605,57 +5516,6 @@ GROUP BY 1
 """
 
 
-def q171_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end corpus-curation composition — the realistic shape a
-    training-data job takes: language filter → token-count quality gate
-    → exact near-normalized dedup (whitespace-collapsed md5, earliest
-    doc wins via ``min_by``) → per-language report.  Every stage is an
-    operator gated elsewhere (q23/q22/q07); this gate pins that the
-    COMPOSITION stays correct — filters before the dedup shuffle
-    (semi-reduction first), one groupBy on the fingerprint, one on
-    lang."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = TX.token_count(F.col("text"))
-    fp = F.md5(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    )
-    filtered = (
-        docs.filter(F.col("lang").isin("en", "es"))
-        .withColumn("toks", toks)
-        .filter(F.col("toks") >= 5)
-        .withColumn("fp", fp)
-    )
-    kept = filtered.groupBy("lang", "fp").agg(
-        F.min("doc_id").alias("keep_id"),
-        F.min("toks").alias("toks"),  # constant within fp group
-    )
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_docs_kept"),
-        F.sum("toks").cast("bigint").alias("sum_tokens"),
-        F.min("keep_id").alias("first_doc"),
-    )
-
-
-ORACLE_Q171 = """
-WITH f AS (
-  SELECT doc_id, lang,
-    CASE WHEN length(trim(text)) = 0 THEN 0
-         ELSE len(string_split_regex(trim(lower(text)), '\\s+')) END AS toks,
-    md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
-  FROM documents WHERE lang IN ('en', 'es')
-), q AS (
-  SELECT * FROM f WHERE toks >= 5
-), kept AS (
-  SELECT lang, fp, MIN(doc_id) AS keep_id, MIN(toks) AS toks
-  FROM q GROUP BY 1, 2
-)
-SELECT lang, COUNT(*) AS n_docs_kept,
-  CAST(SUM(toks) AS BIGINT) AS sum_tokens,
-  MIN(keep_id) AS first_doc
-FROM kept GROUP BY 1
-"""
-
-
 def q172_ivm_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance with retractions
     (``operators.aggregates.apply_agg_delta``): a keyed (count, sum)
@@ -6767,67 +5627,6 @@ SELECT p_size, COUNT(*) AS n_rows,
   CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty_sum
 FROM li JOIN part ON li.skew_key = part.p_partkey
 GROUP BY 1
-"""
-
-
-def q174_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end entity resolution: blocked edit-distance matching
-    (q87's ``fuzzy_pairs``) → connected components → canonical id per
-    cluster → cluster-size distribution.  The standard record-linkage
-    pipeline (block → compare → cluster → canonicalize) composed from
-    gated operators; the oracle closes the SAME pair predicate with a
-    recursive CTE (q83's transitive-truth pattern), so the distributed
-    components must agree with exact closure."""
-    from etl_opensky_spark.functions.dedup import (
-        connected_components,
-        fuzzy_pairs,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = fuzzy_pairs(
-        docs,
-        "doc_id",
-        "text",
-        block_col=F.substring_index(F.col("text"), " ", 1),
-        max_distance=8,
-        compare_len=24,
-    )
-    comp = connected_components(pairs, docs.select("doc_id"), "doc_id")
-    clusters = comp.groupBy("component").agg(
-        F.count("*").alias("cluster_size")
-    )
-    return clusters.groupBy("cluster_size").agg(
-        F.count("*").cast("bigint").alias("n_clusters"),
-        F.sum("component").cast("bigint").alias("canonical_id_sum"),
-    )
-
-
-ORACLE_Q174 = """
-WITH RECURSIVE t AS (
-  SELECT doc_id, substr(text, 1, 24) AS cmp, split_part(text, ' ', 1) AS blk
-  FROM documents
-), pairs AS (
-  SELECT a.doc_id AS u, b.doc_id AS v
-  FROM t a JOIN t b ON a.blk = b.blk AND a.doc_id < b.doc_id
-  WHERE levenshtein(a.cmp, b.cmp) <= 8
-), edges AS (
-  SELECT u, v FROM pairs UNION SELECT v, u FROM pairs
-), reach(a, b) AS (
-  SELECT u, v FROM edges
-  UNION
-  SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u WHERE e.v <> r.a
-), comp AS (
-  SELECT d.doc_id,
-    LEAST(d.doc_id,
-          COALESCE((SELECT MIN(b) FROM reach WHERE a = d.doc_id),
-                   d.doc_id)) AS component
-  FROM documents d
-), clusters AS (
-  SELECT component, COUNT(*) AS cluster_size FROM comp GROUP BY 1
-)
-SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
-  CAST(SUM(component) AS BIGINT) AS canonical_id_sum
-FROM clusters GROUP BY 1
 """
 
 
@@ -6957,8 +5756,8 @@ def q178_udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF surface (Spark 4, Arrow-batched): a table function
     exploding text into (word, position) rows via SQL ``LATERAL`` —
     the §2.13 UDF-surface extension for logic that genuinely needs
-    Python row generation.  Deliberately NOT the hot path (the engine's
-    tokenizers are Column expressions); the gate pins the UDTF
+    Python row generation.  Deliberately NOT the hot path (tokenizing
+    belongs in Column expressions); the gate pins the UDTF
     machinery itself: lateral correlation, batching, ordinal
     faithfulness."""
     from pyspark.sql.functions import udtf
@@ -7640,59 +6439,6 @@ GROUP BY p_brand
 """
 
 
-def q191_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style boilerplate removal (``functions.text.
-    remove_boilerplate_chunks``): fixed-width word chunks appearing in
-    ≥3 distinct documents are dropped corpus-wide and each document is
-    reassembled from its surviving chunks.  Chunking never explodes
-    below chunk granularity (pure array-slice expressions), the
-    document-frequency pass shuffles hashes only, and the boilerplate
-    set drives a broadcast anti-join — the within-corpus complement to
-    cross-doc near-dedup (q83) and substring dedup (q99)."""
-    docs = _t(spark, sf_dir, "documents")
-    out = TX.remove_boilerplate_chunks(
-        docs, "doc_id", "text", chunk_words=8, min_doc_freq=3
-    )
-    return out.select(
-        "doc_id",
-        F.md5("clean_text").alias("clean_md5"),
-        "n_chunks",
-        "n_removed",
-    )
-
-
-ORACLE_Q191 = """
-WITH base AS (
-  SELECT doc_id, string_split(text, ' ') AS l FROM documents
-), ch AS (
-  SELECT doc_id,
-    unnest(range(CAST(GREATEST(CEIL(len(l) / 8.0), 1) AS BIGINT))) AS cpos,
-    l
-  FROM base
-), chunks AS (
-  SELECT doc_id, cpos,
-    array_to_string(l[cpos * 8 + 1 : cpos * 8 + 8], ' ') AS chunk
-  FROM ch
-), common AS (
-  SELECT md5(chunk) AS h FROM chunks
-  GROUP BY 1 HAVING COUNT(DISTINCT doc_id) >= 3
-), kept AS (
-  SELECT doc_id, cpos, chunk FROM chunks
-  WHERE md5(chunk) NOT IN (SELECT h FROM common)
-), rebuilt AS (
-  SELECT doc_id, string_agg(chunk, ' ' ORDER BY cpos) AS clean_text,
-    COUNT(*) AS n_kept
-  FROM kept GROUP BY doc_id
-), totals AS (
-  SELECT doc_id, COUNT(*) AS n_chunks FROM chunks GROUP BY doc_id
-)
-SELECT t.doc_id, md5(COALESCE(r.clean_text, '')) AS clean_md5,
-  CAST(t.n_chunks AS INTEGER) AS n_chunks,
-  CAST(t.n_chunks - COALESCE(r.n_kept, 0) AS INTEGER) AS n_removed
-FROM totals t LEFT JOIN rebuilt r USING (doc_id)
-"""
-
-
 def q192_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML source/sink parity (``sources.files.write_xml/read_xml`` —
     Spark 4's built-in ``xml`` format, the spark-xml package folded
@@ -7780,7 +6526,7 @@ def q194_hll_sketch_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     industry-interchange sketch (binary-compatible across Spark /
     Druid / Hive / PostgreSQL datasketches extensions), complementing
     the from-scratch engine-exact registers of q161.  Accuracy-bound
-    gate in the q63/q78 style: per event type, the estimate must land
+    gate in the q78 style: per event type, the estimate must land
     within 5% of the exact distinct-user count (measured error at
     sf0.1 is 0.4%; lgK=12 gives ~1.6% RSE, so the bound has wide
     margin) — the oracle recomputes the exact counts and pins
@@ -8334,11 +7080,11 @@ FROM events GROUP BY event_type
 def q207_scalar_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar (Series→Series) pandas UDF — the last §2.13 Arrow-surface
     member (scalar here; grouped-agg q201, grouped-map in
-    operators/grouped.py, mapInPandas in dedup.simhash_vectorized,
+    operators/grouped.py, mapInPandas in sources/rest.py,
     UDTF q178): vectorized string stats over the Arrow batch,
     integer-exact so the SQL replay matches bit-for-bit.  Deliberately
-    NOT the hot path — the engine's own text stats are Column
-    expressions (functions/text.py); the gate pins the scalar-UDF
+    NOT the hot path — string stats belong in Column
+    expressions; the gate pins the scalar-UDF
     machinery: batching, null passthrough, multiple UDFs in one
     projection."""
     import pandas as pd  # noqa: F401
@@ -8544,7 +7290,7 @@ def q214_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5 of the first-8-word prefix — the blocking fingerprint that
     actually clusters this corpus's tail-perturbed near-dups: 500 docs
     → 476 clusters at sf0.01), keep the HIGHEST-quality row (longest
-    text, ties → smallest doc_id) instead of q171's earliest-wins —
+    text, ties → smallest doc_id) instead of earliest-wins —
     the curation policy real pipelines want (the dup copy with the
     least truncation survives).  One max_by aggregate per fingerprint
     (map-side combinable, struct-ordered tie-break); no window, no
@@ -8580,79 +7326,6 @@ WITH ranked AS (
   FROM documents
 )
 SELECT doc_id, lang, n_chars FROM ranked WHERE rn = 1
-"""
-
-
-def q215_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL dedup against a persisted corpus index — the
-    daily-ingest shape none of q63/q83 cover: the corpus's LSH band
-    index is built ONCE (``dedup.build_dedup_index`` → parquet), and
-    each incoming batch (10% of docs by ``doc_id % 10 = 7``) is
-    banded, probed against the index, and exact-verified ONLY against
-    candidate corpus docs (semi-join pruned) — the corpus is never
-    rescanned per batch.  All hashing is md5 (SQL-replayable), and the
-    Jaccard ≥ 1/2 verify is pure integer arithmetic (3·i ≥ sa+sb), so
-    the oracle replays the ENTIRE index→probe→verify pipeline
-    bit-exactly — candidate recall included."""
-    from etl_opensky_spark.functions.dedup import (
-        build_dedup_index,
-        dedup_batch_against_index,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 10 != 7)
-    batch = docs.filter(F.col("doc_id") % 10 == 7)
-    index_path = _gate_tmp("q215_index", sf_dir)
-    build_dedup_index(corpus, "doc_id", "text", index_path)
-    kept = dedup_batch_against_index(
-        spark, batch, corpus, index_path, "doc_id", "text"
-    )
-    return kept.select("doc_id", "lang", "n_chars")
-
-
-ORACLE_Q215 = r"""
-WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS ts
-  FROM documents
-), grams AS (
-  SELECT DISTINCT doc_id, unnest(
-    CASE WHEN len(ts) < 3 THEN []::VARCHAR[]
-         ELSE list_transform(range(1, len(ts) - 1),
-                             i -> array_to_string(ts[i:i+2], ' ')) END) AS g
-  FROM toks
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id
-), mh AS (
-  SELECT doc_id, h,
-    MIN(CAST(CONCAT('0x', substr(md5(CONCAT_WS(':', CAST(h AS VARCHAR), g)),
-      1, 15)) AS BIGINT)) AS v
-  FROM grams CROSS JOIN (SELECT unnest(range(16)) AS h)
-  GROUP BY doc_id, h
-), bands AS (
-  SELECT doc_id, CAST(h // 4 AS INTEGER) AS band,
-    CAST(CONCAT('0x', substr(md5(CONCAT_WS(':', CAST(h // 4 AS VARCHAR),
-      string_agg(CAST(v AS VARCHAR), ',' ORDER BY h))), 1, 15)) AS BIGINT)
-      AS bh
-  FROM mh GROUP BY doc_id, h // 4
-), cand AS (
-  SELECT DISTINCT b.doc_id AS bid, c.doc_id AS cid
-  FROM bands b JOIN bands c ON b.band = c.band AND b.bh = c.bh
-  WHERE b.doc_id % 10 = 7 AND c.doc_id % 10 <> 7
-), inter AS (
-  SELECT cand.bid, cand.cid, COUNT(*) AS i
-  FROM cand
-  JOIN grams ga ON ga.doc_id = cand.bid
-  JOIN grams gb ON gb.doc_id = cand.cid AND gb.g = ga.g
-  GROUP BY cand.bid, cand.cid
-), dups AS (
-  SELECT DISTINCT inter.bid
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = inter.bid
-  JOIN sizes sb ON sb.doc_id = inter.cid
-  WHERE 3 * inter.i >= sa.sz + sb.sz
-)
-SELECT doc_id, lang, n_chars FROM documents
-WHERE doc_id % 10 = 7 AND doc_id NOT IN (SELECT bid FROM dups)
 """
 
 
@@ -9084,118 +7757,6 @@ SELECT event_type, d, vm,
   END AS vm_interp
 FROM ctx
 """
-
-
-def q227_sequential_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SEQUENTIAL incremental dedup with index MAINTENANCE — the full
-    daily-ingest loop q215 only half-covers: three successive batches
-    (doc_id %10 = 7, 8, 9) each probe the persisted LSH index, and the
-    SURVIVORS' band rows are APPENDED to the index
-    (``dedup.append_to_dedup_index``) before the next batch arrives —
-    so batch 2 dedups against corpus ∪ kept₁, batch 3 against
-    corpus ∪ kept₁ ∪ kept₂.  Each kept set is materialized
-    (localCheckpoint) BEFORE its append — a lazy result evaluated after
-    the append would see its own band rows and self-match.  The oracle
-    unrolls the whole three-stage recursion: the same md5 band +
-    integer-Jaccard pipeline per stage, each stage's candidate corpus
-    extended by the previous stages' survivors (AS MATERIALIZED per the
-    q113 lesson — bands/grams feed every stage)."""
-    import shutil
-
-    from etl_opensky_spark.functions.dedup import (
-        build_dedup_index,
-        dedup_and_index_batch,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 10 <= 6)
-    index_path = _gate_tmp("q227_index", sf_dir)
-    shutil.rmtree(index_path, ignore_errors=True)
-    build_dedup_index(corpus, "doc_id", "text", index_path)
-
-    kept_all = None
-    for m in (7, 8, 9):
-        batch = docs.filter(F.col("doc_id") % 10 == m)
-        # fused probe + materialize + index append (round 11): the kept
-        # docs' band rows are filtered from the probe's band table
-        # instead of re-hashed; decisions still pin BEFORE the append
-        kept = dedup_and_index_batch(
-            spark, batch, corpus, index_path, "doc_id", "text"
-        )
-        corpus = corpus.unionByName(kept)
-        kept_all = kept if kept_all is None else kept_all.unionByName(kept)
-    return kept_all.select("doc_id", "lang", "n_chars")
-
-
-def _oracle_q227() -> str:
-    # shared band/gram machinery identical to ORACLE_Q215; one
-    # (cand/inter/dups/kept) block per batch, each stage's corpus =
-    # base corpus ∪ previous stages' kept ids
-    head = r"""
-WITH toks AS MATERIALIZED (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS ts
-  FROM documents
-), grams AS MATERIALIZED (
-  SELECT DISTINCT doc_id, unnest(
-    CASE WHEN len(ts) < 3 THEN []::VARCHAR[]
-         ELSE list_transform(range(1, len(ts) - 1),
-                             i -> array_to_string(ts[i:i+2], ' ')) END) AS g
-  FROM toks
-), sizes AS MATERIALIZED (
-  SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id
-), mh AS MATERIALIZED (
-  SELECT doc_id, h,
-    MIN(CAST(CONCAT('0x', substr(md5(CONCAT_WS(':', CAST(h AS VARCHAR), g)),
-      1, 15)) AS BIGINT)) AS v
-  FROM grams CROSS JOIN (SELECT unnest(range(16)) AS h)
-  GROUP BY doc_id, h
-), bands AS MATERIALIZED (
-  SELECT doc_id, CAST(h // 4 AS INTEGER) AS band,
-    CAST(CONCAT('0x', substr(md5(CONCAT_WS(':', CAST(h // 4 AS VARCHAR),
-      string_agg(CAST(v AS VARCHAR), ',' ORDER BY h))), 1, 15)) AS BIGINT)
-      AS bh
-  FROM mh GROUP BY doc_id, h // 4
-)"""
-    stages = ""
-    prev_kept: list[str] = []
-    for k, m in enumerate((7, 8, 9), start=1):
-        in_corpus = "c.doc_id % 10 <= 6"
-        for p in prev_kept:
-            in_corpus += f" OR c.doc_id IN (SELECT doc_id FROM {p})"
-        stages += f""",
-cand{k} AS (
-  SELECT DISTINCT b.doc_id AS bid, c.doc_id AS cid
-  FROM bands b JOIN bands c ON b.band = c.band AND b.bh = c.bh
-  WHERE b.doc_id % 10 = {m} AND ({in_corpus})
-), inter{k} AS (
-  SELECT cand{k}.bid, cand{k}.cid, COUNT(*) AS i
-  FROM cand{k}
-  JOIN grams ga ON ga.doc_id = cand{k}.bid
-  JOIN grams gb ON gb.doc_id = cand{k}.cid AND gb.g = ga.g
-  GROUP BY cand{k}.bid, cand{k}.cid
-), dups{k} AS (
-  SELECT DISTINCT inter{k}.bid
-  FROM inter{k}
-  JOIN sizes sa ON sa.doc_id = inter{k}.bid
-  JOIN sizes sb ON sb.doc_id = inter{k}.cid
-  WHERE 3 * inter{k}.i >= sa.sz + sb.sz
-), kept{k} AS MATERIALIZED (
-  SELECT doc_id FROM documents
-  WHERE doc_id % 10 = {m}
-    AND doc_id NOT IN (SELECT bid FROM dups{k})
-)"""
-        prev_kept.append(f"kept{k}")
-    union = " UNION ALL ".join(
-        f"SELECT doc_id FROM kept{k}" for k in range(1, 4)
-    )
-    return (
-        head
-        + stages
-        + f"""
-SELECT d.doc_id, d.lang, d.n_chars
-FROM documents d JOIN ({union}) kept ON d.doc_id = kept.doc_id
-"""
-    )
 
 
 def q226_lake_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10457,65 +9018,6 @@ FROM d JOIN s USING (weekday)
 """
 
 
-def q249_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ASYMMETRIC containment dedup (``dedup.containment_pairs``) — the
-    snippet-in-document detector symmetric Jaccard (q24/q69) misses: a
-    short passage pasted into a much larger page scores Jaccard ~0 but
-    containment ~1.  3-gram sets, score = |A∩B|/min(|A|,|B|) in exact
-    integer micros, smaller set is the contained side.  Runs the op's
-    DEFAULT configuration — corpus-relative ``max_df`` stop-gram
-    pruning (5 % floor 2), under which the score is a documented lower
-    bound; the oracle replays the identical pruning, candidate join,
-    and integer arithmetic."""
-    from etl_opensky_spark.functions.dedup import containment_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    return containment_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.5
-    )
-
-
-ORACLE_Q249 = """
-WITH toklists AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                x -> x <> '') AS ts
-  FROM documents
-), grams AS (
-  SELECT DISTINCT doc_id,
-    ts[CAST(i AS INTEGER)] || ' ' || ts[CAST(i AS INTEGER) + 1] || ' '
-      || ts[CAST(i AS INTEGER) + 2] AS g
-  FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 1)) AS i
-        FROM toklists WHERE len(ts) >= 3)
-), sizes AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz FROM grams GROUP BY 1
-), cap AS (
-  SELECT GREATEST(CAST(FLOOR(0.05 * COUNT(*)) AS BIGINT), 2) AS max_df
-  FROM documents
-), kept AS (
-  SELECT doc_id, g FROM grams
-  WHERE g IN (SELECT g FROM grams GROUP BY g
-              HAVING COUNT(*) <= (SELECT max_df FROM cap))
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-    CAST(COUNT(*) AS BIGINT) AS i
-  FROM kept a JOIN kept b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), scored AS (
-  SELECT id_a, id_b, sa.sz AS sza, sb.sz AS szb,
-    CAST((1000000 * i) // LEAST(sa.sz, sb.sz) AS BIGINT)
-      AS containment_micros
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = id_a
-  JOIN sizes sb ON sb.doc_id = id_b
-)
-SELECT CASE WHEN szb < sza THEN id_b ELSE id_a END AS contained_id,
-       CASE WHEN szb < sza THEN id_a ELSE id_b END AS container_id,
-       containment_micros
-FROM scored WHERE containment_micros >= 500000
-"""
-
-
 def q250_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME-RESPECTING earliest-arrival reachability
     (``graph.temporal_reachability``) over the timed event-type
@@ -10978,64 +9480,6 @@ SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
       ELSE cents * (CAST(1 AS BIGINT) << CAST(40 - kk AS INTEGER)) END)
     AS score_scaled
 FROM k GROUP BY user_id
-"""
-
-
-def q259_rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa (``functions.evaluation.cohens_kappa``) between the
-    corpus's stored ``lang`` labels and the stopword-hit ``lang_id``
-    heuristic — chance-corrected annotator/classifier agreement, the
-    label-quality gate of an annotation pipeline.  Cleared of
-    denominators the statistic is exact integers; the oracle replays
-    the q23 lang-id CASE plus the marginal-product identity."""
-    from etl_opensky_spark.functions.evaluation import cohens_kappa
-
-    docs = _t(spark, sf_dir, "documents")
-    pred = docs.select(
-        F.col("lang").alias("gold"),
-        TX.lang_id(F.col("text")).alias("pred"),
-    )
-    out = cohens_kappa(pred, "gold", "pred")
-    return out.select(
-        "n", "agree", "pe_num", "kappa_num", "kappa_den",
-        F.round("kappa", 9).alias("kappa"),
-    )
-
-
-ORACLE_Q259 = f"""
-WITH toks AS (
-  SELECT lang, string_split_regex(trim(lower(text)), '\\s+') AS t
-  FROM documents
-), hits AS (
-  SELECT lang,
-    len(list_filter(t, x -> x IN ({_SW['de']}))) AS h_de,
-    len(list_filter(t, x -> x IN ({_SW['en']}))) AS h_en,
-    len(list_filter(t, x -> x IN ({_SW['es']}))) AS h_es,
-    len(list_filter(t, x -> x IN ({_SW['fr']}))) AS h_fr
-  FROM toks
-), pred AS (
-  SELECT lang AS a,
-    CASE WHEN greatest(h_de, h_en, h_es, h_fr) = 0 THEN 'und'
-         WHEN h_de >= h_en AND h_de >= h_es AND h_de >= h_fr THEN 'de'
-         WHEN h_en >= h_es AND h_en >= h_fr THEN 'en'
-         WHEN h_es >= h_fr THEN 'es'
-         ELSE 'fr' END AS b
-  FROM hits
-), base AS (
-  SELECT COUNT(*) AS nn,
-    SUM(CASE WHEN a = b THEN 1 ELSE 0 END) AS agree
-  FROM pred
-), ma AS (SELECT a AS lbl, COUNT(*) AS ca FROM pred GROUP BY a),
-mb AS (SELECT b AS lbl, COUNT(*) AS cb FROM pred GROUP BY b),
-pe AS (SELECT COALESCE(SUM(ca*cb), 0) AS pe_num FROM ma JOIN mb USING (lbl))
-SELECT CAST(nn AS BIGINT) AS n, CAST(agree AS BIGINT) AS agree,
-  CAST(pe_num AS BIGINT) AS pe_num,
-  CAST(nn*agree - pe_num AS BIGINT) AS kappa_num,
-  CAST(nn*nn - pe_num AS BIGINT) AS kappa_den,
-  CASE WHEN nn*nn - pe_num <> 0
-       THEN ROUND(CAST(nn*agree - pe_num AS DOUBLE)
-                  / CAST(nn*nn - pe_num AS DOUBLE), 9) END AS kappa
-FROM base, pe
 """
 
 
@@ -14867,9 +13311,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q19_pivot": q19_pivot,
     "q20_rollup": q20_rollup,
     "q21_sessionize": q21_sessionize,
-    "q22_token_stats": q22_token_stats,
-    "q23_quality_langid": q23_quality_langid,
-    "q24_ngram_jaccard_corpus": q24_ngram_jaccard_corpus,
     "q25_interval_join": q25_interval_join,
     "q26_rollup_merge": q26_rollup_merge,
     "q28_bloom_pruned_join": q28_bloom_pruned_join,
@@ -14878,13 +13319,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q31_embedding_centroids": q31_embedding_centroids,
     "q33_asof_join": q33_asof_join,
     "q34_winsorize": q34_winsorize,
-    "q36_corpus_clean": q36_corpus_clean,
     "q37_sink_roundtrip": q37_sink_roundtrip,
     "q38_regional_revenue": q38_regional_revenue,
     "q39_small_quantity_parts": q39_small_quantity_parts,
     "q40_normalize_features": q40_normalize_features,
     "q41_train_test_split": q41_train_test_split,
-    "q43_rolling_fingerprint": q43_rolling_fingerprint,
     "q44_shipping_priority": q44_shipping_priority,
     "q45_funnel": q45_funnel,
     "q46_retention_cohorts": q46_retention_cohorts,
@@ -14895,25 +13334,16 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q51_json_envelope": q51_json_envelope,
     "q52_rest_ingest": q52_rest_ingest,
     "q53_dedup_skewed": q53_dedup_skewed,
-    "q54_repetition_signals": q54_repetition_signals,
     "q55_shuffle_deterministic": q55_shuffle_deterministic,
     "q56_pack_sequences": q56_pack_sequences,
-    "q57_decontaminate": q57_decontaminate,
     "q58_scd2_merge": q58_scd2_merge,
-    "q59_strip_common_lines": q59_strip_common_lines,
     "q60_stream_running_totals": q60_stream_running_totals,
-    "q61_pii_redaction": q61_pii_redaction,
-    "q63_minhash_lsh": q63_minhash_lsh,
     "q64_window_suite": q64_window_suite,
     "q65_time_rollup": q65_time_rollup,
     "q66_histogram": q66_histogram,
     "q67_profile": q67_profile,
     "q68_weighted_sample": q68_weighted_sample,
-    "q69_ngram_jaccard": q69_ngram_jaccard,
     "q70_budget_selection": q70_budget_selection,
-    "q71_simhash": q71_simhash,
-    "q73_chunk_documents": q73_chunk_documents,
-    "q74_bm25_scores": q74_bm25_scores,
     "q75_zordered_scan": q75_zordered_scan,
     "q76_exact_percentiles": q76_exact_percentiles,
     "q77_corpus_mixing": q77_corpus_mixing,
@@ -14921,22 +13351,16 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q79_quantile_sketch_accuracy": q79_quantile_sketch_accuracy,
     "q81_sketches": q81_sketches,
     "q82_order_priority_check": q82_order_priority_check,
-    "q83_near_dedup": q83_near_dedup,
     "q84_returned_items": q84_returned_items,
     "q85_event_transitions": q85_event_transitions,
-    "q87_fuzzy_pairs": q87_fuzzy_pairs,
     "q88_kmeans_clusters": q88_kmeans_clusters,
     "q89_dsir_weights": q89_dsir_weights,
-    "q90_vocab_coverage": q90_vocab_coverage,
     "q91_semdedup": q91_semdedup,
     "q92_stream_session_windows": q92_stream_session_windows,
     "q93_stream_stream_join": q93_stream_stream_join,
     "q94_balanced_sample": q94_balanced_sample,
     "q95_orc_roundtrip": q95_orc_roundtrip,
-    "q96_inverted_index": q96_inverted_index,
-    "q97_heavy_hitters": q97_heavy_hitters,
     "q98_pagerank": q98_pagerank,
-    "q99_substring_dedup": q99_substring_dedup,
     "q100_bucketed_join": q100_bucketed_join,
     "q101_salted_join": q101_salted_join,
     "q102_merge_upsert": q102_merge_upsert,
@@ -14945,15 +13369,12 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q109_cdc_apply": q109_cdc_apply,
     "q110_compaction": q110_compaction,
     "q111_stream_upsert": q111_stream_upsert,
-    "q112_tfidf_terms": q112_tfidf_terms,
-    "q114_ppjoin": q114_ppjoin,
     "q115_quantile_bins": q115_quantile_bins,
     "q116_quality_quarantine": q116_quality_quarantine,
     "q117_schema_evolution": q117_schema_evolution,
     "q118_jsonl_sink": q118_jsonl_sink,
     "q119_multi_distinct": q119_multi_distinct,
     "q121_scd2_asof": q121_scd2_asof,
-    "q122_novelty_scores": q122_novelty_scores,
     "q123_stream_static_join": q123_stream_static_join,
     "q124_min_cost_supplier": q124_min_cost_supplier,
     "q125_nation_balance_share": q125_nation_balance_share,
@@ -14973,12 +13394,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q139_snapshot_diff": q139_snapshot_diff,
     "q140_triangle_count": q140_triangle_count,
     "q141_gap_fill": q141_gap_fill,
-    "q142_hashed_classifier": q142_hashed_classifier,
     "q143_hopping_windows": q143_hopping_windows,
     "q144_mad_outliers": q144_mad_outliers,
     "q145_attribution": q145_attribution,
     "q146_skyline": q146_skyline,
-    "q147_source_entropy": q147_source_entropy,
     "q148_ks_drift": q148_ks_drift,
     "q149_psi_drift": q149_psi_drift,
     "q150_skew_report": q150_skew_report,
@@ -15001,10 +13420,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q168_table_checksum": q168_table_checksum,
     "q169_time_travel": q169_time_travel,
     "q170_keyed_purge": q170_keyed_purge,
-    "q171_curation_pipeline": q171_curation_pipeline,
     "q172_ivm_retractions": q172_ivm_retractions,
     "q173_partial_salted_join": q173_partial_salted_join,
-    "q174_entity_resolution": q174_entity_resolution,
     "q175_version_diff": q175_version_diff,
     "q176_variant_extract": q176_variant_extract,
     "q177_recursive_cte": q177_recursive_cte,
@@ -15020,7 +13437,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q188_geo_nearest": q188_geo_nearest,
     "q189_interval_concurrency": q189_interval_concurrency,
     "q190_pipeline_spec": q190_pipeline_spec,
-    "q191_boilerplate_removal": q191_boilerplate_removal,
     "q192_xml_roundtrip": q192_xml_roundtrip,
     "q193_try_arithmetic": q193_try_arithmetic,
     "q194_hll_sketch_bound": q194_hll_sketch_bound,
@@ -15043,7 +13459,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q212_sql_unpivot": q212_sql_unpivot,
     "q213_group_by_all": q213_group_by_all,
     "q214_dedup_keep_best": q214_dedup_keep_best,
-    "q215_incremental_dedup": q215_incremental_dedup,
     "q216_expectations_spec": q216_expectations_spec,
     "q217_late_dimension_drain": q217_late_dimension_drain,
     "q218_linear_attribution": q218_linear_attribution,
@@ -15054,7 +13469,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q223_grouped_trend": q223_grouped_trend,
     "q224_linear_interpolation": q224_linear_interpolation,
     "q226_lake_lifecycle": q226_lake_lifecycle,
-    "q227_sequential_index_dedup": q227_sequential_index_dedup,
     "q228_data_skipping": q228_data_skipping,
     "q229_shortest_paths": q229_shortest_paths,
     "q230_time_weighted_average": q230_time_weighted_average,
@@ -15074,7 +13488,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q246_embedding_drift": q246_embedding_drift,
     "q247_ab_test": q247_ab_test,
     "q248_stl_decomposition": q248_stl_decomposition,
-    "q249_containment_dedup": q249_containment_dedup,
     "q250_temporal_reachability": q250_temporal_reachability,
     "q251_medallion_pipeline": q251_medallion_pipeline,
     "q252_benford_audit": q252_benford_audit,
@@ -15084,7 +13497,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q256_gini_skew": q256_gini_skew,
     "q257_quota_allocation": q257_quota_allocation,
     "q258_time_decay_score": q258_time_decay_score,
-    "q259_rater_agreement": q259_rater_agreement,
     "q260_hll_intersection": q260_hll_intersection,
     "q261_calibration": q261_calibration,
     "q262_temperature_mixture": q262_temperature_mixture,
@@ -15160,9 +13572,6 @@ ORACLES: dict[str, str] = {
     "q19_pivot": ORACLE_Q19,
     "q20_rollup": ORACLE_Q20,
     "q21_sessionize": ORACLE_Q21,
-    "q22_token_stats": ORACLE_Q22,
-    "q23_quality_langid": ORACLE_Q23,
-    "q24_ngram_jaccard_corpus": ORACLE_Q24,
     "q25_interval_join": ORACLE_Q25,
     "q26_rollup_merge": ORACLE_Q26,
     "q28_bloom_pruned_join": ORACLE_Q28,
@@ -15171,13 +13580,11 @@ ORACLES: dict[str, str] = {
     "q31_embedding_centroids": ORACLE_Q31,
     "q33_asof_join": ORACLE_Q33,
     "q34_winsorize": ORACLE_Q34,
-    "q36_corpus_clean": ORACLE_Q36,
     "q37_sink_roundtrip": ORACLE_Q37,
     "q38_regional_revenue": ORACLE_Q38,
     "q39_small_quantity_parts": ORACLE_Q39,
     "q40_normalize_features": ORACLE_Q40,
     "q41_train_test_split": ORACLE_Q41,
-    "q43_rolling_fingerprint": ORACLE_Q43,
     "q44_shipping_priority": ORACLE_Q44,
     "q45_funnel": ORACLE_Q45,
     "q46_retention_cohorts": ORACLE_Q46,
@@ -15188,47 +13595,32 @@ ORACLES: dict[str, str] = {
     "q51_json_envelope": ORACLE_Q51,
     "q52_rest_ingest": ORACLE_Q52,
     "q53_dedup_skewed": ORACLE_Q53,
-    "q54_repetition_signals": ORACLE_Q54,
     "q55_shuffle_deterministic": ORACLE_Q55,
     "q56_pack_sequences": ORACLE_Q56,
-    "q57_decontaminate": ORACLE_Q57,
     "q58_scd2_merge": ORACLE_Q58,
-    "q59_strip_common_lines": ORACLE_Q59,
     "q60_stream_running_totals": ORACLE_Q60,
-    "q61_pii_redaction": ORACLE_Q61,
-    "q63_minhash_lsh": ORACLE_Q63,
     "q64_window_suite": ORACLE_Q64,
     "q65_time_rollup": ORACLE_Q65,
     "q66_histogram": ORACLE_Q66,
     "q67_profile": ORACLE_Q67,
     "q68_weighted_sample": ORACLE_Q68,
-    "q69_ngram_jaccard": ORACLE_Q69,
     "q70_budget_selection": ORACLE_Q70,
-    "q71_simhash": ORACLE_Q71,
-    "q73_chunk_documents": ORACLE_Q73,
-    "q74_bm25_scores": ORACLE_Q74,
     "q75_zordered_scan": ORACLE_Q75,
     "q76_exact_percentiles": ORACLE_Q76,
     "q77_corpus_mixing": ORACLE_Q77,
     "q78_hll_accuracy": ORACLE_Q78,
     "q79_quantile_sketch_accuracy": ORACLE_Q79,
     "q82_order_priority_check": ORACLE_Q82,
-    "q83_near_dedup": ORACLE_Q83,
     "q84_returned_items": ORACLE_Q84,
     "q85_event_transitions": ORACLE_Q85,
-    "q87_fuzzy_pairs": ORACLE_Q87,
     "q88_kmeans_clusters": ORACLE_Q88,
     "q89_dsir_weights": ORACLE_Q89,
-    "q90_vocab_coverage": ORACLE_Q90,
     "q91_semdedup": ORACLE_Q91,
     "q92_stream_session_windows": ORACLE_Q92,
     "q93_stream_stream_join": ORACLE_Q93,
     "q94_balanced_sample": ORACLE_Q94,
     "q95_orc_roundtrip": ORACLE_Q95,
-    "q96_inverted_index": ORACLE_Q96,
-    "q97_heavy_hitters": ORACLE_Q97,
     "q98_pagerank": ORACLE_Q98,
-    "q99_substring_dedup": ORACLE_Q99,
     "q100_bucketed_join": ORACLE_Q100,
     "q101_salted_join": ORACLE_Q101,
     "q102_merge_upsert": ORACLE_Q102,
@@ -15237,15 +13629,12 @@ ORACLES: dict[str, str] = {
     "q109_cdc_apply": ORACLE_Q109,
     "q110_compaction": ORACLE_Q110,
     "q111_stream_upsert": ORACLE_Q111,
-    "q112_tfidf_terms": ORACLE_Q112,
-    "q114_ppjoin": ORACLE_Q114,
     "q115_quantile_bins": ORACLE_Q115,
     "q116_quality_quarantine": ORACLE_Q116,
     "q117_schema_evolution": ORACLE_Q117,
     "q118_jsonl_sink": ORACLE_Q118,
     "q119_multi_distinct": ORACLE_Q119,
     "q121_scd2_asof": ORACLE_Q121,
-    "q122_novelty_scores": ORACLE_Q122,
     "q123_stream_static_join": ORACLE_Q123,
     "q124_min_cost_supplier": ORACLE_Q124,
     "q125_nation_balance_share": ORACLE_Q125,
@@ -15265,12 +13654,10 @@ ORACLES: dict[str, str] = {
     "q139_snapshot_diff": ORACLE_Q139,
     "q140_triangle_count": ORACLE_Q140,
     "q141_gap_fill": ORACLE_Q141,
-    "q142_hashed_classifier": ORACLE_Q142,
     "q143_hopping_windows": ORACLE_Q143,
     "q144_mad_outliers": ORACLE_Q144,
     "q145_attribution": ORACLE_Q145,
     "q146_skyline": ORACLE_Q146,
-    "q147_source_entropy": ORACLE_Q147,
     "q148_ks_drift": ORACLE_Q148,
     "q149_psi_drift": ORACLE_Q149,
     "q150_skew_report": ORACLE_Q150,
@@ -15293,10 +13680,8 @@ ORACLES: dict[str, str] = {
     "q168_table_checksum": ORACLE_Q168,
     "q169_time_travel": ORACLE_Q169,
     "q170_keyed_purge": ORACLE_Q170,
-    "q171_curation_pipeline": ORACLE_Q171,
     "q172_ivm_retractions": ORACLE_Q172,
     "q173_partial_salted_join": ORACLE_Q173,
-    "q174_entity_resolution": ORACLE_Q174,
     "q175_version_diff": ORACLE_Q175,
     "q176_variant_extract": ORACLE_Q176,
     "q177_recursive_cte": ORACLE_Q177,
@@ -15312,7 +13697,6 @@ ORACLES: dict[str, str] = {
     "q188_geo_nearest": ORACLE_Q188,
     "q189_interval_concurrency": ORACLE_Q189,
     "q190_pipeline_spec": ORACLE_Q190,
-    "q191_boilerplate_removal": ORACLE_Q191,
     "q192_xml_roundtrip": ORACLE_Q192,
     "q193_try_arithmetic": ORACLE_Q193,
     "q194_hll_sketch_bound": ORACLE_Q194,
@@ -15335,7 +13719,6 @@ ORACLES: dict[str, str] = {
     "q212_sql_unpivot": ORACLE_Q212,
     "q213_group_by_all": ORACLE_Q213,
     "q214_dedup_keep_best": ORACLE_Q214,
-    "q215_incremental_dedup": ORACLE_Q215,
     "q216_expectations_spec": ORACLE_Q216,
     "q217_late_dimension_drain": ORACLE_Q217,
     "q218_linear_attribution": ORACLE_Q218,
@@ -15346,7 +13729,6 @@ ORACLES: dict[str, str] = {
     "q223_grouped_trend": ORACLE_Q223,
     "q224_linear_interpolation": ORACLE_Q224,
     "q226_lake_lifecycle": ORACLE_Q226,
-    "q227_sequential_index_dedup": _oracle_q227(),
     "q228_data_skipping": ORACLE_Q228,
     "q229_shortest_paths": _oracle_q229(),
     "q230_time_weighted_average": ORACLE_Q230,
@@ -15366,7 +13748,6 @@ ORACLES: dict[str, str] = {
     "q246_embedding_drift": ORACLE_Q246,
     "q247_ab_test": ORACLE_Q247,
     "q248_stl_decomposition": ORACLE_Q248,
-    "q249_containment_dedup": ORACLE_Q249,
     "q250_temporal_reachability": _oracle_q250(),
     "q251_medallion_pipeline": ORACLE_Q251,
     "q252_benford_audit": ORACLE_Q252,
@@ -15376,7 +13757,6 @@ ORACLES: dict[str, str] = {
     "q256_gini_skew": ORACLE_Q256,
     "q257_quota_allocation": ORACLE_Q257,
     "q258_time_decay_score": ORACLE_Q258,
-    "q259_rater_agreement": ORACLE_Q259,
     "q260_hll_intersection": ORACLE_Q260,
     "q261_calibration": ORACLE_Q261,
     "q262_temperature_mixture": ORACLE_Q262,

@@ -54,7 +54,6 @@ ALLOW: dict[str, set[str]] = {
     "q166_chi2_independence": BNLJ,
     "q197_join_size_estimate": BNLJ,
     "q211_bag_set_ops": BNLJ,
-    "q97_heavy_hitters": BNLJ,
     "q149_psi_drift": BNLJ,
     "q232_privacy_audit": BNLJ,  # 1-row global-total crossJoin
     "q234_target_encoding": BNLJ,  # 1-row global-prior crossJoin
@@ -68,7 +67,6 @@ ALLOW: dict[str, set[str]] = {
     # cardinality, never corpus-sized — see proportional_allocation).
     "q257_quota_allocation": BNLJ | {"single-partition-exchange"},
     "q258_time_decay_score": BNLJ,  # 1-row max-ts anchor crossJoin
-    "q259_rater_agreement": BNLJ,   # 1-row chance-agreement crossJoin
     # same Hamilton-core shape as q257: 1-row total/leftover crossJoins
     # + rank window over the aggregated strata table (key-cardinality)
     "q262_temperature_mixture": BNLJ | {"single-partition-exchange"},

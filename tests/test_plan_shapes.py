@@ -8,7 +8,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_opensky_spark.functions.dedup import minhash_signature, simhash
 from etl_opensky_spark.operators.joins import lookup_dim
 from etl_opensky_spark.sources.sinks import write_parquet_partitioned
 
@@ -59,24 +58,6 @@ def test_lookup_dim_broadcasts(spark):
     dim = spark.createDataFrame([(i, f"n{i}") for i in range(10)], "dk long, name string")
     out = lookup_dim(fact, dim, "k", "dk", attach={"name": "dim_name"})
     assert "BroadcastHashJoin" in physical_plan(out)
-
-
-def test_minhash_signature_partial_agg_codegen_shape(spark):
-    """Round-5 shape: exploded shingles through codegen'd xxhash64 into
-    num_hashes UNROLLED min aggregates — the shuffle carries ONE
-    pre-combined row per (doc, partition) (partial_min present), and no
-    interpreted higher-order fold remains in the plan."""
-    docs = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
-    plan = physical_plan(minhash_signature(docs, "doc_id", "text"))
-    assert "partial_min" in plan          # map-side combine
-    assert "aggregate(" not in plan       # no interpreted lambda fold
-    assert "xxhash64" in plan
-
-
-def test_simhash_no_shuffle(spark):
-    docs = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
-    plan = physical_plan(simhash(docs, "doc_id", "text"))
-    assert "Exchange" not in plan
 
 
 def test_whole_stage_codegen_active(spark):
@@ -157,36 +138,6 @@ def test_q48_grouping_sets_single_expand_single_agg_shuffle(spark):
     plan = _executed(QUERIES["q48_grouping_sets"](spark, "/root/testdata/sf0.001"))
     assert plan.count("Expand") >= 1
     assert "Union" not in plan
-
-
-def test_q57_decontaminate_broadcast_semi_join(spark):
-    """The corpus-side gram stream must meet the (small) reference gram
-    set in a BROADCAST left-semi join — the corpus is never exchanged
-    for the membership test."""
-    from etl_opensky_spark.queries import QUERIES
-
-    plan = _executed(
-        QUERIES["q57_decontaminate"](spark, "/root/testdata/sf0.001")
-    ).split("== Initial Plan ==")[0]
-    assert "LeftSemi" in plan
-    assert "BroadcastExchange" in plan
-
-
-def test_strip_common_lines_hot_list_broadcast_anti_join(spark):
-    """The hot-line list (count-filtered, small by construction) joins
-    the line stream as a broadcast anti join at gate scale."""
-    from etl_opensky_spark.functions.dedup import strip_common_lines
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame(
-        [(i, "common\nunique %d" % i) for i in range(50)],
-        "doc_id long, text string",
-    )
-    out = strip_common_lines(docs, "doc_id", "text", max_doc_freq=10)
-    out.collect()
-    plan = physical_plan(out).split("== Initial Plan ==")[0]
-    assert "LeftAnti" in plan
-    assert "BroadcastExchange" in plan
 
 
 def test_runtime_bloom_pruning_injects_might_contain(spark, tmp_path_factory):
@@ -296,16 +247,6 @@ def test_cdc_apply_window_group_limit_pushdown(spark):
     assert "rank(" not in plan  # guard optimized out of the result plan
 
 
-def test_prefix_jaccard_no_cartesian(spark):
-    from etl_opensky_spark.functions.dedup import prefix_jaccard_pairs
-
-    docs = spark.createDataFrame(
-        [(i, "a b c") for i in range(4)], ["doc_id", "text"]
-    )
-    plan = physical_plan(prefix_jaccard_pairs(docs, "doc_id", "text", 1, 2))
-    assert "CartesianProduct" not in plan
-
-
 def test_q128_all_predicates_pushed_to_scan(spark):
     """Q6 shape: date range, discount band, and quantity cap must all
     reach the parquet scan as PushedFilters (the decimal-cast band
@@ -339,16 +280,6 @@ def test_q134_denylist_is_broadcast_anti_join(spark):
         q134_supplier_part_counts(spark, "/root/testdata/sf0.001")
     )
     assert "LeftAnti, BuildRight" in plan.replace("build right", "BuildRight")
-
-
-def test_q142_classifier_is_single_narrow_pass(spark):
-    """The hashed linear scorer must stay one map-side pass: scoring
-    adds NO exchange beyond the final 5-group aggregate's."""
-    from etl_opensky_spark.queries import q142_hashed_classifier
-
-    plan = physical_plan(q142_hashed_classifier(spark, "/root/testdata/sf0.001"))
-    assert plan.count("Exchange") <= 2  # partial->final agg only (+AQE read)
-    assert "pythonUDF" not in plan  # pure Column expression, no Python
 
 
 def test_q140_triangle_pipeline_all_equi_joins(spark):
@@ -495,20 +426,6 @@ def test_interval_concurrency_window_is_over_aggregated_dates(spark):
     assert win < agg  # window consumes the aggregate's (deeper) output
 
 
-def test_boilerplate_common_set_drives_broadcast_anti_join(spark):
-    from etl_opensky_spark.functions.text import remove_boilerplate_chunks
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"w{j}" for j in range(16))) for i in range(50)],
-        ["doc_id", "text"],
-    )
-    out = remove_boilerplate_chunks(docs, "doc_id", "text", 4, 3)
-    out.count()
-    plan = physical_plan(out)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_hash_shards_manifest_is_one_aggregate_over_readback(spark, tmp_path):
     """Manifest aggregation reads the written files (partition-pruned
     schema incl. the shard dir column) with map-side combine — no sort,
@@ -522,60 +439,3 @@ def test_hash_shards_manifest_is_one_aggregate_over_readback(spark, tmp_path):
     plan = physical_plan(manifest)
     assert "Window" not in plan and "Sort" not in plan.split("Exchange")[0]
     assert plan.count("HashAggregate") >= 2  # partial + final
-
-
-def test_pair_ops_materialize_gram_table_once(spark, tmp_path):
-    """Round-11/12 materialization contract for the inverted-index pair
-    ops: the DF-PRUNED paths materialize the distinct gram table once
-    (localCheckpoint → every consumer reads the checkpointed RDD, zero
-    source re-scans), while the paths where the round-12 isolated A/B
-    measured the eager checkpoint as a net LOSS stay lazy — the
-    unpruned truth-gate path (``max_df=None``, q83) and PPJoin's
-    object-heavy ``ordered`` struct-array table (q114) re-derive from
-    the source instead of pinning blocks for the driver's lifetime."""
-    from etl_opensky_spark.functions.dedup import (
-        containment_pairs,
-        ngram_jaccard_pairs,
-        prefix_jaccard_pairs,
-        substring_dup_pairs,
-    )
-
-    src = str(tmp_path / "docs")
-    spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, "an entirely different document about spark plans"),
-            (4, "the quick brown fox jumps over the lazy dog"),
-        ],
-        "doc_id int, text string",
-    ).write.parquet(src)
-    docs = spark.read.parquet(src)
-    for out in (
-        ngram_jaccard_pairs(docs, "doc_id", "text", n=2, threshold=0.5),
-        containment_pairs(docs, "doc_id", "text", n=2, threshold=0.5),
-        substring_dup_pairs(docs, "doc_id", "text", window=10, max_df=10),
-    ):
-        plan = physical_plan(out)
-        # every corpus consumer reads the materialized gram table
-        # (ExistingRDD) — the source is never re-scanned
-        assert "ExistingRDD" in plan
-        assert "Scan parquet" not in plan
-    for out in (
-        ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=2, threshold=0.5, max_df=None
-        ),
-        prefix_jaccard_pairs(docs, "doc_id", "text", 1, 2),
-    ):
-        # unpruned / ordered-table paths: NO blocking materialization —
-        # consumers plan straight from the source
-        plan = physical_plan(out)
-        assert "ExistingRDD" not in plan
-        assert "Scan parquet" in plan
-    # results stay exact: 1-4 are verbatim duplicates (max_df=None —
-    # the 4-doc corpus's auto cap of 2 would prune their shared grams)
-    pairs = ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=2, threshold=0.99, max_df=None
-    )
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert (1, 4) in got

@@ -117,34 +117,6 @@ def test_hash_split_total_partition_and_stable(spark, keys, weights):
     assert out == out2
 
 
-@SETTINGS
-@given(
-    st.lists(
-        st.lists(st.sampled_from(["tok", "x", "yy", "z9"]), min_size=0, max_size=17),
-        min_size=1,
-        max_size=6,
-    ),
-    st.integers(1, 5),
-)
-def test_chunk_documents_disjoint_reconstruction(spark, token_lists, window):
-    """With stride == window (disjoint chunks), concatenating a doc's
-    chunks in chunk_idx order reconstructs its token stream exactly —
-    chunking is lossless and order-preserving for every doc/window."""
-    from etl_opensky_spark.functions.text import chunk_documents
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(toks)) for i, toks in enumerate(token_lists)],
-        "doc_id long, text string",
-    )
-    out = chunk_documents(docs, "doc_id", "text", window=window).collect()
-    by_doc = {}
-    for r in sorted(out, key=lambda r: (r.doc_id, r.chunk_idx)):
-        by_doc.setdefault(r.doc_id, []).append(r.chunk_text)
-        assert 1 <= r.chunk_tokens <= window
-    for i, toks in enumerate(token_lists):
-        assert " ".join(by_doc.get(i, [])) == " ".join(toks)
-
-
 # --- round-4 operators -------------------------------------------------------
 
 _cdc_ops = st.sampled_from(["I", "U", "D"])
@@ -184,38 +156,6 @@ def test_apply_changelog_matches_sequential_model(spark, log, target_keys):
         else:
             state[k] = f"v{k}s{s}"
     assert got == sorted(state.items())
-
-
-@SETTINGS
-@given(
-    st.lists(
-        st.lists(st.sampled_from("abcdef"), min_size=0, max_size=6),
-        min_size=0,
-        max_size=8,
-    )
-)
-def test_prefix_jaccard_lossless_vs_brute_force(spark, token_lists):
-    """Prefix filtering finds EVERY pair with J >= 1/3 — never fewer."""
-    from itertools import combinations
-
-    from etl_opensky_spark.functions.dedup import prefix_jaccard_pairs
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(ts)) for i, ts in enumerate(token_lists)],
-        "doc_id int, text string",
-    )
-    got = {
-        (r["id_a"], r["id_b"]) for r in
-        prefix_jaccard_pairs(docs, "doc_id", "text", 1, 3).collect()
-    }
-    sets = [set(ts) for ts in token_lists]
-    expect = set()
-    for a, b in combinations(range(len(sets)), 2):
-        i = len(sets[a] & sets[b])
-        u = len(sets[a] | sets[b])
-        if u and 3 * i >= u:
-            expect.add((a, b))
-    assert got == expect
 
 
 @SETTINGS

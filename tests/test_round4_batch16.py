@@ -1,5 +1,5 @@
 """Batch-16 operators: grid nearest-neighbor join, interval sweep-line
-concurrency, corpus boilerplate removal."""
+concurrency."""
 
 from __future__ import annotations
 
@@ -133,113 +133,3 @@ def test_interval_concurrency_conserves_mass(spark):
     out = interval_concurrency(iv, "s", "e").orderBy("d").collect()
     assert out[-1]["concurrent"] == 0
     assert all(r["concurrent"] >= 0 for r in out)
-
-
-# ---------------------------------------------------- boilerplate removal
-
-
-def test_boilerplate_removal_drops_common_chunks(spark):
-    from etl_opensky_spark.functions.text import remove_boilerplate_chunks
-
-    common = "x " * 3 + "x"  # 4-word chunk shared by 3 docs
-    docs = spark.createDataFrame(
-        [
-            (1, common + " a b c d"),
-            (2, common + " e f g h"),
-            (3, common + " i j k l"),
-            (4, "m n o p q r s t"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {
-        r["doc_id"]: r
-        for r in remove_boilerplate_chunks(
-            docs, "doc_id", "text", chunk_words=4, min_doc_freq=3
-        ).collect()
-    }
-    assert out[1]["clean_text"] == "a b c d"
-    assert out[1]["n_chunks"] == 2 and out[1]["n_removed"] == 1
-    assert out[4]["clean_text"] == "m n o p q r s t"
-    assert out[4]["n_removed"] == 0
-
-
-def test_boilerplate_removal_fully_boilerplate_doc_empties(spark):
-    from etl_opensky_spark.functions.text import remove_boilerplate_chunks
-
-    docs = spark.createDataFrame(
-        [(i, "a b c d") for i in range(3)], ["doc_id", "text"]
-    )
-    out = remove_boilerplate_chunks(
-        docs, "doc_id", "text", chunk_words=4, min_doc_freq=3
-    ).collect()
-    assert all(r["clean_text"] == "" and r["n_removed"] == 1 for r in out)
-
-
-def test_boilerplate_removal_preserves_chunk_order(spark):
-    from etl_opensky_spark.functions.text import remove_boilerplate_chunks
-
-    text = " ".join(f"w{i}" for i in range(20))
-    docs = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    [r] = remove_boilerplate_chunks(
-        docs, "doc_id", "text", chunk_words=4, min_doc_freq=2
-    ).collect()
-    assert r["clean_text"] == text and r["n_chunks"] == 5
-
-
-# ------------------------------------------- incremental dedup (q215)
-
-
-def test_incremental_dedup_drops_near_dups_keeps_novel(spark, tmp_path):
-    from etl_opensky_spark.functions.dedup import (
-        build_dedup_index,
-        dedup_batch_against_index,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    corpus = spark.createDataFrame(
-        [(1, base), (2, "completely different corpus text about spark plans"),
-         (3, "short")],
-        ["doc_id", "text"],
-    )
-    batch = spark.createDataFrame(
-        [
-            (100, base + " tail"),          # near-dup of doc 1
-            (101, "novel content that matches nothing in the corpus at all"),
-            (102, "xy"),                    # < shingle_n tokens: no bands
-        ],
-        ["doc_id", "text"],
-    )
-    idx = str(tmp_path / "idx")
-    build_dedup_index(corpus, "doc_id", "text", idx)
-    kept = sorted(
-        r["doc_id"]
-        for r in dedup_batch_against_index(
-            spark, batch, corpus, idx, "doc_id", "text"
-        ).collect()
-    )
-    assert kept == [101, 102]
-
-
-def test_incremental_dedup_index_reused_across_batches(spark, tmp_path):
-    """Two different batches probe the SAME persisted index — the
-    index is built once (the incremental contract)."""
-    from etl_opensky_spark.functions.dedup import (
-        build_dedup_index,
-        dedup_batch_against_index,
-    )
-
-    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    corpus = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    idx = str(tmp_path / "idx")
-    build_dedup_index(corpus, "doc_id", "text", idx)
-    b1 = spark.createDataFrame([(10, text)], ["doc_id", "text"])
-    b2 = spark.createDataFrame(
-        [(20, "unrelated words only here nothing shared with the corpus")],
-        ["doc_id", "text"],
-    )
-    assert dedup_batch_against_index(
-        spark, b1, corpus, idx, "doc_id", "text"
-    ).count() == 0
-    assert dedup_batch_against_index(
-        spark, b2, corpus, idx, "doc_id", "text"
-    ).count() == 1

@@ -1,5 +1,5 @@
 """Round-4 batch-6 operators: snapshot diff, triangle count, gap fill,
-hashed linear classifier, MAD outliers, last-touch attribution, skyline."""
+MAD outliers, last-touch attribution, skyline."""
 
 from __future__ import annotations
 
@@ -119,50 +119,6 @@ def test_fill_time_gaps_same_ts_tiebreak_on_id(spark):
     )
     got = rows(fill_time_gaps(ev, "user_id", "ts", "value", "event_id"))
     assert got == [(1, dt.date(2024, 1, 1), 2.0, False)]
-
-
-# --- hashed_linear_score -----------------------------------------------------
-
-
-def test_hashed_linear_score_feature_decomposition(spark):
-    from etl_opensky_spark.functions.text import (
-        hashed_feature_weight,
-        hashed_linear_score,
-    )
-
-    df = spark.createDataFrame(
-        [("one",), ("two words",), ("",)], ["text"]
-    )
-    w = {
-        r["f"]: r["w"]
-        for r in spark.createDataFrame(
-            [("one",), ("two",), ("words",), ("two words",), ("",)], ["f"]
-        )
-        .select("f", hashed_feature_weight(F.col("f")).alias("w"))
-        .collect()
-    }
-    got = [
-        r["s"]
-        for r in df.select(hashed_linear_score(F.col("text")).alias("s"))
-        .collect()
-    ]
-    # 1 token → no bigram (the zip_with NULL-pad regression); 2 tokens →
-    # 2 unigrams + 1 bigram; empty text tokenizes to [''].
-    assert got[0] == w["one"]
-    assert got[1] == w["two"] + w["words"] + w["two words"]
-    assert got[2] == w[""]
-
-
-def test_hashed_feature_weight_bounded(spark):
-    from etl_opensky_spark.functions.text import hashed_feature_weight
-
-    vals = (
-        spark.range(500)
-        .select(hashed_feature_weight(F.col("id").cast("string")).alias("w"))
-        .agg(F.min("w"), F.max("w"))
-        .collect()[0]
-    )
-    assert -1000 <= vals[0] and vals[1] <= 1000
 
 
 # --- mad_outliers ------------------------------------------------------------

@@ -1,5 +1,5 @@
-"""Round-4 batch-7 operators: constraint audit, z-order layout, PMI
-collocations, exact Gram matrix, group-aware split leak invariant."""
+"""Round-4 batch-7 operators: constraint audit, z-order layout,
+exact Gram matrix, group-aware split leak invariant."""
 
 from __future__ import annotations
 

@@ -1,9 +1,7 @@
-"""Round-4 operators: binary source, BPE pair counts, RRF fusion,
-bigram-LM scoring, int8-quantized ANN."""
+"""Round-4 operators: binary source, CDC changelog apply, equal-frequency
+binning, quality quarantine, Expand-free multi-distinct."""
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import functions as F
 
@@ -106,136 +104,6 @@ def test_apply_changelog_partitioning_invariant(spark):
     many = rows(apply_changelog(target.repartition(8),
                                 changes.repartition(5), ["id"], "seq"))
     assert one == many
-
-
-# --- tf-idf top terms --------------------------------------------------------
-
-
-def test_tfidf_top_terms_hand_checked(spark):
-    import math
-
-    from etl_opensky_spark.functions.text import tfidf_top_terms
-
-    docs = spark.createDataFrame(
-        [(1, "apple apple banana"), (2, "apple cherry"), (3, "banana date")],
-        ["doc_id", "text"],
-    )
-    # df: apple=2, banana=2, cherry=1, date=1; min_df=2 keeps apple+banana
-    got = rows(tfidf_top_terms(docs, "doc_id", "text", top_k=2, min_df=2))
-    idf = round(math.log(3 / 2) * 1e6)
-    assert (1, "apple", 2, 2 * idf, 1) in got
-    assert (1, "banana", 1, idf, 2) in got
-    # cherry/date (df=1) never appear
-    assert all(t not in ("cherry", "date") for _, t, *_ in got)
-
-
-def test_tfidf_partitioning_invariant(spark):
-    from etl_opensky_spark.functions.text import tfidf_top_terms
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i % 4} w{i % 4} w{i % 9} common") for i in range(80)],
-        ["doc_id", "text"],
-    )
-    one = rows(tfidf_top_terms(docs.coalesce(1), "doc_id", "text"))
-    many = rows(tfidf_top_terms(docs.repartition(8), "doc_id", "text"))
-    assert one == many
-
-
-# --- numpy XxHash64 + vectorized minhash -------------------------------------
-
-
-def test_numpy_xxh64_matches_spark(spark):
-    import numpy as np
-
-    from etl_opensky_spark.functions.dedup import xxh64_int_np, xxh64_long_np
-
-    rng = np.random.default_rng(7)
-    longs = rng.integers(-(2**63), 2**63 - 1, size=500, dtype=np.int64)
-    ints = rng.integers(-(2**31), 2**31 - 1, size=500, dtype=np.int64)
-    df = spark.createDataFrame(
-        [(int(l), int(i)) for l, i in zip(longs, ints)], ["h", "i"]
-    ).select(
-        "h", "i",
-        F.xxhash64("h").alias("xh"),
-        F.xxhash64("h", F.col("i").cast("int")).alias("xhi"),
-    )
-    rows_ = df.collect()
-    got_h = np.array([r["xh"] for r in rows_], dtype=np.int64)
-    got_hi = np.array([r["xhi"] for r in rows_], dtype=np.int64)
-    np_h = xxh64_long_np(longs, np.uint64(42)).view(np.int64)
-    np_hi = xxh64_int_np(
-        ints, xxh64_long_np(longs, np.uint64(42))
-    ).view(np.int64)
-    assert (np_h == got_h).all()
-    assert (np_hi == got_hi).all()
-
-
-def test_minhash_vectorized_hash_equal_to_expression(spark):
-    from etl_opensky_spark.functions.dedup import (
-        minhash_signature,
-        minhash_signature_vectorized,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = rows(minhash_signature(docs, "doc_id", "text", 32, 3))
-    b = rows(minhash_signature_vectorized(docs, "doc_id", "text", 32, 3))
-    assert a == b
-
-
-def test_minhash_vectorized_short_docs_null(spark):
-    from etl_opensky_spark.functions.dedup import minhash_signature_vectorized
-
-    docs = spark.createDataFrame(
-        [(1, "one two"), (2, "one two three four")], ["doc_id", "text"]
-    )
-    got = {r["doc_id"]: r["signature"] for r in
-           minhash_signature_vectorized(docs, "doc_id", "text", 8, 3).collect()}
-    assert got[1] is None and got[2] is not None and len(got[2]) == 8
-
-
-# --- prefix-filtered set-similarity join (PPJoin) ---------------------------
-
-
-def test_prefix_jaccard_pairs_matches_brute_force(spark):
-    from itertools import combinations
-
-    from etl_opensky_spark.functions.dedup import prefix_jaccard_pairs
-
-    texts = [
-        "apple banana cherry date",
-        "apple banana cherry elderberry",
-        "fig grape melon",
-        "fig grape melon kiwi",
-        "totally different words here now",
-        "apple banana cherry date",  # exact dup of doc 0
-    ]
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), ["doc_id", "text"]
-    )
-    got = {
-        (r["id_a"], r["id_b"]): (r["n_common"], r["size_a"], r["size_b"])
-        for r in prefix_jaccard_pairs(docs, "doc_id", "text", 1, 2).collect()
-    }
-    sets = [set(t.split()) for t in texts]
-    expect = {}
-    for a, b in combinations(range(len(texts)), 2):
-        i = len(sets[a] & sets[b])
-        u = len(sets[a] | sets[b])
-        if u and 2 * i >= u:  # J >= 1/2
-            expect[(a, b)] = (i, len(sets[a]), len(sets[b]))
-    assert got == expect and len(expect) >= 3
-
-
-def test_prefix_jaccard_pairs_partitioning_invariant(spark):
-    from etl_opensky_spark.functions.dedup import prefix_jaccard_pairs
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i % 6} w{(i + 1) % 6} w{(i + 2) % 6} shared") for i in range(40)],
-        ["doc_id", "text"],
-    )
-    one = rows(prefix_jaccard_pairs(docs.coalesce(1), "doc_id", "text", 3, 5))
-    many = rows(prefix_jaccard_pairs(docs.repartition(8), "doc_id", "text", 3, 5))
-    assert one == many and len(one) > 0
 
 
 # --- equal-frequency binning -------------------------------------------------
