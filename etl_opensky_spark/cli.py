@@ -69,7 +69,10 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None) -> int:
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    if args.command == "load-dim-aircrafts" and args.check_fk_date and not args.lake:
+        parser.error("--check-fk-date needs --lake")
 
     from etl_opensky_spark import schemas
     from etl_opensky_spark.session import get_spark
@@ -125,7 +128,7 @@ def main(argv: list[str] | None = None) -> int:
             read_csv(spark, args.types_csv, schemas.SRC_AIRCRAFT_TYPES),
             read_json_envelope(spark, args.airlines_json, cast_to=schemas.SRC_AIRLINES),
         )
-        if args.check_fk_date and args.lake:
+        if args.check_fk_date:
             # the day alone, read with the declared schema; a lake without
             # that day has nothing to check
             day = read_day(spark, args.lake, args.check_fk_date)

@@ -91,3 +91,23 @@ def test_load_dim_aircrafts_checks_fk_of_one_day(spark, tmp_path):
     assert main([*load, root, "--check-fk-date", "2018-01-03"]) == 0
     with pytest.raises(FileNotFoundError):
         main([*load, str(tmp_path / "absent"), "--check-fk-date", "2018-01-01"])
+
+
+def test_check_fk_date_without_lake_is_a_usage_error(monkeypatch, capsys):
+    """``--check-fk-date`` has no lake to check without ``--lake``: the
+    parser rejects it before a session starts, rather than skipping the
+    check and overwriting the dim."""
+    from etl_opensky_spark import session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a usage error must not start Spark")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        main([
+            "load-dim-aircrafts", "--aircrafts-csv", "a.csv",
+            "--manufacturers-csv", "m.csv", "--types-csv", "t.csv",
+            "--airlines-json", "l.json", "--check-fk-date", "2018-01-01",
+        ])
+    assert exc.value.code == 2
+    assert "--check-fk-date needs --lake" in capsys.readouterr().err
