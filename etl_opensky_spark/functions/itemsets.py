@@ -46,7 +46,8 @@ def frequent_pairs(
             F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
         )
         .distinct()
-        # feeds the support count AND the pruned pair join (exchange reuse)
+        # feeds the support count AND the pruned pair join (Catalyst does
+        # not reuse the exchange)
         .localCheckpoint()
     )
     if max_basket_items is not None:

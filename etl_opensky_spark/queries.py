@@ -4995,8 +4995,8 @@ GROUP BY 1, 2
 def q160_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch point queries (``functions.heavyhitters.
     countmin_estimates``) — the over-estimating mergeable complement to
-    Misra–Gries (``functions.heavyhitters.misra_gries``): cells built from the KEY-COUNT table (never
-    depth-fold row explosion), cell table is depth×width rows
+    Misra–Gries (``misra_gries``): cells built from the KEY-COUNT table
+    (never depth-fold row explosion), cell table is depth×width rows
     regardless of corpus size, per-partition partials merge by SUM.
     ``over_ok`` is the deterministic ``true <= est`` guarantee."""
     from etl_opensky_spark.functions.heavyhitters import countmin_estimates

@@ -102,8 +102,8 @@ def get_spark(
         # long-lived session accumulates dead localCheckpoint blocks
         # that steal unified memory from execution (measured round 12:
         # block-manager-heavy queries inflate monotonically within a
-        # session — one set-similarity join 2.8 s fresh -> 10-19 s late — and a
-        # GC nudge restores them).  2 min bounds the residency; the
+        # session — a set-similarity join 2.8 s fresh -> 10-19 s late —
+        # and a GC nudge restores them).  2 min bounds the residency; the
         # env override lets a deployment with an expensive driver full
         # GC relax it (the value is core-count- and SF-independent).
         .config(
