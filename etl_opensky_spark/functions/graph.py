@@ -26,6 +26,10 @@ pico-units (SCALE = 1e12) and every update is integer floor
 arithmetic — ``rank div outdeg``, ``(d_num * contrib) div d_den`` —
 so any engine that can floor-divide integers reproduces bit-identical
 ranks round over round, and a DuckDB oracle can unroll the recursion.
+
+``connected_components`` labels each node with its component's minimum
+id: driver-side union-find below ``SMALL_GRAPH_EDGES`` edges, distributed
+star contraction (``_star_contract``) above it.
 """
 
 from __future__ import annotations
@@ -35,6 +39,10 @@ from pyspark.sql import functions as F
 
 #: ranks are integers in units of 1e-12 of total probability mass
 SCALE = 1_000_000_000_000
+
+#: below this edge count, connected components solves on the driver
+#: (union-find) instead of paying per-round distributed scheduling
+SMALL_GRAPH_EDGES = 1_000_000
 
 
 def pagerank(
@@ -580,3 +588,171 @@ def k_core_oracle_sql(
         f"SELECT u AS node FROM e{n} UNION ALL SELECT v FROM e{n}"
         f") GROUP BY node"
     )
+
+
+def _union_find():
+    """Driver-side union-find with path compression: returns (parent, find)."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
+
+    return parent, find
+
+
+def _edge_signature(edges: DataFrame) -> tuple:
+    """Order-independent (count, hash-sum) signature of an edge set —
+    one scalar row per check, used to detect the star-contraction
+    fixpoint without materializing a set comparison."""
+    row = edges.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(
+            F.xxhash64(F.col("src"), F.col("dst")).cast("decimal(38,0)")
+        ).alias("h"),
+    ).collect()[0]
+    return (row["n"], row["h"])
+
+
+def _star_contract(edges: DataFrame, max_iterations: int) -> DataFrame:
+    """Alternating large-star/small-star contraction (Kiveris et al.,
+    'Connected Components in MapReduce and Beyond'): converges to a star
+    forest — every node pointing at its component's MINIMUM id — in
+    O(log n) rounds, unlike one-hop min-label propagation's O(diameter).
+
+    Input: undirected edge list (src, dst).  Output: (src=node,
+    dst=root) with root < node for every non-root node in the graph.
+
+    large-star: each node u connects its LARGER neighbors to
+    min(Γ(u) ∪ u); small-star: each node u (edges oriented big→small)
+    connects its smaller neighbors and itself to that minimum.  Each
+    half-round is one groupBy + one join on the node id; every emitted
+    edge keeps src > dst, so the orientation invariant is maintained
+    without re-sorting.
+
+    Each round is materialized via ``localCheckpoint`` — iterative plans
+    that merely ``persist`` nest the previous round's cached plan inside
+    the next round's tree, and after a handful of rounds Catalyst's plan
+    bookkeeping (not the data) blows the driver heap.  Checkpointing
+    truncates the lineage to the round's output RDD.  (localCheckpoint
+    trades executor-loss recovery for speed; this is the same choice
+    GraphFrames makes for its iterative algorithms.)
+    """
+    cur = (
+        edges.select(
+            F.greatest("src", "dst").alias("src"),
+            F.least("src", "dst").alias("dst"),
+        )
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+        .localCheckpoint()
+    )
+    sig = _edge_signature(cur)
+    for _ in range(max_iterations):
+        # large star: for v in Γ(u), v > u  ->  (v, min(Γ(u) ∪ u))
+        bi = cur.unionByName(
+            cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        nbr_min = (
+            bi.groupBy("src")
+            .agg(F.min("dst").alias("_mn"))
+            .select("src", F.least("_mn", F.col("src")).alias("_m"))
+        )
+        large = (
+            bi.join(nbr_min, "src")
+            .filter(F.col("dst") > F.col("src"))
+            .select(F.col("dst").alias("src"), F.col("_m").alias("dst"))
+            .filter(F.col("src") != F.col("dst"))
+            .distinct()
+        )
+        # small star on the (big, small)-oriented result:
+        # (v, min) for v in Γ≤(u), plus (u, min)
+        nbr_min2 = large.groupBy("src").agg(F.min("dst").alias("_m"))
+        small = (
+            large.join(nbr_min2, "src")
+            .select(F.col("dst").alias("src"), F.col("_m").alias("dst"))
+            .unionByName(
+                nbr_min2.select("src", F.col("_m").alias("dst"))
+            )
+            .filter(F.col("src") != F.col("dst"))
+            .distinct()
+            .localCheckpoint()
+        )
+        new_sig = _edge_signature(small)
+        cur = small
+        if new_sig == sig:
+            return cur
+        sig = new_sig
+    raise RuntimeError(
+        f"star contraction did not converge within {max_iterations} "
+        "rounds — with O(log n) convergence this indicates a graph far "
+        "beyond the round budget; raise max_iterations"
+    )
+
+
+def connected_components(
+    pairs: DataFrame,
+    ids: DataFrame,
+    id_col: str,
+    max_iterations: int = 20,
+) -> DataFrame:
+    """(id, component) — connected components over an undirected pair
+    list; the component label is the component's minimum id.
+
+    Hybrid execution: below ``SMALL_GRAPH_EDGES`` the edge list is
+    collected and solved with driver-side union-find (a few hundred
+    near-dup pairs do not deserve N Spark rounds of scheduling overhead);
+    above it, distributed alternating star contraction
+    (``_star_contract``) — O(log n) rounds of groupBy+join on the node
+    id, intermediate edge sets persisted per round to cut lineage
+    growth.  Raises if the round budget is exhausted before the
+    fixpoint (never silently splits a component).
+    """
+    edges = (
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .unionByName(
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+        )
+        .distinct()
+        .persist()
+    )
+    if edges.count() <= SMALL_GRAPH_EDGES:
+        parent, find = _union_find()
+        touched = set()
+        for row in edges.collect():
+            touched.add(row["src"])
+            touched.add(row["dst"])
+            ra, rb = find(row["src"]), find(row["dst"])
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        edges.unpersist()
+        # only edge-touched nodes need a mapping; everyone else is a
+        # singleton — ids stays distributed (it may be the whole corpus)
+        spark = ids.sparkSession
+        id_type = dict(ids.dtypes)[id_col]
+        mapping = spark.createDataFrame(
+            [(n, find(n)) for n in sorted(touched)],
+            f"{id_col} {id_type}, _mapped {id_type}",
+        )
+        return ids.join(F.broadcast(mapping), on=id_col, how="left").select(
+            F.col(id_col),
+            F.coalesce("_mapped", id_col).alias("component"),
+        )
+    # star contraction leaves one (node, root) edge per non-root node;
+    # everything absent from the mapping is a singleton or its own root
+    stars = _star_contract(edges, max_iterations)
+    mapping = stars.groupBy("src").agg(F.min("dst").alias("_root"))
+    out = ids.join(
+        mapping, ids[id_col] == mapping["src"], "left"
+    ).select(
+        F.col(id_col),
+        F.coalesce(F.col("_root"), F.col(id_col)).alias("component"),
+    )
+    edges.unpersist()
+    # the final star edge set is a localCheckpoint: node-count bounded
+    # (two longs per non-root node) and GC'd once the result is dropped
+    return out

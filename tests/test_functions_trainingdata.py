@@ -1,6 +1,61 @@
-"""Unit tests for the sampling ops."""
+"""Unit tests for exact dedup, connected components and sampling ops."""
 
 from __future__ import annotations
+
+import hashlib
+
+import pytest
+from pyspark.sql import functions as F
+
+from etl_opensky_spark.functions.dedup import dedup_exact, fingerprint_md5
+
+
+@pytest.fixture()
+def docs(spark):
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy cat"),  # near-dup of 1
+        (3, "completely different words entirely unrelated text here"),
+        (4, "the quick brown fox jumps over the lazy dog"),  # exact dup of 1
+        (5, "der hund ist nicht ein kater und das ist gut"),  # german-ish
+        (6, ""),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_fingerprint_md5_canonicalization(spark):
+    df = spark.createDataFrame(
+        [(1, "Hello  World"), (2, "  hello world "), (3, "other")],
+        "id int, text string",
+    )
+    fps = [
+        r["fp"]
+        for r in df.select(fingerprint_md5(F.col("text")).alias("fp")).collect()
+    ]
+    assert fps[0] == fps[1] != fps[2]
+    assert fps[0] == hashlib.md5(b"hello world").hexdigest()
+
+
+def test_dedup_exact(spark, docs):
+    kept = sorted(r["doc_id"] for r in dedup_exact(docs, "text", "doc_id").collect())
+    assert kept == [1, 2, 3, 5, 6]  # 4 is an exact dup of 1; min id wins
+
+
+def test_connected_components_transitive(spark):
+    from etl_opensky_spark.functions.graph import connected_components
+
+    # chain 1-2-3 plus isolated 4 and pair 5-6
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6)], "id_a long, id_b long"
+    )
+    ids = spark.createDataFrame([(i,) for i in range(1, 7)], "doc_id long")
+    got = dict(
+        (r["doc_id"], r["component"])
+        for r in connected_components(pairs, ids, "doc_id").collect()
+    )
+    assert got[1] == got[2] == got[3] == 1  # transitive closure
+    assert got[4] == 4                      # isolated keeps own label
+    assert got[5] == got[6] == 5
 
 
 def test_hash_split_deterministic_partition(spark):
@@ -45,6 +100,85 @@ def test_stratified_sample_fraction(spark):
     ).collect()}
     assert 40 <= got.get("a", 0) <= 180
     assert 350 <= got.get("b", 0) <= 650
+
+
+def test_dedup_exact_skew_hardened_matches_window(spark):
+    # 90%-duplicate corpus: one boilerplate text dominates — the shape
+    # that skews the plain window.  The hardened path must agree exactly.
+    rows = [(i, "boilerplate page" if i % 10 else f"unique text {i}")
+            for i in range(200)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    plain = sorted(r["doc_id"] for r in dedup_exact(df, "text", "doc_id").collect())
+    hardened = sorted(
+        r["doc_id"]
+        for r in dedup_exact(df, "text", "doc_id", hot_threshold=5).collect()
+    )
+    assert hardened == plain
+    # schema preserved (payload columns survive the min_by struct round-trip)
+    hard_df = dedup_exact(df, "text", "doc_id", hot_threshold=5)
+    assert hard_df.columns == df.columns
+
+
+def test_dedup_exact_hot_threshold_no_hot_keys(spark, docs):
+    # threshold above every count: everything takes the cold/window branch
+    kept = sorted(
+        r["doc_id"]
+        for r in dedup_exact(docs, "text", "doc_id", hot_threshold=100).collect()
+    )
+    assert kept == [1, 2, 3, 5, 6]
+
+
+def test_connected_components_nonconvergence_raises(spark, monkeypatch):
+    from etl_opensky_spark.functions import graph as G
+
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)  # force distributed path
+    # chain 0-1-2-3-4: needs more than one contraction round
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(4)], "id_a long, id_b long"
+    )
+    ids = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        G.connected_components(pairs, ids, "doc_id", max_iterations=1)
+    # and with enough rounds it converges to one component
+    comps = {
+        r["component"]
+        for r in G.connected_components(
+            pairs, ids, "doc_id", max_iterations=10
+        ).collect()
+    }
+    assert comps == {0}
+
+
+def test_star_contraction_matches_union_find(spark, monkeypatch):
+    """Distributed star contraction must agree exactly with driver-side
+    union-find on assorted graph shapes (chains, merged components,
+    singletons, high-degree hubs)."""
+    import random
+
+    from etl_opensky_spark.functions import graph as G
+
+    rng = random.Random(7)
+    graphs = [
+        [(i, i + 1) for i in range(9)],                      # long chain
+        [(0, 5), (5, 9), (2, 7), (7, 3), (11, 12)],          # two comps
+        [(0, i) for i in range(1, 8)],                       # star (hub 0)
+        [(rng.randrange(30), rng.randrange(30)) for _ in range(25)],
+    ]
+    for edges in graphs:
+        nodes = sorted({n for e in edges for n in e} | {98, 99})  # +singletons
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        ids = spark.createDataFrame([(n,) for n in nodes], "doc_id long")
+        monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 1_000_000)
+        want = {
+            (r["doc_id"], r["component"])
+            for r in G.connected_components(pairs, ids, "doc_id").collect()
+        }
+        monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
+        got = {
+            (r["doc_id"], r["component"])
+            for r in G.connected_components(pairs, ids, "doc_id").collect()
+        }
+        assert got == want, f"graph {edges}"
 
 
 def test_pack_contiguous_matches_driver_prefix_sum(spark):
@@ -132,6 +266,33 @@ def test_take_until_budget_matches_driver_walk(spark):
         ).collect()
     )
     assert one == got
+
+
+def test_connected_components_distributed_over_threshold(spark):
+    """Real >SMALL_GRAPH_EDGES run through the distributed
+    star-contraction path — NO monkeypatched threshold: 100k chains of
+    length 10 (~1.8M directed edges after symmetrization) plus one
+    1000-node chain to stress contraction depth.  Every node must land
+    in the component labeled by its chain's minimum id."""
+    from etl_opensky_spark.functions import graph as G
+
+    n, chain = 1_000_000, 10
+    pairs = (
+        spark.range(n)
+        .filter((F.col("id") % chain) != chain - 1)
+        .select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
+        .unionByName(
+            spark.range(n, n + 999).select(
+                F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+            )
+        )
+    )
+    ids = spark.range(n + 1000).select(F.col("id").alias("doc_id"))
+    comp = G.connected_components(pairs, ids, "doc_id")
+    expected = F.when(
+        F.col("doc_id") < n, F.col("doc_id") - (F.col("doc_id") % chain)
+    ).otherwise(F.lit(n))
+    assert comp.filter(F.col("component") != expected).count() == 0
 
 
 def test_sample_by_fractions_deterministic_and_monotone(spark):

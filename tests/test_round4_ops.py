@@ -1,5 +1,5 @@
-"""Round-4 operators: binary source, CDC changelog apply, equal-frequency
-binning, quality quarantine, Expand-free multi-distinct."""
+"""Round-4 operators: binary source, CDC changelog apply, numpy XxHash64,
+equal-frequency binning, quality quarantine, Expand-free multi-distinct."""
 
 from __future__ import annotations
 
@@ -104,6 +104,35 @@ def test_apply_changelog_partitioning_invariant(spark):
     many = rows(apply_changelog(target.repartition(8),
                                 changes.repartition(5), ["id"], "seq"))
     assert one == many
+
+
+# --- numpy XxHash64 ----------------------------------------------------------
+
+
+def test_numpy_xxh64_matches_spark(spark):
+    import numpy as np
+
+    from etl_opensky_spark.functions.xxhash import xxh64_int_np, xxh64_long_np
+
+    rng = np.random.default_rng(7)
+    longs = rng.integers(-(2**63), 2**63 - 1, size=500, dtype=np.int64)
+    ints = rng.integers(-(2**31), 2**31 - 1, size=500, dtype=np.int64)
+    df = spark.createDataFrame(
+        [(int(l), int(i)) for l, i in zip(longs, ints)], ["h", "i"]
+    ).select(
+        "h", "i",
+        F.xxhash64("h").alias("xh"),
+        F.xxhash64("h", F.col("i").cast("int")).alias("xhi"),
+    )
+    rows_ = df.collect()
+    got_h = np.array([r["xh"] for r in rows_], dtype=np.int64)
+    got_hi = np.array([r["xhi"] for r in rows_], dtype=np.int64)
+    np_h = xxh64_long_np(longs, np.uint64(42)).view(np.int64)
+    np_hi = xxh64_int_np(
+        ints, xxh64_long_np(longs, np.uint64(42))
+    ).view(np.int64)
+    assert (np_h == got_h).all()
+    assert (np_hi == got_hi).all()
 
 
 # --- equal-frequency binning -------------------------------------------------

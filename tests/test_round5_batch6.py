@@ -151,6 +151,59 @@ def test_k_core_dedups_and_ignores_self_loops(spark):
     assert out == {1: 2, 2: 2, 3: 2}
 
 
+# --- dedup_exact keep_by (q266) ---------------------------------------------
+
+
+def _dup_docs(spark):
+    rows = [
+        (1, "hello world", "srcB"),
+        (2, "Hello   WORLD", "srcA"),   # same canonical text, better source
+        (3, "unique text", "srcC"),
+        (4, "hello world", "srcB"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string, source string")
+
+
+def test_keep_by_prefers_policy_over_min_id(spark):
+    from etl_opensky_spark.functions.dedup import dedup_exact
+
+    df = _dup_docs(spark)
+    kept = sorted(
+        r["doc_id"]
+        for r in dedup_exact(
+            df, "text", "doc_id", keep_by=F.col("source")
+        ).collect()
+    )
+    # srcA's copy (id 2) beats min-id 1
+    assert kept == [2, 3]
+    # default rule unchanged: min id wins
+    kept_default = sorted(
+        r["doc_id"] for r in dedup_exact(df, "text", "doc_id").collect()
+    )
+    assert kept_default == [1, 3]
+
+
+def test_keep_by_hot_path_agrees_with_window_path(spark):
+    from etl_opensky_spark.functions.dedup import dedup_exact
+
+    rows = [(i, "boilerplate page", f"src{9 - i % 3}") for i in range(50)]
+    rows += [(100, "rare text", "srcZ")]
+    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    cold = sorted(
+        map(tuple, dedup_exact(
+            df, "text", "doc_id", keep_by=F.col("source")
+        ).collect())
+    )
+    hot = sorted(
+        map(tuple, dedup_exact(
+            df, "text", "doc_id", hot_threshold=10, keep_by=F.col("source")
+        ).collect())
+    )
+    assert cold == hot
+    # min (source, id): src7 first appears at doc_id 2
+    assert [r[0] for r in cold] == [2, 100]
+
+
 # --- top_eigenvalue (q270) --------------------------------------------------
 
 
