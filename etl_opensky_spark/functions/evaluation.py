@@ -175,61 +175,6 @@ def ndcg_at_k(
     )
 
 
-def cohens_kappa(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
-    """Cohen's kappa — chance-corrected agreement between two
-    categorical labelings (two annotators, or a heuristic classifier
-    vs gold labels): ``κ = (p_o − p_e) / (1 − p_e)`` with observed
-    agreement ``p_o = agree/N`` and chance agreement ``p_e = Σ_c
-    n_a(c)·n_b(c) / N²``.  Cleared of denominators the whole statistic
-    is exact integers::
-
-        κ = (N·agree − Σ_c n_a(c)·n_b(c)) / (N² − Σ_c n_a(c)·n_b(c))
-
-    so a SQL oracle replays it bit-for-bit; the single final division
-    is the only double op (NULL when the denominator is 0 — both
-    raters constant on one identical label, κ undefined).
-
-    Scale shape: one agreement aggregate plus two label-marginal
-    aggregates joined on the label (label-cardinality frames — tiny);
-    never a row-by-row pairing.  Returns a 1-row frame
-    ``(n, agree, pe_num, kappa_num, kappa_den, kappa)``.
-    """
-    pair = df.select(
-        F.col(col_a).cast("string").alias("_a"),
-        F.col(col_b).cast("string").alias("_b"),
-    )
-    base = pair.agg(
-        F.count("*").alias("n"),
-        F.sum(
-            F.when(F.col("_a") == F.col("_b"), 1).otherwise(0)
-        ).alias("agree"),
-    )
-    ma = pair.groupBy(F.col("_a").alias("_lbl")).agg(
-        F.count("*").alias("_ca")
-    )
-    mb = pair.groupBy(F.col("_b").alias("_lbl")).agg(
-        F.count("*").alias("_cb")
-    )
-    pe = (
-        ma.join(mb, "_lbl", "inner")
-        .agg(F.sum(F.col("_ca") * F.col("_cb")).alias("pe_num"))
-        .select(F.coalesce(F.col("pe_num"), F.lit(0)).alias("pe_num"))
-    )
-    out = base.crossJoin(F.broadcast(pe))
-    num = F.col("n") * F.col("agree") - F.col("pe_num")
-    den = F.col("n") * F.col("n") - F.col("pe_num")
-    return out.select(
-        "n",
-        "agree",
-        F.col("pe_num").cast("long").alias("pe_num"),
-        num.cast("long").alias("kappa_num"),
-        den.cast("long").alias("kappa_den"),
-        F.when(
-            den != 0, num.cast("double") / den.cast("double")
-        ).alias("kappa"),
-    )
-
-
 def calibration_table(
     df: DataFrame,
     score_col: str,

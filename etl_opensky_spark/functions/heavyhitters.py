@@ -1,96 +1,18 @@
-"""Distributed heavy hitters via mergeable Misra-Gries summaries.
+"""Distributed heavy hitters via Count-Min sketches.
 
-The frequent-items primitive of a training-data pipeline (hot tokens,
-hot URLs, boilerplate detection) at a scale where an exact groupBy of
-the full key space is feasible but wasteful: each partition keeps at
-most ``k`` counters regardless of how many distinct keys stream through
-it, and the merged summary is ``num_partitions × k`` rows — constant
-per-executor state, one tiny shuffle.
-
-Why Misra-Gries and not a plain ``groupBy``: at 100 TB the token key
-space is billions of distinct values; MG bounds *executor memory* by
-``k`` and moves only ``k`` rows per partition into the merge, while
-still carrying a hard deterministic guarantee (Misra & Gries 1982;
-mergeability per Agarwal et al., "Mergeable Summaries", PODS 2012):
-
-- estimates never overcount: ``est(t) <= true(t)``;
-- per-partition undercount is at most ``n_p/(k+1)`` (each decrement
-  round cancels k+1 occurrences), so the SUM-merged summary
-  undercounts by at most ``n/(k+1)`` in total;
-- hence every item with ``true(t) > n/(k+1)`` survives the merge.
-
-Those bounds are what the tests check against exact
-counts — the same pattern as the HLL/quantile-sketch gates (q78/q79):
-the approximate operator is oracle-checkable through its contract,
-not its engine-specific internals.
-
-The per-partition pass is a Pandas-batched ``mapInPandas`` (Arrow
-transfer, ``value_counts`` per batch — no per-row Python), because the
-counter-eviction state machine is genuinely imperative; everything
-before and after stays JVM-side.
+Count-Min (Cormode & Muthukrishnan 2005) answers point and join-size
+queries from a ``depth x width`` cell table whose size does not depend
+on the corpus: per-partition cell partials merge by SUM, and every
+estimate carries the deterministic one-sided guarantee
+``true <= est`` (collisions only add).  The tests check that contract
+against exact counts — the approximate operator is oracle-checkable
+through its guarantee, not its engine-specific internals.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-SUMMARY_SCHEMA = "item string, est long"
-
-
-def misra_gries(df: DataFrame, col: str, k: int = 256) -> DataFrame:
-    """Merged Misra-Gries summary of ``df[col]``: one row per surviving
-    item with its (under-)estimate.  At most ``k`` counters per input
-    partition; merged by summation (estimates stay conservative).
-
-    The *estimates* depend on partition layout (any MG run's do); the
-    guarantees above hold under every layout, which is what downstream
-    consumers rely on — see
-    ``tests/test_graph_sketch.py`` partitioning-invariance.
-
-    NULLs are IGNORED: ``value_counts`` drops them, so null never
-    appears as an item and contributes nothing to any counter.  The
-    ``true - n/(k+1) <= est`` bound therefore holds for n = count of
-    NON-null rows — callers computing n with nulls included would apply
-    the bound to the wrong n.
-    """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-
-    def mg_partition(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        counters: dict[str, int] = {}
-        for pdf in batches:
-            # batch-local exact counts first (vectorized), then fold each
-            # distinct item into the bounded counter set once
-            for item, cnt in pdf[col].value_counts().items():
-                cnt = int(cnt)
-                if item in counters:
-                    counters[item] += cnt
-                    continue
-                while cnt > 0 and len(counters) >= k:
-                    # evict: subtract the smallest surviving count from
-                    # everyone (batched form of the one-at-a-time
-                    # decrement; cancels (k+1)*step occurrences)
-                    step = min(min(counters.values()), cnt)
-                    cnt -= step
-                    counters = {
-                        it: c - step for it, c in counters.items() if c > step
-                    }
-                if cnt > 0:
-                    counters[item] = cnt
-        if counters:
-            yield pd.DataFrame(
-                {"item": list(counters.keys()), "est": list(counters.values())}
-            )
-
-    summaries = df.select(F.col(col).cast("string").alias(col)).mapInPandas(
-        lambda it: mg_partition(it), schema=SUMMARY_SCHEMA
-    )
-    return summaries.groupBy("item").agg(F.sum("est").alias("est"))
 
 
 def _md5_bucket(col, salt: int, width: int):
@@ -120,8 +42,7 @@ def countmin_estimates(
     top_k: int = 20,
 ) -> DataFrame:
     """Count-Min sketch point queries (Cormode & Muthukrishnan 2005) —
-    the OVER-estimating complement to ``misra_gries`` (which
-    under-estimates): ``est = min_r cell[r][h_r(key)]`` with
+    OVER-estimating: ``est = min_r cell[r][h_r(key)]`` with
     ``true <= est`` ALWAYS (every occurrence of the key lands in the
     probed cell; collisions only add).
 

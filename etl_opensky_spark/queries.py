@@ -4994,8 +4994,8 @@ GROUP BY 1, 2
 
 def q160_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch point queries (``functions.heavyhitters.
-    countmin_estimates``) — the over-estimating mergeable complement to
-    Misra–Gries (``misra_gries``): cells built from the KEY-COUNT table
+    countmin_estimates``) — an over-estimating mergeable summary: cells
+    built from the KEY-COUNT table
     (never depth-fold row explosion), cell table is depth×width rows
     regardless of corpus size, per-partition partials merge by SUM.
     ``over_ok`` is the deterministic ``true <= est`` guarantee."""
@@ -5727,7 +5727,7 @@ FROM events GROUP BY 1
 #: per-depth population proves every recursion step agrees.
 RECURSIVE_SQL_Q177 = """
 WITH RECURSIVE walk(node, cur, depth) AS (
-  SELECT p_partkey, p_partkey, 0 FROM part
+  SELECT p_partkey, p_partkey, 0 FROM {part}
   UNION ALL
   SELECT node, CAST(FLOOR(cur / 2) AS BIGINT), depth + 1
   FROM walk WHERE cur > 1
@@ -5740,16 +5740,16 @@ FROM walk WHERE cur = 1 GROUP BY 1
 
 def q177_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE parity gate: Spark 4.0's ``WITH RECURSIVE``
-    running the BYTE-IDENTICAL query text DuckDB runs as the oracle
+    running the query text DuckDB runs as the oracle (identical but
+    for the table reference, a ``spark.sql`` frame parameter)
     (hierarchy walk to the root over a derived binary tree; depth ~
     log2(keys)).  ``CAST(FLOOR(cur / 2))`` instead of integer division
     because ``/`` on ints is double in BOTH engines — the one shared
     spelling (SCALE.md div-semantics note)."""
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part")
-    return spark.sql(RECURSIVE_SQL_Q177)
+    return spark.sql(RECURSIVE_SQL_Q177, part=_t(spark, sf_dir, "part"))
 
 
-ORACLE_Q177 = RECURSIVE_SQL_Q177
+ORACLE_Q177 = RECURSIVE_SQL_Q177.format(part="part")
 
 
 def q178_udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5769,15 +5769,15 @@ def q178_udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield w, i
 
     spark.udtf.register("q178_split_words", SplitWords)
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q178_docs")
     out = spark.sql(
         """
         SELECT s.word, COUNT(*) AS n, MIN(d.doc_id) AS first_doc,
           CAST(SUM(s.pos) AS BIGINT) AS pos_sum
-        FROM q178_docs d, LATERAL q178_split_words(d.text) s
+        FROM {docs} d, LATERAL q178_split_words(d.text) s
         WHERE length(s.word) >= 5
         GROUP BY s.word
-        """
+        """,
+        docs=_t(spark, sf_dir, "documents"),
     )
     return out
 
@@ -5798,55 +5798,6 @@ GROUP BY word
 """
 
 
-def q179_stream_tws_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming running totals on ``transformWithStateInPandas``
-    (Spark 4's typed-state successor to ``applyInPandasWithState``) —
-    same semantics as q60, same batch oracle: the API migration must
-    be result-invisible.  ValueState handle, Update mode, availableNow
-    replay to a memory sink.
-
-    NOT in the driver catalog: the TWS Python runner needs protobuf,
-    which is broken in this container (``google.protobuf.descriptor``
-    ImportError) — the same env-blocked class as the kafka broker and
-    media codecs.  The operator + this gate stay ready; the unit test
-    skips unless protobuf imports."""
-    from etl_opensky_spark.streaming.stateful import running_totals_tws
-
-    on_disk_schema = _events_on_disk(spark, sf_dir).schema
-    stream = _ensure_ltz(
-        spark.readStream.schema(on_disk_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    scaled = stream.select(
-        "user_id",
-        F.floor(F.col("value").cast("double") * 1e6)
-        .cast("double")
-        .alias("value"),
-    )
-    totals = running_totals_tws(scaled, key_col="user_id", value_col="value")
-    name = "stream_tws_totals"
-    q = (
-        totals.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    return out.groupBy("user_id").agg(
-        F.max("n").alias("n"), F.max_by("total", "n").alias("total")
-    )
-
-
-ORACLE_Q179 = """
-SELECT user_id, COUNT(*) AS n,
-  CAST(SUM(CAST(FLOOR(CAST(value AS DOUBLE) * 1e6) AS BIGINT)) AS DOUBLE) AS total
-FROM events GROUP BY user_id
-"""
-
-
 def q180_range_interval_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME-based window frames (``RANGE BETWEEN INTERVAL ... DAYS
     PRECEDING``): the trailing-7-day sum per event type over a GAPPY
@@ -5859,7 +5810,6 @@ def q180_range_interval_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.sum(F.floor(F.col("value") * 1_000_000).cast("bigint")).alias("v")
     )
-    daily.createOrReplaceTempView("q180_daily")
     return spark.sql(
         """
         SELECT event_type, day,
@@ -5871,8 +5821,9 @@ def q180_range_interval_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             PARTITION BY event_type ORDER BY day
             RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW
           ) AS BIGINT) AS days_present_7d
-        FROM q180_daily
-        """
+        FROM {daily}
+        """,
+        daily=daily,
     )
 
 
@@ -6393,12 +6344,12 @@ def q190_pipeline_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
     result: dict = {}
 
     def t_fact() -> None:
-        _t(spark, sf_dir, "lineitem").filter(
+        result["fact"] = _t(spark, sf_dir, "lineitem").filter(
             F.col("l_shipdate") < "1996-01-01"
-        ).createOrReplaceTempView("spec_lineitem")
+        )
 
     def t_dim() -> None:
-        _t(spark, sf_dir, "part").createOrReplaceTempView("spec_part")
+        result["dim"] = _t(spark, sf_dir, "part")
 
     def t_agg() -> None:
         result["df"] = spark.sql(
@@ -6406,9 +6357,11 @@ def q190_pipeline_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT p_brand, COUNT(*) AS n,
               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
                 AS revenue
-            FROM spec_lineitem JOIN spec_part ON l_partkey = p_partkey
+            FROM {fact} JOIN {dim} ON l_partkey = p_partkey
             GROUP BY p_brand
-            """
+            """,
+            fact=result["fact"],
+            dim=result["dim"],
         )
 
     spec = {
@@ -6757,7 +6710,7 @@ SQL_Q200 = """
 WITH base AS (
   SELECT user_id, event_id, value,
     CAST(FLOOR(value * 1000000) AS BIGINT) AS vmicro
-  FROM events
+  FROM {events}
 )
 SELECT user_id, event_id,
   row_number() OVER w AS rn,
@@ -6778,7 +6731,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id),
 
 
 def q200_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window-function parity suite, BYTE-IDENTICAL SQL on both engines
+    """Window-function parity suite, the SAME SQL on both engines
     (the q177 same-text pattern): row_number / rank / dense_rank (over
     a coarse key that FORCES ties, so rank≠dense_rank is actually
     exercised) / percent_rank / cume_dist / ntile / lag / lead /
@@ -6787,11 +6740,10 @@ def q200_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     lone ``row_number``.  Ratios are floor-micro quantized (identical
     IEEE inputs → identical doubles → mode-free floor); one window
     shuffle per distinct (partition, order) pair."""
-    _events(spark, sf_dir).createOrReplaceTempView("events")
-    return spark.sql(SQL_Q200)
+    return spark.sql(SQL_Q200, events=_events(spark, sf_dir))
 
 
-ORACLE_Q200 = SQL_Q200
+ORACLE_Q200 = SQL_Q200.format(events="events")
 
 
 def q201_pandas_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6896,23 +6848,23 @@ FROM lineitem GROUP BY l_returnflag
 
 SQL_Q204 = """
 SELECT
-  (SELECT COUNT(*) FROM orders
+  (SELECT COUNT(*) FROM {orders}
    WHERE o_custkey NOT IN
-     (SELECT c_custkey FROM customer WHERE c_acctbal < 0)) AS not_in_clean,
-  (SELECT COUNT(*) FROM orders
+     (SELECT c_custkey FROM {customer} WHERE c_acctbal < 0)) AS not_in_clean,
+  (SELECT COUNT(*) FROM {orders}
    WHERE o_custkey NOT IN
      (SELECT CASE WHEN c_custkey % 100 = 0 THEN NULL ELSE c_custkey END
-      FROM customer WHERE c_acctbal < 0)) AS not_in_with_null,
-  (SELECT COUNT(*) FROM orders o
+      FROM {customer} WHERE c_acctbal < 0)) AS not_in_with_null,
+  (SELECT COUNT(*) FROM {orders} o
    WHERE NOT EXISTS
-     (SELECT 1 FROM customer c
+     (SELECT 1 FROM {customer} c
       WHERE c.c_custkey = o.o_custkey AND c.c_acctbal < 0))
     AS not_exists_count
 """
 
 
 def q204_not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``NOT IN`` three-valued-logic parity, BYTE-IDENTICAL SQL both
+    """``NOT IN`` three-valued-logic parity, the SAME SQL on both
     engines: a NULL in the subquery makes ``NOT IN`` return UNKNOWN for
     every probe row (the classic silent-empty-result trap), while
     ``NOT EXISTS`` is null-insensitive.  Spark plans the nullable case
@@ -6920,12 +6872,14 @@ def q204_not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast null-check) — the gate pins that both engines agree on
     all three counts, documenting the trap the engine's own
     ``fk_orphans``/left-anti operators avoid by construction."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(SQL_Q204)
+    return spark.sql(
+        SQL_Q204,
+        orders=_t(spark, sf_dir, "orders"),
+        customer=_t(spark, sf_dir, "customer"),
+    )
 
 
-ORACLE_Q204 = SQL_Q204
+ORACLE_Q204 = SQL_Q204.format(orders="orders", customer="customer")
 
 
 def q205_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7124,17 +7078,17 @@ def q208_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_dim_dates.py:22-23).  Parameters bind as typed literals in
     the plan, so constant folding and pushdown still fire; the oracle
     is the same query with the literals inlined."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT o_orderpriority, COUNT(*) AS n,
           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
             AS total_price
-        FROM orders
+        FROM {orders}
         WHERE o_totalprice > :cut AND o_orderstatus = :status
         GROUP BY o_orderpriority
         """,
         args={"cut": 150000.0, "status": "O"},
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -7176,21 +7130,20 @@ SELECT o_orderpriority,
     FILTER (WHERE o_totalprice > 100000) AS DOUBLE) AS big_price,
   COUNT(DISTINCT o_custkey) FILTER (WHERE o_orderstatus = 'O')
     AS open_custs
-FROM orders GROUP BY o_orderpriority
+FROM {orders} GROUP BY o_orderpriority
 """
 
 
 def q210_filtered_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL ``FILTER (WHERE ...)`` aggregate-modifier parity,
-    byte-identical text both engines — the standard (SQL:2003) spelling
+    the same text on both engines — the standard (SQL:2003) spelling
     of conditional aggregation that replaces the when/otherwise-inside-
     sum idiom; all four shapes in ONE scan (plain, filtered count,
     filtered decimal sum, filtered distinct count)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(SQL_Q210)
+    return spark.sql(SQL_Q210, orders=_t(spark, sf_dir, "orders"))
 
 
-ORACLE_Q210 = SQL_Q210
+ORACLE_Q210 = SQL_Q210.format(orders="orders")
 
 
 def q211_bag_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7244,12 +7197,12 @@ def q212_sql_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (DuckDB's ``UNPIVOT ... INTO NAME/VALUE``), so the oracle is the
     portable UNION ALL expansion rather than same-text; NULL values are
     dropped by UNPIVOT in both spellings — pinned by the gate."""
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part_up")
     return spark.sql(
         """
-        SELECT p_partkey, attr, val FROM part_up
+        SELECT p_partkey, attr, val FROM {part}
         UNPIVOT (val FOR attr IN (p_brand, p_type, p_name))
-        """
+        """,
+        part=_t(spark, sf_dir, "part"),
     )
 
 
@@ -7268,21 +7221,20 @@ SQL_Q213 = """
 SELECT o_orderstatus, o_orderpriority,
   COUNT(*) AS n,
   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-FROM orders
+FROM {orders}
 GROUP BY ALL
 """
 
 
 def q213_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``GROUP BY ALL`` parity, byte-identical SQL — both engines infer
+    """``GROUP BY ALL`` parity, the same SQL on both engines — both infer
     the grouping keys from the non-aggregate select items; pins that
     the inference picks the SAME keys (a silent-wrong-answer hazard if
     an engine mis-classifies an expression as aggregate vs grouping)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(SQL_Q213)
+    return spark.sql(SQL_Q213, orders=_t(spark, sf_dir, "orders"))
 
 
-ORACLE_Q213 = SQL_Q213
+ORACLE_Q213 = SQL_Q213.format(orders="orders")
 
 
 def q214_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8639,22 +8591,23 @@ def q242_sql_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional-aggregation expansion — same equivalence strategy as
     q212's UNPIVOT gate."""
     orders = _t(spark, sf_dir, "orders")
-    orders.select(
+    src = orders.select(
         F.year(F.to_date("o_orderdate")).cast("int").alias("y"),
         F.trim(F.substring("o_orderpriority", 1, 1)).alias("p"),
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
-    ).createOrReplaceTempView("q242_src")
+    )
     return spark.sql(
         """
         SELECT y,
           CAST(p1_n AS BIGINT) AS p1_n, CAST(p1_rev AS DOUBLE) AS p1_rev,
           CAST(p5_n AS BIGINT) AS p5_n, CAST(p5_rev AS DOUBLE) AS p5_rev
-        FROM q242_src
+        FROM {src}
         PIVOT (
           COUNT(*) AS n, SUM(price) AS rev
           FOR p IN ('1' AS p1, '5' AS p5)
         )
-        """
+        """,
+        src=src,
     )
 
 
@@ -10280,18 +10233,18 @@ def q275_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     is log2(max id) ≈ 20, far under Spark's recursion level limit.
     DuckDB replays the identical recursion with its own ``//``."""
     ev = _events(spark, sf_dir)
-    ev.select("user_id").distinct().createOrReplaceTempView("q275_users")
     return spark.sql(
         """
         WITH RECURSIVE anc AS (
-          SELECT user_id, user_id AS node FROM q275_users
+          SELECT user_id, user_id AS node FROM {users}
           UNION ALL
           SELECT user_id, node div 2 AS node FROM anc WHERE node > 1
         )
         SELECT user_id, CAST(COUNT(*) AS BIGINT) AS chain_len,
           CAST(MIN(node) AS BIGINT) AS root
         FROM anc GROUP BY user_id
-        """
+        """,
+        users=ev.select("user_id").distinct(),
     )
 
 
@@ -10952,7 +10905,6 @@ def q284_sql_programmability(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("k"),
         _dec("o_totalprice").alias("price"),
     )
-    orders.createOrReplaceTempView("q284_orders")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION q284_taxed(p DECIMAL(18,2)) "
         "RETURNS DECIMAL(18,2) RETURN CAST(p * 2 + 50 AS DECIMAL(18,2))"
@@ -10968,9 +10920,10 @@ def q284_sql_programmability(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
         SELECT q284_band(price) AS band, COUNT(*) AS n,
                CAST(SUM(q284_taxed(price)) AS DOUBLE) AS total
-        FROM q284_orders WHERE k % q284_mod = 0
+        FROM {orders} WHERE k % q284_mod = 0
         GROUP BY band
-        """
+        """,
+        orders=orders,
     )
 
 

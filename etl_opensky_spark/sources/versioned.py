@@ -1943,8 +1943,10 @@ def _apply_tombstones(
     # visible without any scope machinery.  Broadcast when the union
     # is provably small (sidecar bytes), else let Catalyst shuffle.
     if pos_tombs:
+        # the sidecar schema is fixed (see delete_where): declaring it
+        # saves the schema-inference job a sidecar read would launch
         pos_frames = [
-            spark.read.parquet(
+            spark.read.schema("rel string, pos long").parquet(
                 os.path.join(base, entry["dir"], t["dir"])
             ).toDF(_REL_COL, _POS_COL)
             for t in pos_tombs
@@ -2431,6 +2433,57 @@ def vacuum_orphans(base: str) -> list[str]:
 # --- ACID multi-partition operations on the manifest protocol ------------
 
 
+def _merge_checks(
+    upd: DataFrame, keys: Sequence[str], part_cols: Sequence[str]
+) -> tuple[int, list[tuple]]:
+    """Validate merge updates — unique non-null keys, no null partition
+    value — and return ``(row count, distinct partition value tuples)``
+    from ONE aggregation (a separate probe job per rule made the
+    per-micro-batch cost of streaming upserts measurable — q205/q111)."""
+    aggs = [
+        F.count("*").alias("_n"),
+        F.count_distinct(*[F.col(k) for k in keys]).alias("_nk"),
+    ]
+    if part_cols:
+        any_null = reduce(
+            lambda a, b: a | b, [F.col(c).isNull() for c in part_cols]
+        )
+        aggs += [
+            F.sum(F.when(any_null, 1).otherwise(0)).alias("_nulls"),
+            F.collect_set(F.struct(*part_cols)).alias("_parts"),
+        ]
+    checks = upd.agg(*aggs).first()
+    if checks["_n"] != checks["_nk"]:
+        raise ValueError(
+            f"merge_versioned: updates contain duplicate keys (or null "
+            f"key values) on {list(keys)}"
+        )
+    if not part_cols:
+        return checks["_n"], []
+    if checks["_nulls"]:
+        raise ValueError(
+            "merge_versioned: null partition values are not supported"
+        )
+    return checks["_n"], [tuple(p) for p in checks["_parts"]]
+
+
+def _partition_filter(part_cols: Sequence[str], values: Sequence[tuple]):
+    """Literal predicate selecting exactly the partitions ``values``
+    (one tuple per partition), which planning prunes statically."""
+    if len(part_cols) == 1:
+        return F.col(part_cols[0]).isin([v[0] for v in values])
+    return reduce(
+        lambda a, b: a | b,
+        [
+            reduce(
+                lambda a, b: a & b,
+                [F.col(c) == F.lit(x) for c, x in zip(part_cols, v)],
+            )
+            for v in values
+        ],
+    )
+
+
 def merge_versioned(
     spark: SparkSession,
     base: str,
@@ -2475,6 +2528,15 @@ def merge_versioned(
     snapshot, so commit cost is O(affected data + total file count
     metadata), never O(table).  Returns the committed version.
 
+    Cost on a day-partitioned table (``keys_are_partition_stable``):
+    one aggregation validates the updates and returns their partition
+    values to the driver; the manifest then says which of them the
+    table already holds.  A merge into new partitions only (a new day)
+    reads nothing of the table and stages the updates as they are —
+    4 Spark jobs.  A merge into held partitions reads just those,
+    pruned at planning by a literal partition predicate — 5 jobs, plus
+    one while positional deletes are pending.
+
     ``keys_are_partition_stable=True`` declares that a key's partition
     value never changes: updates for an existing key always carry its
     current partition, and no two writers ever insert the SAME new key
@@ -2501,39 +2563,17 @@ def merge_versioned(
         updates, _gen_cols(_current(base)), "merge_versioned"
     )
 
-    # materialize updates ONCE, then validate key-uniqueness and null
-    # partition values in a SINGLE aggregation over the checkpointed
-    # rows (separate probe jobs per rule made the per-micro-batch cost
-    # of streaming upserts measurable — q205/q111)
-    upd = updates.localCheckpoint()
-    aggs = [
-        F.count("*").alias("_n"),
-        F.count_distinct(*[F.col(k) for k in keys]).alias("_nk"),
-    ]
-    if part_cols:
-        any_null = reduce(
-            lambda a, b: a | b, [F.col(c).isNull() for c in part_cols]
-        )
-        aggs.append(
-            F.sum(F.when(any_null, 1).otherwise(0)).alias("_nulls")
-        )
-    checks = upd.agg(*aggs).first()
-    if checks["_n"] != checks["_nk"]:
-        raise ValueError(
-            f"merge_versioned: updates contain duplicate keys (or null "
-            f"key values) on {keys}"
-        )
-    if part_cols and checks["_nulls"]:
-        raise ValueError(
-            "merge_versioned: null partition values are not supported"
-        )
-
-    os.makedirs(base, exist_ok=True)
+    # checkpoint the updates lazily: the checks aggregation below
+    # materializes them in its own first stage (no job of their own),
+    # and every later pass reads the checkpoint
+    upd = updates.localCheckpoint(eager=False)
     cur = _current(base)
     if cur is None:
+        n_upd, _ = _merge_checks(upd, keys, part_cols)
+        os.makedirs(base, exist_ok=True)
         name, data_dir = _new_data_dir(base)
         w = _optimized_write(
-            upd, part_cols, live_paths=(), upd_rows=checks["_n"],
+            upd, part_cols, live_paths=(), upd_rows=n_upd,
             small_keep=bool(part_cols),
         ).write.mode("errorifexists")
         if part_cols:
@@ -2620,6 +2660,9 @@ def merge_versioned(
                 for c in upd.columns
             ]
         )
+    # after the casts: the partition values must be the table's, so
+    # that they name its partition directories
+    n_upd, upd_parts = _merge_checks(upd, keys, part_cols)
     if part_cols:
         _assert_partitioned(base, cur, part_cols)  # fail before staging IO
     else:
@@ -2640,7 +2683,7 @@ def merge_versioned(
             _optimized_write(
                 reconciled,
                 live_paths=list(_live_files(base, cur).values()),
-                upd_rows=checks["_n"],
+                upd_rows=n_upd,
             ).write.mode("errorifexists").parquet(data_dir)
             _record_new_files(data_dir, name, files_out)
             extra = _files_extra(files_out, materialized=True)
@@ -2686,33 +2729,43 @@ def merge_versioned(
             # no mapping needed.)
             for c in new_cols:
                 mapping[c] = f"{c}__v{version}"
-        affected = upd.select(*part_cols).distinct()
+        affected = set(upd_parts)
         if not keys_are_partition_stable:
             # partitions currently holding a matched key: column-pruned
             # (keys + partition cols) probe — no data columns read
-            moved_from = (
-                target.select(*part_cols, *keys)
+            affected.update(
+                tuple(r)
+                for r in target.select(*part_cols, *keys)
                 .join(
                     F.broadcast(upd.select(*keys)), on=keys, how="left_semi"
                 )
                 .select(*part_cols)
                 .distinct()
+                .collect()
             )
-            affected = affected.union(moved_from).distinct()
-        affected_suffixes = {
-            _hive_dir(part_cols, tuple(r[c] for c in part_cols))
-            for r in affected.collect()
+        by_suffix = {_hive_dir(part_cols, v): v for v in affected}
+        affected_suffixes = set(by_suffix)
+        depth = len(part_cols)
+        held = {
+            "/".join(rel.split("/")[:depth])
+            for rel in _entry_files_ro(base, cur)
         }
-        existing_affected = target.join(
-            F.broadcast(affected), on=part_cols, how="left_semi"
-        )
-        reconciled = (
-            existing_affected.join(
-                upd.select(*keys), on=keys, how="left_anti"
+        existing = [v for s, v in by_suffix.items() if s in held]
+        if existing:
+            # a literal predicate on the partition columns: planning
+            # prunes the target scan to these partitions, no job runs
+            reconciled = (
+                target.filter(_partition_filter(part_cols, existing))
+                .join(
+                    F.broadcast(upd.select(*keys)), on=keys, how="left_anti"
+                )
+                .unionByName(upd)
             )
-            .unionByName(upd)
-            .select(*target.columns)
-        )
+        else:
+            # only partitions the table does not hold yet (a new day):
+            # there is nothing to reconcile against
+            reconciled = upd
+        reconciled = reconciled.select(*target.columns)
         if mapping:
             # hardlinked partitions keep the frozen physical names,
             # so rewritten partitions must too — write under the
@@ -2729,7 +2782,7 @@ def merge_versioned(
             # all live paths, not just affected ones: the count only
             # decides the small-vs-REBALANCE regime here
             live_paths=list(_live_files(base, cur).values()),
-            upd_rows=checks["_n"],
+            upd_rows=n_upd,
             small_keep=True,
         ).write.mode("errorifexists").partitionBy(*part_cols).parquet(
             staging

@@ -71,3 +71,18 @@ def test_q48_leaves_no_view(spark):
     before = session.catalog.listTables()
     assert QUERIES["q48_grouping_sets"](session, SF).count() > 0
     assert session.catalog.listTables() == before
+
+
+@pytest.mark.parametrize("name", [
+    "q177_recursive_cte", "q178_udtf_tokens", "q180_range_interval_window",
+    "q190_pipeline_spec", "q200_window_suite", "q204_not_in_null_semantics",
+    "q208_parameterized_sql", "q210_filtered_aggregates", "q212_sql_unpivot",
+    "q213_group_by_all", "q242_sql_pivot", "q275_recursive_cte", "q284_sql_programmability",
+])
+def test_sql_entry_leaves_no_view(spark, name):
+    """Like q48, the other SQL-surface entries pass their frames as
+    ``spark.sql`` parameters: the caller's session keeps exactly its views."""
+    session = spark.newSession()
+    before = session.catalog.listTables()
+    assert QUERIES[name](session, SF).count() > 0
+    assert session.catalog.listTables() == before

@@ -1,12 +1,8 @@
-"""PageRank (functions/graph.py) and Misra-Gries heavy hitters
-(functions/heavyhitters.py): contract properties + determinism."""
+"""PageRank (functions/graph.py): contract properties + determinism."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from etl_opensky_spark.functions.graph import SCALE, pagerank
-from etl_opensky_spark.functions.heavyhitters import misra_gries
 
 
 def _reference_pagerank(edges, n_iter=3, d_num=85, d_den=100):
@@ -93,49 +89,3 @@ def test_pagerank_mass_is_conserved_up_to_truncation(spark):
     # floor truncation and the d->a out-edge of the sink-free toy graph
     # only ever LOSE mass; ranks stay positive and bounded by SCALE
     assert 0 < total <= SCALE
-
-
-def _token_df(spark, parts=8):
-    # zipf-ish: token t_i appears ~ 600/i times — clear heavy head
-    rows = []
-    for i in range(1, 60):
-        rows.extend([(f"t{i:02d}",)] * (600 // i))
-    return spark.createDataFrame(rows, "token string").repartition(parts)
-
-
-def test_misra_gries_contract_bounds(spark):
-    k = 12
-    df = _token_df(spark)
-    n = df.count()
-    exact = {r.token: r.cnt for r in
-             df.groupBy("token").agg(F.count("*").alias("cnt")).collect()}
-    est = {r.item: r.est for r in misra_gries(df, "token", k=k).collect()}
-    for item, e in est.items():
-        assert e <= exact[item], "MG must never overcount"
-        assert exact[item] - e <= n // (k + 1) + 1, "undercount bound broken"
-    for token, cnt in exact.items():
-        if cnt * (k + 1) > n:
-            assert token in est, f"heavy item {token} missing from summary"
-
-
-def test_misra_gries_exact_when_under_capacity(spark):
-    # <= k distinct items in one partition: no eviction ever fires,
-    # estimates are exact counts
-    df = spark.createDataFrame(
-        [("a",)] * 5 + [("b",)] * 3 + [("c",)] * 2, "token string"
-    ).coalesce(1)
-    est = {r.item: r.est for r in misra_gries(df, "token", k=8).collect()}
-    assert est == {"a": 5, "b": 3, "c": 2}
-
-
-def test_misra_gries_guarantees_hold_under_any_partitioning(spark):
-    k = 12
-    for parts in (1, 4, 32):
-        df = _token_df(spark, parts=parts)
-        n = df.count()
-        exact = {r.token: r.cnt for r in
-                 df.groupBy("token").agg(F.count("*").alias("cnt")).collect()}
-        est = {r.item: r.est for r in misra_gries(df, "token", k=k).collect()}
-        heavy = {t for t, c in exact.items() if c * k > n}
-        assert heavy <= set(est), f"heavy set escaped at {parts} partitions"
-        assert all(e <= exact[i] for i, e in est.items())

@@ -1,6 +1,5 @@
 """Hypothesis properties for the session-3 numeric operators: Gini
-vs a literal python reference, Hamilton allocation invariants, kappa
-vs sklearn-free closed form, time-decay mergeability under splits."""
+vs a literal python reference and Hamilton allocation invariants."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ from decimal import Decimal
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from etl_opensky_spark.functions.evaluation import cohens_kappa
 from etl_opensky_spark.functions.sampling import proportional_allocation
 from etl_opensky_spark.operators.aggregates import gini_coefficient
 
@@ -59,33 +57,3 @@ def test_hamilton_invariants(spark, counts, budget):
         assert r["alloc"] >= 0
         assert abs(r["alloc"] - exact) < 1.0
         assert r["alloc"] in (r["base"], r["base"] + 1)
-
-
-@SETTINGS
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["x", "y", "z"]),
-            st.sampled_from(["x", "y", "z"]),
-        ),
-        min_size=1,
-        max_size=30,
-    )
-)
-def test_kappa_matches_closed_form(spark, pairs):
-    df = spark.createDataFrame(pairs, "a string, b string")
-    row = cohens_kappa(df, "a", "b").head()
-    n = len(pairs)
-    agree = sum(1 for a, b in pairs if a == b)
-    from collections import Counter
-
-    ca, cb = Counter(a for a, _ in pairs), Counter(b for _, b in pairs)
-    pe = sum(ca[l] * cb.get(l, 0) for l in ca)
-    assert (row["n"], row["agree"], row["pe_num"]) == (n, agree, pe)
-    den = n * n - pe
-    if den == 0:
-        assert row["kappa"] is None
-    else:
-        assert row["kappa"] is not None
-        assert abs(row["kappa"] - (n * agree - pe) / den) < 1e-12
-        assert row["kappa"] <= 1.0

@@ -1,5 +1,5 @@
-"""Round-5 batch 5: Cohen's kappa, HLL merge/sparse correction, and
-the calibration (reliability) table (q259-q261)."""
+"""Round-5 batch 5: HLL merge/sparse correction and the calibration
+(reliability) table (q260-q261)."""
 
 from __future__ import annotations
 
@@ -13,60 +13,7 @@ from etl_opensky_spark.functions.cardinality import (
     hll_merge,
     hll_registers,
 )
-from etl_opensky_spark.functions.evaluation import (
-    calibration_table,
-    cohens_kappa,
-)
-
-
-# --- cohens_kappa (q259) ----------------------------------------------------
-
-
-def _kappa_df(spark, pairs):
-    return spark.createDataFrame(pairs, "a string, b string")
-
-
-def test_kappa_textbook_example(spark):
-    # classic 2x2: 20 yes/yes, 5 yes/no, 10 no/yes, 15 no/no
-    pairs = (
-        [("y", "y")] * 20 + [("y", "n")] * 5
-        + [("n", "y")] * 10 + [("n", "n")] * 15
-    )
-    row = cohens_kappa(_kappa_df(spark, pairs), "a", "b").head()
-    n, agree = 50, 35
-    pe = 25 * 30 + 25 * 20  # marginal products
-    assert (row["n"], row["agree"], row["pe_num"]) == (n, agree, pe)
-    expected = (n * agree - pe) / (n * n - pe)
-    assert row["kappa"] == pytest.approx(expected)
-
-
-def test_kappa_perfect_and_chance(spark):
-    perfect = [("x", "x")] * 5 + [("y", "y")] * 5
-    assert cohens_kappa(
-        _kappa_df(spark, perfect), "a", "b"
-    ).head()["kappa"] == pytest.approx(1.0)
-    # independent marginals at 50/50 -> kappa 0
-    chance = [("x", "x"), ("x", "y"), ("y", "x"), ("y", "y")]
-    assert cohens_kappa(
-        _kappa_df(spark, chance), "a", "b"
-    ).head()["kappa"] == pytest.approx(0.0)
-
-
-def test_kappa_degenerate_is_null(spark):
-    # both raters constant on the same label: denominator 0 -> NULL
-    row = cohens_kappa(
-        _kappa_df(spark, [("x", "x")] * 7), "a", "b"
-    ).head()
-    assert row["kappa_den"] == 0 and row["kappa"] is None
-
-
-def test_kappa_disjoint_label_sets(spark):
-    # no shared label between raters: pe_num = 0, kappa = agree-only
-    row = cohens_kappa(
-        _kappa_df(spark, [("x", "y")] * 4), "a", "b"
-    ).head()
-    assert row["pe_num"] == 0 and row["agree"] == 0
-    assert row["kappa"] == pytest.approx(0.0)
+from etl_opensky_spark.functions.evaluation import calibration_table
 
 
 # --- hll_merge + sparse correction (q260) -----------------------------------
